@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** As-of join — the reference's only join (SURVEY.md J1+W4,
   * `processing_raw_data_from_gcs.py:143-159`): attach to each left row
@@ -10,111 +11,109 @@ import org.apache.spark.sql.functions._
   * is in `[t − lookback, t]`, keeping left rows with no match
   * (left-outer semantics).
   *
-  * Two implementations with identical results:
-  *
-  * - [[joined]] — the reference's 2-step form: equi+band left join,
-  *   then `row_number` over right-ts desc and keep rank 1. Spark plans
-  *   the equi key as SortMergeJoin/ShuffledHashJoin with the band as a
-  *   residual filter. Candidate blowup is bounded by the number of
-  *   right rows per key inside the lookback window.
-  *
-  * - [[unioned]] — the scale path: union left and right on a common
-  *   (key, ts) axis, one window pass carrying the last-seen right
-  *   payload forward (`last(_, ignoreNulls)`), then filter to left
-  *   rows and null out matches older than the lookback. One shuffle,
-  *   no candidate explosion — O(n log n) regardless of right-side
-  *   density, the plan you want when the right side is a dense 100 TB
-  *   tick stream.
+  * The reference states it as an equi+band left join followed by a
+  * `row_number` rank; that form tests every left row against every
+  * right row of its key, so its cost grows with the product of the two
+  * sides per key (the reference has three codes). Here the join is one
+  * pass over the union of both sides instead: left and right rows are
+  * tagged, partitioned by key, sorted by time, and each left row picks
+  * up the nearest right payload seen so far with `last(_, ignoreNulls)`
+  * over a running frame. One shuffle, one sort per direction, cost
+  * linear in the input. `AsOfJoinReference` in the test tree keeps the
+  * join+rank form as the specification these results must equal.
   */
 object AsOfJoin {
 
-  /** Reference-shaped join + row_number dedup (backward direction).
-    *
-    * @param leftKeys  columns uniquely identifying a left row (used to
-    *                  partition the dedup window)
+  val Directions: Seq[String] = Seq("backward", "forward", "nearest")
+
+  private val Key = "__asof_k"
+  private val Time = "__asof_t"
+  private val Side = "__asof_side"
+  private val Payload = "__asof_r"
+  private val LeftRow = "__asof_l"
+  private val Back = "__asof_b"
+  private val Fwd = "__asof_f"
+  private val Match = "__asof_m"
+
+  /** Backward as-of, the reference's semantics. */
+  def joined(left: DataFrame, right: DataFrame, key: String,
+             leftTs: String, rightTs: String, lookback: Column): DataFrame =
+    directional(left, right, key, leftTs, rightTs, lookback, "backward")
+
+  /** [[joined]] under its earlier signature. `leftKeys` partitioned the
+    * rank of the join+rank form and is ignored; the benchmark harness's
+    * copy of `Pipelines.dailyDollarBars` (`perfbench/Daily.scala`)
+    * still calls this form.
     */
   def joined(left: DataFrame, right: DataFrame, key: String,
              leftTs: String, rightTs: String, lookback: Column,
              leftKeys: Seq[String]): DataFrame =
-    directional(left, right, key, leftTs, rightTs, lookback, leftKeys, "backward")
+    joined(left, right, key, leftTs, rightTs, lookback)
 
-  /** All three pandas-`merge_asof` directions on the join+rank shape:
+  /** All three pandas-`merge_asof` directions:
     *
     * - `backward` — most recent right row in `[t − tol, t]` (the
     *   reference's semantics; [[joined]] delegates here)
     * - `forward`  — earliest right row in `[t, t + tol]`
     * - `nearest`  — right row minimizing |rt − t| within `[t − tol,
     *   t + tol]`; equidistant ties break to the EARLIER right row
-    *   (deterministic, restated in oracles via the same integer-µs
-    *   distance)
     *
-    * Right timestamps must be unique per key (the shared determinism
-    * contract of every rank-1 dedup in this engine).
+    * Output: every left column, then every right column except `key`,
+    * in their own order; right columns are null where nothing matched.
+    * One output row per left row. A null key, left time or right time
+    * never matches. Right timestamps must be unique per key (the
+    * shared determinism contract of every rank-1 pick in this engine).
+    *
+    * Backward sorts each key's rows by time ascending, forward by time
+    * descending, with right rows ahead of left rows at equal times so
+    * that both bounds are inclusive; nearest runs both sorts over the
+    * same shuffle. Forward reverses the order rather than use a
+    * `currentRow … unboundedFollowing` frame, which Spark recomputes
+    * for every row.
     */
   def directional(left: DataFrame, right: DataFrame, key: String,
                   leftTs: String, rightTs: String, tolerance: Column,
-                  leftKeys: Seq[String], direction: String): DataFrame = {
-    val l = left.as("l")
-    val r = right.as("r")
-    val lt = col(s"l.$leftTs")
-    val rt = col(s"r.$rightTs")
-    val keyEq = col(s"l.$key") === col(s"r.$key")
-    val (cond, order) = direction match {
-      case "backward" =>
-        (keyEq && rt <= lt && rt >= lt - tolerance,
-          Seq(rt.desc_nulls_last))
-      case "forward" =>
-        (keyEq && rt >= lt && rt <= lt + tolerance,
-          Seq(rt.asc_nulls_last))
-      case "nearest" =>
-        (keyEq && rt >= lt - tolerance && rt <= lt + tolerance,
-          Seq(abs(unix_micros(rt) - unix_micros(lt)).asc_nulls_last,
-            rt.asc_nulls_last))
-      case other =>
-        throw new IllegalArgumentException(
-          s"direction must be backward|forward|nearest, got $other")
-    }
-    val w = Window
-      .partitionBy(leftKeys.map(k => col(s"l.$k")): _*)
-      .orderBy(order: _*)
-    l.join(r, cond, "left")
-      .withColumn("row_num", row_number().over(w))
-      .filter(col("row_num") === 1)
-      .drop("row_num")
-      .drop(col(s"r.$key"))
-  }
-
-  /** Union + last-value window as-of (single shuffle, no blowup).
-    * Right columns other than `key`/`rightTs` are carried as payload;
-    * output schema matches [[joined]] (right ts column included).
-    */
-  def unioned(left: DataFrame, right: DataFrame, key: String,
-              leftTs: String, rightTs: String, lookback: Column): DataFrame = {
-    val payloadCols = right.columns.filter(c => c != key && c != rightTs).toSeq
-    val rBase = right
-      .select(col(key), col(rightTs).as("__t"), lit(0).as("__is_left"),
-        struct(col(rightTs) +: payloadCols.map(col): _*).as("__payload"))
-    // left rows sort AFTER right rows at the same timestamp (__is_left=1)
-    // so an exactly-simultaneous right row is visible — matches the
-    // join form's `rt <= t` inclusive bound.
+                  direction: String): DataFrame = {
+    require(Directions.contains(direction),
+      s"direction must be backward|forward|nearest, got $direction")
+    val rightCols = right.columns.toSeq.filter(_ != key)
+    val rTagged = right
+      .filter(col(key).isNotNull && col(rightTs).isNotNull)
+      .select(col(key).as(Key), col(rightTs).as(Time), lit(0).as(Side),
+        struct(rightCols.map(col): _*).as(Payload))
     val lTagged = left
-      .select(col(key), col(leftTs).as("__t"), lit(1).as("__is_left"),
-        lit(null).cast(rBase.schema("__payload").dataType).as("__payload"),
-        struct(left.columns.toIndexedSeq.map(col): _*).as("__lrow"))
-    val rTagged = rBase
-      .withColumn("__lrow", lit(null).cast(lTagged.schema("__lrow").dataType))
-    val w = Window
-      .partitionBy(key)
-      .orderBy(col("__t"), col("__is_left"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val merged = rTagged.unionByName(lTagged)
-      .withColumn("__last", last(col("__payload"), ignoreNulls = true).over(w))
-      .filter(col("__is_left") === 1)
-    val inWindow = col("__last").isNotNull &&
-      col(s"__last.$rightTs") >= col("__t") - lookback
-    val outCols =
-      left.columns.toSeq.map(c => col(s"__lrow.$c").as(c)) ++
-        (rightTs +: payloadCols).map(c => when(inWindow, col(s"__last.$c")).as(c))
-    merged.select(outCols: _*)
+      .select(col(key).as(Key), col(leftTs).as(Time), lit(1).as(Side),
+        lit(null).cast(rTagged.schema(Payload).dataType).as(Payload),
+        struct(left.columns.toIndexedSeq.map(col): _*).as(LeftRow))
+    val rPadded = rTagged
+      .withColumn(LeftRow, lit(null).cast(lTagged.schema(LeftRow).dataType))
+
+    val t = col(Time)
+    def carried(df: DataFrame, name: String, timeOrder: Column): DataFrame =
+      df.withColumn(name, last(col(Payload), ignoreNulls = true).over(Window
+        .partitionBy(Key).orderBy(timeOrder, col(Side))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    // latest right row at or before t / earliest at or after t
+    val unioned = rPadded.union(lTagged)
+    val withBack = if (direction == "forward") unioned else carried(unioned, Back, t.asc)
+    val withBoth = if (direction == "backward") withBack else carried(withBack, Fwd, t.desc)
+    def rt(name: String): Column = col(name).getField(rightTs)
+    def back = when(rt(Back) >= t - tolerance, col(Back))
+    def fwd = when(rt(Fwd) <= t + tolerance, col(Fwd))
+    val matched = direction match {
+      case "backward" => back
+      case "forward" => fwd
+      case "nearest" =>
+        when(fwd.isNull || (back.isNotNull && t - rt(Back) <= rt(Fwd) - t), back)
+          .otherwise(fwd)
+    }
+    val leftOut = left.schema.fields.toSeq.map { f =>
+      val c = col(LeftRow).getField(f.name)
+      (if (f.nullable) c else GraftSqlShim.knownNotNull(c)).as(f.name)
+    }
+    withBoth
+      .filter(col(Side) === 1)
+      .withColumn(Match, matched)
+      .select(leftOut ++ rightCols.map(c => col(Match).getField(c).as(c)): _*)
   }
 }

@@ -65,7 +65,7 @@ object Pipelines {
       col("orderbook_units").getItem(0).getField("bid_price").as("best_bid"),
       col("total_ask_size"), col("total_bid_size"))
     AsOfJoin.joined(bars, ob, "code", "end_ts", "ob_ts",
-      expr("INTERVAL 10 SECONDS"), Seq("code", "bar_num"))
+      expr("INTERVAL 10 SECONDS"))
       .withColumn("processing_date", to_date(lit(processingDate)))
   }
 

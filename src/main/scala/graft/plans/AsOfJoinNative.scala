@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *    rightTime − leftTime ≤ tolerance
   *  - `nearest` — right minimizing |rightTime − leftTime| within
   *    ±tolerance; equidistant ties break to the EARLIER right row
-  *    (same contract as the join+rank form and its oracle)
+  *    (same contract as the DuckDB join+rank oracles)
   *
   * All three share one physical shape: the same co-partition + co-sort
   * requirements, one forward-only merge pass, O(1) per-partition state

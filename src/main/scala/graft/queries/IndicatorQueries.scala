@@ -335,10 +335,10 @@ object IndicatorQueries {
     * unique per key (the events table guarantees it) — equal-ts
     * quotes would make the picked mid engine-dependent.
     *
-    * Scale: two as-of joins on the SAME (user, time) sort — the join
-    * machinery is AsOfJoin.directional (join+rank; the native
-    * operator or single-shuffle union form slot in unchanged); output
-    * is one row per trade.
+    * Scale: two as-of joins, each one shuffle and one sorted pass of
+    * AsOfJoin.directional over the union of trades and quotes per user
+    * (the native operator slots in unchanged); output is one row per
+    * trade.
     */
   val tcaSpread: Q = Q(
     "tca_spread",
@@ -349,12 +349,12 @@ object IndicatorQueries {
       val trades = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"), col("ts"), col("value").as("price"))
       val before = graft.ops.AsOfJoin.directional(trades, quotes, "user_id",
-          "ts", "q_ts", expr("INTERVAL 1 DAY"), Seq("user_id", "event_id"), "backward")
+          "ts", "q_ts", expr("INTERVAL 1 DAY"), "backward")
         .select(col("user_id"), col("event_id"), col("ts"), col("price"),
           col("mid").as("mid_before"))
         .withColumn("h_ts", col("ts") + expr("INTERVAL 5 MINUTES"))
       val both = graft.ops.AsOfJoin.directional(before, quotes, "user_id",
-          "h_ts", "q_ts", expr("INTERVAL 1 DAY"), Seq("user_id", "event_id"), "forward")
+          "h_ts", "q_ts", expr("INTERVAL 1 DAY"), "forward")
         .select(col("user_id"), col("event_id"), col("ts"), col("price"),
           col("mid_before"), col("mid").as("mid_after"))
       val sgn = when(col("price") >= col("mid_before"), 1).otherwise(-1)

@@ -284,15 +284,15 @@ object MarketQueries {
 
   /** Forward as-of: the EARLIEST click within 3 days AFTER each bar
     * close — the "next event after" join (pandas merge_asof
-    * direction='forward'); same join+WindowGroupLimit shape as the
-    * backward form, rank ascending.
+    * direction='forward'); the backward form's single sorted pass with
+    * the time order reversed.
     */
   val asofJoinForward: Q = Q(
     "asof_join_forward",
     (s, dir) => {
       val (bars, clicks) = barsAndClicks(s, dir)
       graft.ops.AsOfJoin.directional(bars, clicks, "user_id", "end_ts", "click_ts",
-        expr("INTERVAL 3 DAYS"), Seq("user_id", "bar_num"), "forward")
+        expr("INTERVAL 3 DAYS"), "forward")
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("next_click_ts"), col("click_value").as("next_click_value"))
     },
@@ -319,7 +319,7 @@ object MarketQueries {
     (s, dir) => {
       val (bars, clicks) = barsAndClicks(s, dir)
       graft.ops.AsOfJoin.directional(bars, clicks, "user_id", "end_ts", "click_ts",
-        expr("INTERVAL 3 DAYS"), Seq("user_id", "bar_num"), "nearest")
+        expr("INTERVAL 3 DAYS"), "nearest")
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("near_click_ts"), col("click_value").as("near_click_value"))
     },
@@ -352,7 +352,7 @@ object MarketQueries {
         .filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("click_ts"), col("value").as("click_value"))
       AsOfJoin.joined(bars, clicks, "user_id", "end_ts", "click_ts",
-        expr("INTERVAL 3 DAYS"), Seq("user_id", "bar_num"))
+        expr("INTERVAL 3 DAYS"))
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("last_click_ts"), col("click_value").as("last_click_value"))
     },
@@ -431,9 +431,9 @@ object MarketQueries {
     """)
   )
 
-  /** The as-of join in its single-shuffle union+last_value form
-    * (AsOfJoin.unioned — the dense-right-side 100 TB plan). Identical
-    * results ⇒ identical oracle to asof_join.
+  /** The as-of join kept under its scale-form name: since AsOfJoin has
+    * one formulation (the single-shuffle union + last-value pass), this
+    * is `asof_join` again and shares its oracle.
     */
   val asofJoinScalable: Q = Q(
     "asof_join_scalable",
@@ -449,7 +449,7 @@ object MarketQueries {
       val clicks = ev
         .filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("click_ts"), col("value").as("click_value"))
-      AsOfJoin.unioned(bars, clicks, "user_id", "end_ts", "click_ts",
+      AsOfJoin.joined(bars, clicks, "user_id", "end_ts", "click_ts",
         expr("INTERVAL 3 DAYS"))
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("last_click_ts"), col("click_value").as("last_click_value"))

@@ -27,4 +27,12 @@ object GraftSqlShim {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** `c` declared non-nullable, for a value the caller knows is never
+    * null where the analyzer cannot see it (a union padded with typed
+    * nulls, filtered back to the rows that hold real values).
+    */
+  def knownNotNull(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+      org.apache.spark.sql.classic.ExpressionUtils.expression(c)))
 }

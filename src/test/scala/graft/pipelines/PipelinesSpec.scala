@@ -24,32 +24,35 @@ class PipelinesSpec extends SparkSpec {
       val ts = 1704067200000L + i * 250L + ci
       val price = 1000.0 + ci * 500 + (i * 37 % 100)
       val vol = 0.1 + (i % 7) * 0.05
-      val side = if (i % 3 == 0) "ASK" else "BID"
-      s"""{"type":"trade","code":"$c","timestamp":$ts,"trade_date":"2024-01-01",""" +
-        s""""trade_time":"00:00:00","trade_timestamp":$ts,"trade_price":$price,""" +
-        s""""trade_volume":$vol,"ask_bid":"$side","prev_closing_price":1000.0,""" +
-        s""""change":"RISE","change_price":1.0,"sequential_id":${ts * 10 + ci},""" +
-        s""""stream_type":"REALTIME","arrive_time":${ts / 1000.0 + 0.05}}"""
+      tradeJson(c, ts, price, vol, if (i % 3 == 0) "ASK" else "BID", ts * 10 + ci)
     }
     rows.toDF("value")
   }
+
+  private def tradeJson(c: String, ts: Long, price: Double, vol: Double, side: String,
+                        seq: Long): String =
+    s"""{"type":"trade","code":"$c","timestamp":$ts,"trade_date":"2024-01-01",""" +
+      s""""trade_time":"00:00:00","trade_timestamp":$ts,"trade_price":$price,""" +
+      s""""trade_volume":$vol,"ask_bid":"$side","prev_closing_price":1000.0,""" +
+      s""""change":"RISE","change_price":1.0,"sequential_id":$seq,""" +
+      s""""stream_type":"REALTIME","arrive_time":${ts / 1000.0 + 0.05}}"""
 
   private def orderbookWire(n: Int): DataFrame = {
     import spark.implicits._
     val rows = for {
       (c, ci) <- codes.zipWithIndex
       i <- 0 until n
-    } yield {
-      val ts = 1704067200100L + i * 500L + ci
-      val bid = 999.0 + ci * 500 + (i % 50)
-      val units = (0 until 5).map { l =>
-        s"""{"ask_price":${bid + 1 + l},"bid_price":${bid - l},"ask_size":${1.0 + l},"bid_size":${2.0 + (i + l) % 3}}"""
-      }.mkString("[", ",", "]")
-      s"""{"type":"orderbook","code":"$c","timestamp":$ts,"total_ask_size":15.0,""" +
-        s""""total_bid_size":12.0,"orderbook_units":$units,"stream_type":"REALTIME",""" +
-        s""""level":0,"arrive_time":${ts / 1000.0 + 0.04}}"""
-    }
+    } yield bookJson(c, 1704067200100L + i * 500L + ci, 999.0 + ci * 500 + (i % 50), i)
     rows.toDF("value")
+  }
+
+  private def bookJson(c: String, ts: Long, bid: Double, i: Int): String = {
+    val units = (0 until 5).map { l =>
+      s"""{"ask_price":${bid + 1 + l},"bid_price":${bid - l},"ask_size":${1.0 + l},"bid_size":${2.0 + (i + l) % 3}}"""
+    }.mkString("[", ",", "]")
+    s"""{"type":"orderbook","code":"$c","timestamp":$ts,"total_ask_size":15.0,""" +
+      s""""total_bid_size":12.0,"orderbook_units":$units,"stream_type":"REALTIME",""" +
+      s""""level":0,"arrive_time":${ts / 1000.0 + 0.04}}"""
   }
 
   test("rawIngest round-trips the trade envelope losslessly") {
@@ -104,6 +107,39 @@ class PipelinesSpec extends SparkSpec {
     // bars are contiguous per code from 0
     val bads = out.groupBy("code").agg(min("bar_num").as("mn")).filter(col("mn") =!= 0)
     assert(bads.count() === 0)
+
+    // known answers: one 1 000 KRW trade per bar, 100 s apart, and
+    // books placed on the edges of each bar's 10 s lookback
+    import spark.implicits._
+    val t0 = 1704067200000L
+    val ends = (1 to 4).map(i => t0 + i * 100000L)
+    val tradeRows = ends.map(ts => tradeJson("KRW-BTC", ts, 1000.0, 1.0, "BID", ts)) ++
+      ends.take(2).map(ts => tradeJson("KRW-ETH", ts, 1000.0, 1.0, "BID", ts + 1))
+    val books = Seq(
+      ends(0) -> 1.0,            // exactly at end_ts: matches
+      ends(1) - 10000L -> 2.0,   // exactly 10 s earlier: matches
+      ends(2) - 10001L -> 3.0,   // 10 s + 1 ms earlier: no match
+      ends(3) - 9000L -> 4.0,    // in band, older
+      ends(3) - 1000L -> 5.0)    // in band, newer: wins
+    val known = Pipelines.dailyDollarBars(
+      graft.ops.Envelope.parse(tradeRows.toDF("value"), graft.schema.UpbitSchemas.trade),
+      graft.ops.Envelope.parse(books.map { case (ts, bid) => bookJson("KRW-BTC", ts, bid, 0) }
+        .toDF("value"), graft.schema.UpbitSchemas.orderbook),
+      1000.0, "2024-01-01")
+      .orderBy("code", "bar_num").collect()
+    def opt[T](r: org.apache.spark.sql.Row, c: String) =
+      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[T](c))
+    val btc = known.filter(_.getAs[String]("code") == "KRW-BTC")
+    assert(btc.map(r => opt[Double](r, "best_bid")).toSeq ===
+      Seq(Some(1.0), Some(2.0), None, Some(5.0)))
+    assert(btc.map(r => opt[java.sql.Timestamp](r, "ob_ts").map(_.getTime)).toSeq ===
+      Seq(Some(ends(0)), Some(ends(1) - 10000L), None, Some(ends(3) - 1000L)))
+    // a code with no books keeps its bars, with null book columns
+    val eth = known.filter(_.getAs[String]("code") == "KRW-ETH")
+    assert(eth.length === 2)
+    Seq("ob_ts", "best_ask", "best_bid", "total_ask_size", "total_bid_size").foreach { c =>
+      assert(eth.forall(_.isNullAt(eth.head.fieldIndex(c))), c)
+    }
   }
 
   test("realtimeObi sliding stats are keyed per code; ratio OBI and latency present") {

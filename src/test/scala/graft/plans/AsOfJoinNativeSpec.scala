@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{SparkSpec, Tables}
-import graft.ops.{AsOfJoin, DollarBars}
+import graft.ops.{AsOfJoinReference, DollarBars}
 
 class AsOfJoinNativeSpec extends SparkSpec {
 
@@ -48,10 +48,10 @@ class AsOfJoinNativeSpec extends SparkSpec {
       .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
         col("click_ts"), col("click_value"))
 
-    val classic = AsOfJoin.joined(bars,
+    val classic = AsOfJoinReference.directional(bars,
       clicks.withColumnRenamed("r_user", "user_id"),
       "user_id", "end_ts", "click_ts",
-      expr("INTERVAL 3 DAYS"), Seq("user_id", "bar_num"))
+      expr("INTERVAL 3 DAYS"), Seq("user_id", "bar_num"), "backward")
       .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
         col("click_ts"), col("click_value"))
 
@@ -144,7 +144,7 @@ class AsOfJoinNativeSpec extends SparkSpec {
         "r_user", "click_ts", ThreeDaysUs, direction = d)
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts"), col("click_value"))
-      val classic = AsOfJoin.directional(bars,
+      val classic = AsOfJoinReference.directional(bars,
         clicks.withColumnRenamed("r_user", "user_id"),
         "user_id", "end_ts", "click_ts",
         expr("INTERVAL 3 DAYS"), Seq("user_id", "bar_num"), d)

@@ -197,7 +197,7 @@ class OpPropertySpec extends SparkSpec {
       }.toDF("k", "rts", "rid")
       if (right.count() > 0) {
         def dist(dir: String) = AsOfJoin.directional(left, right, "k", "ts", "rts",
-            expr("INTERVAL 2 HOURS"), Seq("k", "lid"), dir)
+            expr("INTERVAL 2 HOURS"), dir)
           .select(col("lid"),
             abs(unix_micros(col("rts")) - unix_micros(col("ts"))).as("d"))
           .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long]))

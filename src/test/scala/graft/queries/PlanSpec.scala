@@ -459,6 +459,32 @@ class PlanSpec extends SparkSpec {
       }
   }
 
+  test("as-of joins plan as one sorted pass: no join operator, no unbounded-following frame") {
+    import spark.implicits._
+    def wire(json: String*) = json.toDF("value")
+    val trades = graft.ops.Envelope.parse(wire(
+      """{"code":"KRW-BTC","timestamp":1704067200000,"trade_price":1000.0,"trade_volume":1.0}""",
+      """{"code":"KRW-BTC","timestamp":1704067201000,"trade_price":1000.0,"trade_volume":1.0}"""),
+      graft.schema.UpbitSchemas.trade)
+    val books = graft.ops.Envelope.parse(wire(
+      """{"code":"KRW-BTC","timestamp":1704067200500,"total_ask_size":1.0,"total_bid_size":1.0,""" +
+        """"orderbook_units":[{"ask_price":1001.0,"bid_price":999.0,"ask_size":1.0,"bid_size":1.0}]}"""),
+      graft.schema.UpbitSchemas.orderbook)
+    val daily = graft.pipelines.Pipelines.dailyDollarBars(trades, books, 1000.0, "2024-01-01")
+    val registry = Seq("asof_join", "asof_join_forward", "asof_join_nearest")
+      .map(name => name -> Registry.byName(name).fn(spark, sf("sf0.01")))
+    (("dailyDollarBars" -> daily) +: registry).foreach { case (name, df) =>
+      df.collect() // run so AQE finalizes the adaptive plan
+      val plan = df.queryExecution.executedPlan.toString
+      Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
+        "CartesianProduct").foreach { op =>
+        assert(!plan.contains(op), s"$name plans a $op — the as-of join is quadratic again:\n$plan")
+      }
+      assert(!plan.toLowerCase.contains("unboundedfollowing"),
+        s"$name uses an unbounded-following frame, recomputed per row:\n$plan")
+    }
+  }
+
   test("rrf_hybrid_scaled: union fusion; dense candidates bucket-equi-join, never cartesian") {
     val df = Registry.byName("rrf_hybrid_scaled").fn(spark, sf("sf0.01"))
     val plan = df.queryExecution.sparkPlan.toString

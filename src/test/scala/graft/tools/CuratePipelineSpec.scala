@@ -1,7 +1,12 @@
 package graft.tools
 
 import java.nio.file.Files
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -32,19 +37,50 @@ class CuratePipelineSpec extends SparkSpec {
     assert(maxCum <= budget)
     // deterministic: a second run yields the identical kept id set —
     // and drops its OWN three caches (the nbServeAuto lifetime
-    // discipline). Known library internals that legitimately outlive
-    // the call: PrefixSum's plan-referenced sorted cache and Dedup's
-    // persisted band index — so the bound is 2; the pipeline's own
-    // scored/exact/surv persists would push it to 5
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // discipline). Only RDDs persisted by jobs of this run count (the
+    // SparkContext is shared), each known by the call site that built
+    // it. Local checkpoints are left out: the ContextCleaner frees them
+    // once their Dataset is garbage-collected, so their number at any
+    // moment depends on GC timing. Known library internals that
+    // legitimately outlive the call: PrefixSum's plan-referenced
+    // sorted cache and Dedup's persisted band index — so the bound on
+    // the other caches is 2
+    val sc = spark.sparkContext
+    val tag = "graft.test.curateRun"
+    val mark = s"curate-${UUID.randomUUID()}"
+    val built = new ConcurrentHashMap[Int, String]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).foreach { v =>
+          if (v == mark) e.stageInfos.flatMap(_.rddInfos)
+            .filter(_.storageLevel.isValid).foreach(r => built.put(r.id, r.callSite))
+          if (v == s"$mark-done") drained.countDown()
+        }
+    }
+    val before = sc.getPersistentRDDs.keySet
     val dir2 = Files.createTempDirectory("graft_curate2").toString
-    CuratePipeline.run(spark, docs, "doc_id", "text", dir2, budget)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // the pipeline's own scored/exact/surv persists would read +5;
-    // bound 4 leaves slack for a concurrently-running suite's blocks
-    // (the shared-session race) on top of the two internals
-    assert(leaked.size <= 4,
-      s"pipeline must drop its own caches (library internals excepted): $leaked")
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, mark)
+      CuratePipeline.run(spark, docs, "doc_id", "text", dir2, budget)
+      // listener events arrive in order: once this job's start is seen,
+      // every job of the run above has been seen
+      sc.setLocalProperty(tag, s"$mark-done")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    val ours = built.asScala.toMap -- before
+    val (own, library) = ours
+      .filter { case (_, site) => !site.startsWith("localCheckpoint ") }
+      .partition { case (_, site) => site.contains("CuratePipeline.scala") }
+    def left(rdds: Map[Int, String]) = rdds.filter { case (id, _) => sc.getPersistentRDDs.contains(id) }
+    assert(own.size === 3, s"expected the pipeline's scored/exact/surv persists: $ours")
+    assert(left(own).isEmpty, s"pipeline must drop its own caches: ${left(own)}")
+    assert(left(library).size <= 2, s"library caches beyond the known internals: ${left(library)}")
     val a = curated.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val b = spark.read.parquet(s"$dir2/curated")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
