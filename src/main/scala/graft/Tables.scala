@@ -11,45 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spread(spark, spark.read.parquet(s"$sfDir/$name.parquet"), s"$sfDir/$name.parquet")
-
-  /** Scale-adaptive scan spread — MEASURED AND REJECTED as a default
-    * (r13, guide §2.3/§6). Hypothesis: the testdata ships each table
-    * as ONE parquet file with ONE row group (a row group is Spark's
-    * minimum read split), so every fused map-side stage (explode,
-    * gram hashing, per-row decimal math, partial aggregation) runs as
-    * a single task; repartitioning to `defaultParallelism` right
-    * after the scan (only when the planned scan parallelism is below
-    * half of it — a no-op at production scale where tables have
-    * thousands of splits) should spread that work across cores.
-    *
-    * Measured (LoopExp interleaved, local[32], sf0.1, median of 5,
-    * 13-query basket): spread 21.6 s vs off 18.3 s — REJECTED. Two
-    * mechanisms, both visible in StageProf: (1) the "serial" scan
-    * subtrees already run CONCURRENTLY — Spark executes broadcast /
-    * subquery builds as parallel jobs (withThreadLocalCaptured
-    * futures), so e.g. lm_bigram_score's four corpus passes occupy
-    * four cores without any exchange; (2) spreading turns each of
-    * those into 32 concurrent partial-aggregation tasks whose hash
-    * maps thrash the pinned 8 GB heap — per-stage GC jumps from
-    * ~15 ms to 400-700 ms. Spread only wins where per-row work is
-    * GC-light and single-pass (doc_fingerprint 0.39→0.21,
-    * gopher_rules 0.40→0.29) and loses big on multi-pass DAGs
-    * (pq_topk 2.76→4.45, lm_bigram_score 1.35→1.81). Default OFF;
-    * the knob + this note keep the verdict re-measurable (the
-    * KnobLedger `scan-spread` entry re-runs it mechanically).
-    */
-  private def spread(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    if (!sys.props.getOrElse("graft.exp.scan.spread", "false").toBoolean) return df
-    val target = spark.sparkContext.defaultParallelism
-    val scanParts = df.rdd.getNumPartitions // plans the scan; runs no job
-    if (scanParts * 2 > target) return df
-    val minKb = sys.props.getOrElse("graft.exp.scan.spread.minkb", "64").toLong
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
-    if (bytes < minKb * 1024) df else df.repartition(target)
-  }
+    spark.read.parquet(s"$sfDir/$name.parquet")
 
   /** The generator has shipped `events.ts` in two physical layouts:
     * Parquet TIMESTAMP(NANOS) (which vanilla Spark rejects — read the
@@ -65,14 +27,13 @@ object Tables {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/events.parquet")
-    val norm = df.schema("ts").dataType match {
+    df.schema("ts").dataType match {
       // `div` = exact integer division — a double round-trip would lose
       // precision above 2^53 ns (~epoch 1970+104 days).
       case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
       case _                => df
     }
-    spread(spark, norm, s"$sfDir/events.parquet")
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -81,6 +81,21 @@ object Bpe {
         (a, b) => struct(a.as("a"), b.as("b"))))
   }
 
+  /** Default merge-selection batch width for [[train]]. Batched
+    * selection is bit-identical to sequential by the kept-prefix proof
+    * in [[train]] (BpeSpec property-checks it, incl. adversarial
+    * corpora); the win is driver round-trips: each round is one
+    * pair-count job + one argmax collect + one checkpoint job
+    * regardless of how many merges it selects, so a batch that keeps
+    * m merges divides the loop's fixed per-round cost by m.
+    *
+    * r13 set it to 8 (interleaved A/B, local[32], sf0.1, median of 5,
+    * against width 1): bpe_vocab 0.96→0.77, bpe_encode 1.25→0.90,
+    * wordpiece_encode 1.61→1.23, training_shards flat (6.21→6.33,
+    * within noise — its BPE stage is a small slice).
+    */
+  private[graft] val defaultBatch: Int = 8
+
   /** Train `numMerges` BPE merges; see [[BpeModel]]. Ties break on
     * (count DESC, a ASC, b ASC) — total order, deterministic. Stops
     * early if no pair remains.
@@ -124,28 +139,6 @@ object Bpe {
     * adversarial corpus) and re-proven by the unchanged sequential-
     * replay DuckDB oracle every round.
     */
-  /** Default merge-selection batch width for [[train]] — overridable
-    * for interleaved A/Bs (graft.exp.bpe.batch). Batched selection is
-    * bit-identical to sequential by the kept-prefix proof above
-    * (BpeSpec property-checks it, incl. adversarial corpora); the win
-    * is driver round-trips: each round is one pair-count job + one
-    * argmax collect + one checkpoint job regardless of how many merges
-    * it selects, so a batch that keeps m merges divides the loop's
-    * fixed per-round cost by m. Measured r12 (LoopExp, sf0.1,
-    * interleaved): see OPTIMIZATION_r12.md.
-    *
-    * r13: default flipped to 8 — the r12 commit added the machinery
-    * but left the default at 1. Interleaved A/B (local[32], sf0.1,
-    * median of 5): bpe_vocab 0.96→0.77, bpe_encode 1.25→0.90,
-    * wordpiece_encode 1.61→1.23, training_shards flat (6.21→6.33,
-    * within noise — its BPE stage is a small slice). Bit-identity of
-    * batched vs sequential selection is BpeSpec-property-pinned
-    * (5 seeds × 3 batch widths + the pre-existing-product trap), so
-    * the flip cannot change any query's results.
-    */
-  private[graft] def defaultBatch: Int =
-    sys.props.getOrElse("graft.exp.bpe.batch", "8").toInt
-
   def train(df: DataFrame, textCol: String, numMerges: Int,
             batch: Int = defaultBatch): BpeModel = {
     require(batch >= 1, s"batch must be >= 1, got $batch")

@@ -83,17 +83,13 @@ object Decontam {
     val grams = df.select(col(idCol).as("doc_id"),
       explode(gramHashesAdaptive(df)(col(textCol), n)).as("g"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
-    val capped0 = grams.withColumn("__df", count(lit(1)).over(w))
-      .filter(col("__df") <= maxDf)
-      .drop("__df")
     // Static plan shows the subtree twice, but persisting LOSES here
     // (r12 interleaved A/B: persist 1.33 s vs recompute 1.03 s on
     // dup_ngram_pairs) — both sides shuffle at sf0.1 and AQE's
-    // runtime ReuseExchange fires. Default recompute; knob kept.
-    val capped =
-      if (sys.props.getOrElse("graft.exp.overlap.persist", "false").toBoolean)
-        capped0.persist()
-      else capped0
+    // runtime ReuseExchange fires.
+    val capped = grams.withColumn("__df", count(lit(1)).over(w))
+      .filter(col("__df") <= maxDf)
+      .drop("__df")
     capped.as("a").join(capped.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
@@ -259,12 +255,9 @@ object Decontam {
     // of longs) that alone costs seconds (the r11 encoding law,
     // DenseLit doc); the unsafe region is a memcpy at any width
     val bitmap = DenseLit.longs(bloomBuild(banned, "g", mBits, k))
-    val trainG0 = train.select(col(idCol).as("doc_id"),
+    val trainG = train.select(col(idCol).as("doc_id"),
       gramHashesAdaptive(train)(col(textCol), n).as("grams"))
-    val trainG =
-      if (sys.props.getOrElse("graft.exp.decontam.persist", "true").toBoolean)
-        trainG0.persist()
-      else trainG0
+      .persist()
     val candidates = trainG
       .select(col("doc_id"), explode(col("grams")).as("g"))
       .filter(bloomPositions(col("g"), mBits, k).map(bitSet(bitmap, _)).reduce(_ && _))
@@ -282,16 +275,13 @@ object Decontam {
     */
   def report(train: DataFrame, heldout: DataFrame, idCol: String,
              textCol: String, n: Int): DataFrame = {
-    val trainG0 = train.select(col(idCol).as("doc_id"),
-      gramHashesAdaptive(train)(col(textCol), n).as("grams"))
     // trainG feeds the explode side AND the final left join, which
     // never share an exchange (one side is exploded before its
     // shuffle) — persist WINS 2x here (r12 interleaved A/B:
     // decontam_overlap 0.53 s vs 1.08 s; decontam_bloom 1.26 vs 1.36)
-    val trainG =
-      if (sys.props.getOrElse("graft.exp.decontam.persist", "true").toBoolean)
-        trainG0.persist()
-      else trainG0
+    val trainG = train.select(col(idCol).as("doc_id"),
+      gramHashesAdaptive(train)(col(textCol), n).as("grams"))
+      .persist()
     val banned = heldout
       .select(explode(gramHashesAdaptive(heldout)(col(textCol), n)).as("g")).distinct()
     val overlap = trainG.select(col("doc_id"), explode(col("grams")).as("g"))

@@ -440,65 +440,33 @@ object Dedup {
   def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
                               nodes: DataFrame, nodeCol: String,
                               maxIter: Int = 25, strict: Boolean = true): DataFrame = {
-    // r5 loop-cost experiment knobs — BOTH alternatives LOST and the
-    // defaults keep the original shape (graft.tools.LoopExp interleaved
-    // A/B, same JVM, median of 5, sf0.1, dedup_clusters +
-    // curation_pipeline totals): base 11.0 s; fused one-job convergence
-    // probe 17.3 s (the && short-circuits after the first cheap
-    // anti-join most rounds, while the union always pays both sides
-    // PLUS loses the per-side 10-row broadcast-hash plan); no
-    // large-star checkpoint 12.8 s alone, 21.7 s combined (the
-    // exchange under large is consumed by three ops — small-star's two
-    // reads and the probe — and ReusedExchange does not survive AQE
-    // re-planning across those consumers, so large recomputes).
-    // Knobs kept for re-measurement.
-    val fusedProbe = sys.props.getOrElse("graft.exp.cc.fusedprobe", "false").toBoolean
-    val ckptLarge = sys.props.getOrElse("graft.exp.cc.ckptlarge", "true").toBoolean
-    // r13 (VERDICT #1): convergence probed via observe() metrics that
-    // ride the checkpoint actions — ZERO extra jobs per round, where
-    // the anti-join probe paid 2 jobs/round (and the r5 fused probe 1
-    // big one). Soundness: the flags count ROW-LEVEL rewrites
-    // (large: a neighbor re-attached to m ≠ u; small: a ≤-side
-    // neighbor moved to a different min), so flags==0 ⟺ both phases
-    // were the identity ⟹ small == e. The converse (set equality ⟹
-    // flags 0) is Kiveris et al. SoCC'14's potential argument: a
-    // large-star/small-star round leaves the edge set unchanged only
-    // at a star forest, where both phases are row-identities. Observe
-    // metrics may be re-reported under stage retries, but the probe
-    // only compares them to ZERO, which retries preserve. Requires
-    // ckptLarge (the metric needs large's action); knob restores the
-    // anti-join probe.
-    val obsProbe = ckptLarge &&
-      sys.props.getOrElse("graft.exp.cc.obsprobe", "true").toBoolean
-    // r12 note: cc.aqeoff was measured through dedup_clusters
-    // (LoopExp interleaved, sf0.1, local[32], median of 5): base
-    // 4.58 s, aqeoff 7.78 s — AQE's coalescing of the pair-graph
-    // exchanges is load-bearing; the PageRank AQE-off recipe does NOT
-    // transfer to this loop either (the Communities/KCore verdict).
-    val aqeOff = sys.props.getOrElse("graft.exp.cc.aqeoff", "false").toBoolean
-    val session = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = session.conf.get(aqeKey)
-    if (aqeOff) session.conf.set(aqeKey, "false")
-    try {
+    // Convergence is probed by observe() metrics that ride the
+    // checkpoint actions (r13) — ZERO extra jobs per round, where the
+    // set-equality anti-join probe paid 2 jobs/round. Soundness: the
+    // flags count ROW-LEVEL rewrites (large: a neighbor re-attached to
+    // m ≠ u; small: a ≤-side neighbor moved to a different min), so
+    // flags==0 ⟺ both phases were the identity ⟹ small == e. The
+    // converse (set equality ⟹ flags 0) is Kiveris et al. SoCC'14's
+    // potential argument: a large-star/small-star round leaves the
+    // edge set unchanged only at a star forest, where both phases are
+    // row-identities. Observe metrics may be re-reported under stage
+    // retries, but the probe only compares them to ZERO, which
+    // retries preserve. The flags are coalesced to 0 so an empty
+    // round reads 0, not a null. `large` is checkpointed too (r5:
+    // 11.0 s with, 12.8 s without): small-star reads it twice and
+    // ReusedExchange does not survive AQE re-planning across those
+    // consumers, so without it large recomputes. Each checkpoint is
+    // released as soon as the next round's edge set supersedes it;
+    // only the final edge table, which the returned plan reads, stays.
     // canonical undirected edges (a < b), self-loops dropped
     val e0 = edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .distinct()
-    var converged = false
-    var e =
-      if (obsProbe) {
-        val obs0 = org.apache.spark.sql.Observation()
-        val ck = e0.observe(obs0, count(lit(1)).as("n")).localCheckpoint()
-        converged = obs0.get("n").asInstanceOf[Long] == 0L // rides the ckpt job
-        ck
-      } else {
-        val ck = e0.localCheckpoint()
-        converged = ck.isEmpty
-        ck
-      }
+    val obs0 = org.apache.spark.sql.Observation()
+    var e = e0.observe(obs0, count(lit(1)).as("n")).localCheckpoint()
+    var converged = obs0.get("n").asInstanceOf[Long] == 0L // rides the ckpt job
     var i = 0
     while (!converged && i < maxIter) {
       // ---- large-star: (v > u) -> min(Γ(u) ∪ {u})
@@ -507,30 +475,26 @@ object Dedup {
       val mins = nbrs.groupBy("u")
         .agg(least(min(col("v")), first(col("u"))).as("m"))
       val obsL = org.apache.spark.sql.Observation()
-      val joinedL0 = nbrs.join(mins, "u")
       // changed(large) = some v>u re-attached below u (m ≠ u); for
       // v>u rows m ≤ u < v always, so m ≠ u ⟺ the emitted edge
       // differs from the input edge
-      val joinedL = if (obsProbe) joinedL0.observe(obsL,
-        sum(when(col("v") > col("u") && col("m") =!= col("u"), 1L)
-          .otherwise(0L)).as("chg")) else joinedL0
-      val largeRaw = joinedL
+      val large = nbrs.join(mins, "u")
+        .observe(obsL, coalesce(sum(when(col("v") > col("u") && col("m") =!= col("u"), 1L)
+          .otherwise(0L)), lit(0L)).as("chg"))
         .filter(col("v") > col("u") && col("v") =!= col("m"))
         .select(least(col("v"), col("m")).as("a"), greatest(col("v"), col("m")).as("b"))
         .distinct()
-      val large = if (ckptLarge) largeRaw.localCheckpoint() else largeRaw
+        .localCheckpoint()
       // ---- small-star: (v ≤ u) ∪ {u} -> min of that set
       val nbrsL = large.select(col("b").as("u"), col("a").as("v")) // v < u by canon
       val minsL = nbrsL.groupBy("u").agg(min(col("v")).as("m"))
       val obsS = org.apache.spark.sql.Observation()
-      val joinedS0 = nbrsL.join(minsL, "u")
       // changed(small) = some ≤-side neighbor moved to a different
       // min (v ≠ m); the singleton group (k=1, v = m) re-emits its
       // edge unchanged
-      val joinedS = if (obsProbe) joinedS0.observe(obsS,
-        sum(when(col("v") =!= col("m"), 1L).otherwise(0L)).as("chg"))
-        else joinedS0
-      val small = joinedS
+      val small = nbrsL.join(minsL, "u")
+        .observe(obsS, coalesce(sum(when(col("v") =!= col("m"), 1L).otherwise(0L)), lit(0L))
+          .as("chg"))
         .select(col("v"), col("m"), col("u"))
         .select(explode(array(
           struct(col("v").as("x"), col("m")),
@@ -541,19 +505,11 @@ object Dedup {
         .distinct()
         .localCheckpoint()
       // fixpoint when the round was a no-op (star forests are
-      // invariant under both phases): observe flags (zero extra jobs,
-      // see obsProbe note) or the r12 set-equality anti-joins
+      // invariant under both phases)
       converged =
-        if (obsProbe)
-          obsS.get("chg").asInstanceOf[Long] == 0L &&
-            obsL.get("chg").asInstanceOf[Long] == 0L
-        else if (fusedProbe)
-          small.join(e, Seq("a", "b"), "left_anti")
-            .union(e.join(small, Seq("a", "b"), "left_anti"))
-            .isEmpty
-        else
-          small.join(e, Seq("a", "b"), "left_anti").isEmpty &&
-            e.join(small, Seq("a", "b"), "left_anti").isEmpty
+        obsS.get("chg").asInstanceOf[Long] == 0L &&
+          obsL.get("chg").asInstanceOf[Long] == 0L
+      releaseCheckpoint(e); releaseCheckpoint(large)
       e = small
       i += 1
     }
@@ -570,8 +526,18 @@ object Dedup {
       .join(labels.withColumnsRenamed(Map("id" -> "l_id", "rep" -> "l_rep")),
         col("id") === col("l_id"), "left")
       .select(col("id"), coalesce(col("l_rep"), col("id")).as("rep"))
-    } finally session.conf.set(aqeKey, prevAqe)
   }
+
+  /** Drops the blocks of a `localCheckpoint`ed DataFrame once nothing
+    * reads it any more. `unpersist()` does not reach them: the
+    * checkpoint is an RDD behind the plan, not a cache-manager entry,
+    * and would otherwise stay until the ContextCleaner runs after a GC.
+    */
+  private def releaseCheckpoint(ckpt: DataFrame): Unit =
+    ckpt.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Incremental connected components: fold a batch of NEW edges into
     * existing (id, rep) labels WITHOUT re-running CC over the

@@ -46,7 +46,7 @@ object LangModel {
     val base = df.select(col(idCol).as("doc_id"), ws.as("__ws"))
 
     // (doc, w1, w2) bigram stream — map-side explode, no shuffle yet
-    val pairs0 = base.select(
+    val pairs = base.select(
       col("doc_id"),
       explode(zip_with(
         slice(col("__ws"), lit(1), size(col("__ws")) - 1),
@@ -59,11 +59,7 @@ object LangModel {
     // lm_bigram_score/lm_kneser_ney/ccnet_buckets): the bigram stream
     // is WIDER than its source (one row per word position), so caching
     // it costs more than three cheap re-explodes whose partial aggs
-    // collapse map-side. Default recompute; knob kept.
-    val pairs =
-      if (sys.props.getOrElse("graft.exp.lm.persist", "false").toBoolean)
-        pairs0.persist()
-      else pairs0
+    // collapse map-side.
 
     // Per-document distinct bigrams with multiplicity — the only
     // full-width shuffle; everything after carries (doc, bigram) pairs
@@ -123,7 +119,7 @@ object LangModel {
                      discount: Double = 0.75): DataFrame = {
     val ws = words(lower(trim(col(textCol))))
     val base = df.select(col(idCol).as("doc_id"), ws.as("__ws"))
-    val pairs0 = base.select(
+    val pairs = base.select(
       col("doc_id"),
       explode(zip_with(
         slice(col("__ws"), lit(1), size(col("__ws")) - 1),
@@ -131,10 +127,6 @@ object LangModel {
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("b"))
       .select(col("doc_id"), col("b.w1"), col("b.w2"))
     // persist measured and rejected — see bigramScore (r12)
-    val pairs =
-      if (sys.props.getOrElse("graft.exp.lm.persist", "false").toBoolean)
-        pairs0.persist()
-      else pairs0
 
     val docBi = pairs.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("m"))
     val c2 = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))

@@ -41,25 +41,21 @@ object Pq {
     * scan and the IVF-PQ composition: returns the per-subspace
     * codebooks (driver metadata, m × codes × dim/m doubles) and the
     * `(vec_id, codes[m])` table.
+    *
+    * m sequential Lloyd trainings (each its own persist + seed collect
+    * + per-iteration assign-crossJoin-window-groupBy-collect job) and
+    * m assignment passes unioned through a groupBy. Measured
+    * (PqStageExp, sf0.1, local[32], warm): encode = 1.9 of pq_topk's
+    * 2.0 s — training coordination, not the ADC scan, IS the query.
+    * A fused form (one seed collect, one job per Lloyd iteration for
+    * all subspaces, per-row unrolled argmin) was measured and lost
+    * (r12, 2.59 vs 2.41 s on pq_topk): the saved coordination jobs are
+    * cheap at this scale while the unrolled argmin costs more per
+    * pass than the window form.
     */
   def encode(df: DataFrame, idCol: String, vecCol: String,
              dim: Int, m: Int, codes: Int,
-             iters: Int): (Seq[Seq[(Int, Seq[Double])]], DataFrame) =
-    if (sys.props.getOrElse("graft.exp.pq.fused", "false").toBoolean)
-      encodeFused(df, idCol, vecCol, dim, m, codes, iters)
-    else encodeSequential(df, idCol, vecCol, dim, m, codes, iters)
-
-  /** The original per-subspace form — m sequential Lloyd trainings
-    * (each its own persist + seed collect + per-iteration
-    * assign-crossJoin-window-groupBy-collect job) and m assignment
-    * passes unioned through a groupBy. Measured (PqStageExp, sf0.1,
-    * local[32], warm): encode = 1.9 of pq_topk's 2.0 s — training
-    * coordination, not the ADC scan, IS the query. Kept as the
-    * fallback arm of the fused form (knob graft.exp.pq.fused).
-    */
-  private def encodeSequential(df: DataFrame, idCol: String, vecCol: String,
-                               dim: Int, m: Int, codes: Int,
-                               iters: Int): (Seq[Seq[(Int, Seq[Double])]], DataFrame) = {
+             iters: Int): (Seq[Seq[(Int, Seq[Double])]], DataFrame) = {
     require(dim % m == 0, s"dim=$dim must split evenly into m=$m subspaces")
     val sub = dim / m
     val base = df.select(col(idCol).cast("long").as("id"),
@@ -80,110 +76,6 @@ object Pq {
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x.getField("code")).as("codes"))
     (books, encoded)
-  }
-
-  /** All m subspaces trained and encoded in FUSED passes — measured
-    * AND REJECTED as the default (LoopExp interleaved, sf0.1,
-    * local[32], median of 5): fused 2.59/2.65/2.89 s vs sequential
-    * 2.41/2.58/2.82 s on pq_topk/ann_ivfpq_topk/ann_ivfpq_scaled —
-    * the saved coordination jobs are cheap at this scale while the
-    * per-row unrolled argmin expression (m·codes dist structs through
-    * array_min) costs more per pass than the window form it replaces.
-    * Kept behind graft.exp.pq.fused=true for re-measurement at widths
-    * where the crossJoin+window exchanges dominate.
-    *
-    * The shape (guide §1.2 step 1 — the distributed algorithm): the
-    * subspaces are independent, so one seed collect serves all m
-    * (slice driver-side), each Lloyd iteration is ONE job computing
-    * every subspace's assignment map-side (per-row argmin over the
-    * code literals — no crossJoin exchange, no per-vector window) and
-    * aggregating means by (s, cell), and the final encoding is ONE
-    * projection emitting the m-code array (no union, no groupBy).
-    * Job count per encode drops from ~3m+m to ~2+iters.
-    *
-    * Bit-equality with [[encodeSequential]] (PqSpec asserts books AND
-    * codes):
-    *  - seeds: the k smallest ids' subvectors — the same rows, sliced
-    *    driver-side instead of plan-side;
-    *  - assignment: dist = ‖vs‖² + ‖c‖² − 2·vs·c with the SAME
-    *    operands in the same IEEE order (dot_native for ‖vs‖² and the
-    *    cross term exactly as assignOn's withNorm/dotAdaptive; ‖c‖²
-    *    is a driver foldLeft — the identical sequential a + x·x chain
-    *    centFrame's `dot` runs); argmin = array_min over
-    *    struct(dist, cell) — lexicographic, ties to the smallest
-    *    cell, exactly row_number over (dist, cell) rank 1;
-    *  - means: members grouped by (s, cell), sort_array over
-    *    struct(id, vs), per-dim sequential fold / count — the
-    *    identical update expression, now keyed by (s, cell) in one
-    *    aggregate instead of per-subspace jobs.
-    */
-  private def encodeFused(df: DataFrame, idCol: String, vecCol: String,
-                          dim: Int, m: Int, codes: Int,
-                          iters: Int): (Seq[Seq[(Int, Seq[Double])]], DataFrame) = {
-    require(dim % m == 0, s"dim=$dim must split evenly into m=$m subspaces")
-    val sub = dim / m
-    val base0 = df.select(col(idCol).cast("long").as("id"),
-      Similarity.toDoubleVec(col(vecCol)).as("v"))
-    // bind each subspace's slice and its norm ONCE per row (the
-    // HOF-binding lesson: referencing the slice expression inside
-    // every per-code dist would re-slice per code)
-    val base = (0 until m).foldLeft(base0) { (d, s) =>
-      d.withColumn(s"__vs$s", slice(col("v"), s * sub + 1, sub))
-    }
-    val withNorms = (0 until m).foldLeft(base) { (d, s) =>
-      d.withColumn(s"__ns$s",
-        Similarity.dotAdaptive(df)(col(s"__vs$s"), col(s"__vs$s")))
-    }
-
-    // one seed collect for every subspace: the k smallest ids' full
-    // vectors, sliced driver-side — identical doubles to the m
-    // per-subspace TakeOrdered collects
-    val seedRows = base0.orderBy("id").limit(codes)
-      .select("v").collect().map(_.getSeq[Double](0))
-    var books: IndexedSeq[IndexedSeq[(Int, Seq[Double])]] =
-      (0 until m).map(s => seedRows.zipWithIndex.map { case (v, c) =>
-        (c, v.slice(s * sub, s * sub + sub))
-      }.toIndexedSeq)
-
-    // per-row argmin code for subspace s against its current book:
-    // full dist (norm included — the tie pattern must match assignOn's
-    // complete expression bit-for-bit)
-    def codeCol(s: Int, book: Seq[(Int, Seq[Double])]): Column = {
-      val entries = book.sortBy(_._1).map { case (c, cv) =>
-        val cn = cv.foldLeft(0.0)((a, x) => a + x * x)
-        struct(
-          (col(s"__ns$s") + lit(cn) - lit(2.0) *
-            Similarity.dotAdaptive(df)(col(s"__vs$s"), typedlit(cv))).as("dist"),
-          lit(c).as("cell"))
-      }
-      array_min(array(entries: _*)).getField("cell")
-    }
-
-    for (_ <- 0 until iters) {
-      val members = withNorms.select(col("id"),
-        explode(array((0 until m).map(s =>
-          struct(lit(s).as("s"), codeCol(s, books(s)).as("cell"),
-            col(s"__vs$s").as("vs"))): _*)).as("x"))
-        .select(col("id"), col("x.s").as("s"), col("x.cell").as("cell"),
-          col("x.vs").as("vs"))
-      val upd = members.groupBy("s", "cell")
-        .agg(sort_array(collect_list(struct(col("id"), col("vs")))).as("lst"),
-          count(lit(1)).as("cnt"))
-        .select(col("s"), col("cell"),
-          transform(sequence(lit(0), lit(sub - 1)), i =>
-            aggregate(col("lst"), lit(0.0),
-              (acc, sv) => acc + element_at(sv.getField("vs"), (i + 1).cast("int")))
-              / col("cnt")).as("cv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq).toMap
-      books = books.zipWithIndex.map { case (book, s) =>
-        book.map { case (c, old) => (c, upd.getOrElse((s, c), old)) }
-      }
-    }
-
-    val encoded = withNorms.select(col("id").as("vec_id"),
-      array((0 until m).map(s => codeCol(s, books(s))): _*).as("codes"))
-    (books.map(_.toSeq), encoded)
   }
 
   /** The hoisted per-query ADC distance-table column (see pqTopK).

@@ -54,27 +54,6 @@ object Retrieval {
                maxDfFrac: Double = 0.95): DataFrame = {
     val toks = df.select(col(idCol).cast("long").as("doc_id"),
       split(trim(lower(col(textCol))), "\\s+").as("ws"))
-    // r13 index shape (r12 VERDICT #7). The r12 plan derived EVERY
-    // statistic from the (doc, token, tf) aggregate, so the static
-    // plan re-scanned and re-exploded the corpus 5x and shuffled the
-    // exploded token stream repeatedly (persisting tf was measured
-    // and LOST — 3.84 vs 3.23 s — the cache write serializes the
-    // widest intermediate). The statistics are cheaper than their
-    // general form:
-    //   dl(doc)   = Σ_t tf(doc,t) = size(ws)        — map-side, no
-    //               explode, no aggregate (carrying dl on the tf GROUP
-    //               BY key instead was measured and LOST: it widens
-    //               the exploded-token shuffle, the query's largest);
-    //   stats     = one map-side agg over size(ws)   — no explode;
-    //   dfreq(t)  = #docs containing t = explode(array_distinct(ws))
-    //               + one count          — distinct map-side, and the
-    //               shuffle carries (doc-distinct) tokens only.
-    // The exploded-token stream is shuffled ONCE (tf) instead of
-    // feeding three aggregates. Legacy shape kept behind the knob;
-    // equality pinned by the unchanged DuckDB oracle + RetrievalSpec.
-    val legacy = sys.props.getOrElse("graft.exp.bm25.legacy", "false").toBoolean
-    val persistTf = sys.props.getOrElse("graft.exp.bm25.persist", "false").toBoolean
-
     val qterms = toks.filter(queryPred)
       .select(col("doc_id").as("query_id"),
         explode(array_distinct(slice(col("ws"), 1, queryTerms))).as("token"))
@@ -83,31 +62,8 @@ object Retrieval {
     // here would diverge from DuckDB's DECIMAL literal arithmetic at
     // the boundary (Registry literal pitfall) — integers cannot.
     val capPct = math.round(maxDfFrac * 100)
-    val post = if (legacy) {
-      val tf0 = toks.select(col("doc_id"), explode(col("ws")).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val tf = if (persistTf) tf0.persist() else tf0
-      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      tf.join(dl, "doc_id").join(dfreq, "token")
-        .crossJoin(broadcast(stats))
-        .filter(col("df") * lit(100L) <= col("n_docs") * lit(capPct))
-    } else {
-      // dl = size(ws): map-side, no explode, no aggregate (doc_id is
-      // unique in `df`, the contract both shapes assume)
-      val tf = toks.select(col("doc_id"), explode(col("ws")).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val dl = toks.select(col("doc_id"), size(col("ws")).cast("long").as("dl"))
-        .filter(col("dl") > 0)
-      val dfreq = toks
-        .select(explode(array_distinct(col("ws"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("df"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      tf.join(dl, "doc_id").join(dfreq, "token")
-        .crossJoin(broadcast(stats))
-        .filter(col("df") * lit(100L) <= col("n_docs") * lit(capPct))
-    }
+    val post = bm25Index(toks)
+      .filter(col("df") * lit(100L) <= col("n_docs") * lit(capPct))
 
     val avgdl = col("sum_dl").cast("double") / col("n_docs")
     val idf = log((col("n_docs") - col("df") + lit(0.5)) /
@@ -127,6 +83,42 @@ object Retrieval {
     scored.withColumn("rank", row_number().over(win))
       .filter(col("rank") <= k)
       .select("query_id", "doc_id", "score_micro", "rank")
+  }
+
+  /** The BM25 index over `(doc_id, ws)` token rows: one row per
+    * (doc_id, token) with `tf`, `dl`, `df`, `n_docs` and `sum_dl`.
+    *
+    * r13 shape (r12 VERDICT #7). The r12 plan derived EVERY statistic
+    * from the (doc, token, tf) aggregate, so the static plan
+    * re-scanned and re-exploded the corpus 5x and shuffled the
+    * exploded token stream repeatedly (persisting tf was measured and
+    * LOST — 3.84 vs 3.23 s — the cache write serializes the widest
+    * intermediate). The statistics are cheaper than their general
+    * form:
+    *   dl(doc)   = Σ_t tf(doc,t) = size(ws)        — map-side, no
+    *               explode, no aggregate (carrying dl on the tf GROUP
+    *               BY key instead was measured and LOST: it widens
+    *               the exploded-token shuffle, the query's largest);
+    *   stats     = one map-side agg over size(ws)   — no explode;
+    *   dfreq(t)  = #docs containing t = explode(array_distinct(ws))
+    *               + one count          — distinct map-side, and the
+    *               shuffle carries (doc-distinct) tokens only.
+    * The exploded-token stream is shuffled ONCE (tf) instead of
+    * feeding three aggregates. Equality with the per-statistic form is
+    * pinned by the DuckDB oracle + RetrievalSpec.
+    */
+  private def bm25Index(toks: DataFrame): DataFrame = {
+    val tf = toks.select(col("doc_id"), explode(col("ws")).as("token"))
+      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    // dl = size(ws): doc_id is unique in the input, the contract both
+    // BM25 entry points assume
+    val dl = toks.select(col("doc_id"), size(col("ws")).cast("long").as("dl"))
+      .filter(col("dl") > 0)
+    val dfreq = toks
+      .select(explode(array_distinct(col("ws"))).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("df"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
+    tf.join(dl, "doc_id").join(dfreq, "token").crossJoin(broadcast(stats))
   }
 
   /** BM25 over an IMPACT-TRUNCATED index: each term's posting list
@@ -170,30 +162,7 @@ object Retrieval {
                      b: Double = 0.75): DataFrame = {
     val toks = df.select(col(idCol).cast("long").as("doc_id"),
       split(trim(lower(col(textCol))), "\\s+").as("ws"))
-    // r13 index shape + legacy knob — see [[bm25TopK]] (dl map-side on
-    // the group key, explode-free dfreq/stats; persist measured and
-    // lost in r12, default recompute)
-    val legacy = sys.props.getOrElse("graft.exp.bm25.legacy", "false").toBoolean
-    val persistTf = sys.props.getOrElse("graft.exp.bm25.persist", "false").toBoolean
-    val joined = if (legacy) {
-      val tf0 = toks.select(col("doc_id"), explode(col("ws")).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val tf = if (persistTf) tf0.persist() else tf0
-      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      tf.join(dl, "doc_id").join(dfreq, "token").crossJoin(broadcast(stats))
-    } else {
-      val tf = toks.select(col("doc_id"), explode(col("ws")).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val dl = toks.select(col("doc_id"), size(col("ws")).cast("long").as("dl"))
-        .filter(col("dl") > 0)
-      val dfreq = toks
-        .select(explode(array_distinct(col("ws"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("df"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      tf.join(dl, "doc_id").join(dfreq, "token").crossJoin(broadcast(stats))
-    }
+    val joined = bm25Index(toks)
 
     val avgdl = col("sum_dl").cast("double") / col("n_docs")
     val idf = log((col("n_docs") - col("df") + lit(0.5)) /

@@ -30,13 +30,13 @@ object TextHash {
 
 
   /** True when the fused md5 kernels should be used: the session
-    * carries GraftExtensions AND the experiment kill-switch
-    * (-Dgraft.exp.texthash.native=false, dev-side interleaved A/B)
-    * is not set. All kernel call sites dispatch through this.
+    * carries GraftExtensions. Without them every call site falls back
+    * to the portable higher-order form, which TextHashExpressionsSpec
+    * pins the kernels against. All kernel call sites dispatch through
+    * this.
     */
   def nativeHash(session: org.apache.spark.sql.SparkSession, fn: String): Boolean =
-    sys.props.getOrElse("graft.exp.texthash.native", "true").toBoolean &&
-      session.catalog.functionExists(fn)
+    session.catalog.functionExists(fn)
 
   /** Canonical text form for exact dedup: lowercase, trimmed,
     * whitespace collapsed.

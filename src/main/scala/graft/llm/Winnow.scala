@@ -95,18 +95,13 @@ object Winnow {
     // md5 gram hashing runs once without any cache to manage.
     val fps = fingerprints(df, idCol, textCol, k, w)
     val dfw = Window.partitionBy("fp")
-    val capped0 = fps.withColumn("__df", count(lit(1)).over(dfw))
-      .filter(col("__df") <= maxDf).drop("__df")
     // The static plan shows the self-join subtree twice (4 corpus
     // scans) — but unlike TheilSen, persisting here LOSES (interleaved
     // A/B, sf0.1, local[32], median of 5: persist 1.44 s vs recompute
     // 1.06 s): at sf0.1 both sides shuffle and AQE's runtime
     // ReuseExchange does fire, so the cache write is pure overhead.
-    // Default = recompute; knob kept for re-measurement.
-    val capped =
-      if (sys.props.getOrElse("graft.exp.winnow.persist", "false").toBoolean)
-        capped0.persist()
-      else capped0
+    val capped = fps.withColumn("__df", count(lit(1)).over(dfw))
+      .filter(col("__df") <= maxDf).drop("__df")
     capped.as("a").join(capped.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))

@@ -30,42 +30,22 @@ object Communities {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3): DataFrame = {
     require(iters >= 1, "need at least one propagation round")
-    // AQE experiment knob (the PageRank.ranks recipe was AQE-off-wins;
-    // measured HERE it LOSES): interleaved A/B (graft.tools.LoopExp,
-    // sf0.1, local[32], median of 5): base 4.68 s, aqeoff 5.88 s —
-    // unlike PageRank's node-sized iteration state, each LPA round
-    // shuffles the full 2|E| neighbor-label stream, and AQE's
-    // partition coalescing on those exchanges is worth more than its
-    // re-planning latency costs. Default stays AQE-on; knob kept so
-    // the verdict is re-measurable.
-    // NOTE (r12 ADVICE): with the all-lazy default below this knob's
-    // conf is restored in `finally` BEFORE any action runs — it binds
-    // only on eagerly-materialized subplans (the eager* arms). An
-    // end-to-end AQE-off arm must set the session conf caller-side
-    // around the action.
-    val aqeOff = sys.props.getOrElse("graft.exp.lpa.aqeoff", "false").toBoolean
-    val session = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = session.conf.get(aqeKey)
-    if (aqeOff) session.conf.set(aqeKey, "false")
-    try {
-    // r13: eager-materialization arms MEASURED AND REJECTED here
-    // (interleaved local[32] sf0.1, median of 5): all-lazy 2.91 s,
-    // eager und 3.40 s, eager und+labels 4.77 s. Unlike KCore (where
-    // eager per-round checkpoints win 4.36→2.66 because its rounds
-    // re-execute under broadcast builds), LPA's und join side is a
-    // SHUFFLE join whose exchange ReuseExchange already shares across
-    // rounds within the one action, and each round's label table has
-    // exactly one consumer — eager checkpoints only add
-    // materialization jobs. Knobs keep the verdict re-measurable.
-    val eagerUnd = sys.props.getOrElse("graft.exp.lpa.eager", "false").toBoolean
-    val eagerLabels = sys.props.getOrElse("graft.exp.lpa.eagerlabels", "false").toBoolean
+    // AQE stays on: each LPA round shuffles the full 2|E|
+    // neighbor-label stream, and AQE's partition coalescing on those
+    // exchanges is worth more than its re-planning latency (AQE-off
+    // lost, 4.68 → 5.88 s, interleaved sf0.1 local[32]). Checkpoints
+    // stay LAZY (r13, all-lazy 2.91 s vs eager und 3.40 s vs eager
+    // und+labels 4.77 s): unlike KCore, whose rounds re-execute under
+    // broadcast builds, LPA's und join side is a SHUFFLE join whose
+    // exchange ReuseExchange already shares across rounds within the
+    // one action, and each round's label table has exactly one
+    // consumer — eager checkpoints only add materialization jobs.
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
     val und = e.select(col("src").as("a"), col("dst").as("b"))
       .union(e.select(col("dst").as("a"), col("src").as("b")))
       .distinct()
-      .localCheckpoint(eager = eagerUnd)
+      .localCheckpoint(eager = false)
     var labels = und.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id"))
     for (_ <- 1 to iters) {
@@ -81,9 +61,8 @@ object Communities {
         .groupBy(col("n").as("id"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("id"), col("m.l").as("lbl"))
-        .localCheckpoint(eager = eagerLabels)
+        .localCheckpoint(eager = false)
     }
     labels.select(col("id"), col("lbl").as("community"))
-    } finally session.conf.set(aqeKey, prevAqe)
   }
 }

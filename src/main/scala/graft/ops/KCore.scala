@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * two equi-semi-joins on the edge list — O(|E|) per round, shuffled
   * by node id, no windows, no driver state. Peel depth on real
   * graphs is small (the degeneracy ordering collapses quickly);
-  * lineage grows linearly in R so long runs should localCheckpoint
-  * every few rounds (the [[PageRank]] recipe — not needed at R=3).
+  * every round is localCheckpoint'ed eagerly, so lineage stays one
+  * round deep.
   */
 object KCore {
 
@@ -32,53 +32,21 @@ object KCore {
     */
   def nodes(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
-    // Loop knobs (the PageRank.ranks recipe): AQE off for the
-    // fixed-shape peel rounds, optional per-round localCheckpoint
-    // (lineage truncation — each round's plan otherwise embeds the
-    // previous round's twice: once under the degree aggregate, once
-    // as the join's left side). BOTH measured and BOTH lose here
-    // (graft.tools.LoopExp interleaved, sf0.1, local[32], median of
-    // 5): base 4.29 s; aqeoff 4.43 s; aqeoff+ckpt 6.50 s — at R=3 the
-    // doubled-subplan lineage is still cheap to re-plan, ReuseExchange
-    // already materializes each round's shuffle once, and the eager
-    // checkpoint materialization is a pure extra job per round. AQE's
-    // partition coalescing on the edge-sized exchanges outweighs its
-    // re-planning latency (same verdict as Communities, opposite of
-    // PageRank's node-sized state). Defaults = the measured winner
-    // (plain loop); knobs kept so the verdict is re-measurable.
-    // NOTE (r12 ADVICE): the aqeoff conf is restored in `finally`,
-    // i.e. when this function RETURNS its lazy result — it therefore
-    // binds only on subplans executed eagerly inside the loop (the
-    // eager checkpoints below), not on the returned plan's final
-    // action. An A/B arm that needs AQE off END-TO-END must set the
-    // session conf around the action itself (caller-side), not rely
-    // on this knob; the recorded aqeoff numbers measure the
-    // eager-subplan effect only.
-    val aqeOff = sys.props.getOrElse("graft.exp.kcore.aqeoff", "false").toBoolean
-    val ckpt = sys.props.getOrElse("graft.exp.kcore.ckpt", "false").toBoolean
-    val session = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = session.conf.get(aqeKey)
-    if (aqeOff) session.conf.set(aqeKey, "false")
-    try {
-    // r13: EAGER materialization per round (default). StageProf on the
-    // r12 lazy plan showed the `und` union+distinct map stages running
-    // TWICE (two 6-task/11 MB shuffle-write stages) and each round's
-    // subtree re-executing under its successors' broadcast builds —
-    // cur_{r+1} references cur_r three times (degree agg + two
-    // semi-join probes) and neither lazy localCheckpoint(eager=false)
-    // nor ReuseExchange deduplicates across the concurrently-built
-    // broadcast stages. Eager per-round checkpoints make every round
-    // compute ONCE: interleaved A/B (local[32], sf0.1, median of 5)
-    // lazy 4.36 s → eager 2.66 s, direction stable across windows.
-    // (The r12 "ckpt loses" verdict measured eager=false + AQE-off —
-    // a different arm.) Lazy shape kept behind the knob.
-    val eager = sys.props.getOrElse("graft.exp.kcore.eager", "true").toBoolean
-    val und0 = edges.select(col(srcCol).cast("long").as("a"),
+    // Eager per-round checkpoints (r13): on the lazy plan the `und`
+    // union+distinct map stages ran TWICE and each round's subtree
+    // re-executed under its successors' broadcast builds — cur_{r+1}
+    // references cur_r three times (degree agg + two semi-join probes)
+    // and neither lazy localCheckpoint(eager=false) nor ReuseExchange
+    // deduplicates across the concurrently-built broadcast stages.
+    // Eager checkpoints make every round compute ONCE (interleaved
+    // A/B, local[32], sf0.1, median of 5: lazy 4.36 s → eager 2.66 s).
+    // AQE stays on: its partition coalescing on the edge-sized
+    // exchanges outweighs its re-planning latency (AQE-off lost).
+    val und = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .union(edges.select(col(dstCol).cast("long"), col(srcCol).cast("long")))
       .distinct()
-    val und = if (eager) und0.localCheckpoint() else und0
+      .localCheckpoint()
     var cur = und
     for (_ <- 1 to rounds) {
       val keep = cur.groupBy("a").agg(count(lit(1)).as("deg"))
@@ -86,11 +54,9 @@ object KCore {
       val next = cur.join(keep.withColumnRenamed("a", "ka"), col("a") === col("ka"))
         .join(keep.withColumnRenamed("a", "kb"), col("b") === col("kb"))
         .select("a", "b")
-      cur = if (eager) next.localCheckpoint()
-            else if (ckpt) next.localCheckpoint(eager = false) else next
+      cur = next.localCheckpoint()
     }
     cur.groupBy("a").agg(count(lit(1)).as("deg"))
       .select(col("a").as("id"), col("deg"))
-    } finally session.conf.set(aqeKey, prevAqe)
   }
 }

@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): each iteration is one join + one groupBy,
   * both keyed so the exchanges reuse one partitioning; per-iteration
-  * state is O(|nodes|). The node count enters as a broadcast 1-row
-  * aggregate (never a driver collect). `localCheckpoint` truncates
-  * lineage per iteration (the same load-bearing detail as
-  * connectedComponents — plan size, not data, is what explodes).
+  * state is O(|nodes|). The node count enters as a driver literal
+  * (one count job on the persisted node table, one row back).
+  * `localCheckpoint` truncates lineage every second iteration (the
+  * same load-bearing detail as connectedComponents — plan size, not
+  * data, is what explodes). An empty edge list gives 0 rows.
   */
 object PageRank {
 
@@ -42,56 +43,33 @@ object PageRank {
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iters: Int): DataFrame = {
-    // AQE knob, scoped to the loop and restored in finally. The
-    // verdict is CORE-COUNT-DEPENDENT and was re-measured in r12
-    // (graft.tools.LoopExp interleaved, median of 5, sf0.1):
-    //  - local[4] (r5 capture): base 3.18 s, AQE-off 3.02 s — AQE-off
-    //    narrowly won and shipped as the default;
-    //  - local[32] (r12, the driver's bench config): AQE-ON wins in
-    //    every interleaved run — 6.39 vs 4.05 s in one window, 5.51
-    //    vs 5.18 s in a quieter confirm (direction stable, magnitude
-    //    ambience-dependent). At 32 shuffle partitions the
-    //    per-iteration exchanges fragment into 32 tiny tasks each,
-    //    and AQE's partition coalescing is worth more than its
-    //    re-planning latency (the same verdict as Communities/KCore/
-    //    connectedComponentsStar; the r5 local[4] result was a
-    //    4-partition special case where there was nothing to
-    //    coalesce).
-    // Default = AQE on; knob kept so the verdict is re-measurable.
-    val aqeOff = sys.props.getOrElse("graft.exp.pagerank.aqeoff", "false").toBoolean
-    val ckptEvery = sys.props.getOrElse("graft.exp.pagerank.ckptevery", "2").toInt
-    val session = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = session.conf.get(aqeKey)
-    if (aqeOff) session.conf.set(aqeKey, "false")
-    try {
+    // AQE stays on (r12, graft.tools.LoopExp interleaved, median of
+    // 5, sf0.1, local[32]): at 32 shuffle partitions the per-iteration
+    // exchanges fragment into 32 tiny tasks each, and AQE's partition
+    // coalescing is worth more than its re-planning latency (AQE-off
+    // won only the r5 local[4] capture, where there was nothing to
+    // coalesce). Lineage is truncated every 2nd iteration and on the
+    // last: a skipped checkpoint saves one materialization job but
+    // deepens the next iteration's plan by one join+agg level.
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().persist()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst"))).distinct().persist()
-    // 1-row scalar: N, the uniform init FP/N, the teleport term
-    // 0.15·init. r13: folded to DRIVER LITERALS (one 1-row head() on
-    // the persisted node table — the PrefixSum metadata-collect
-    // pattern, O(1) rows at any scale). The r12 form crossJoined a
-    // broadcast 1-row aggregate into EVERY iteration, which rebuilt
-    // the broadcast (and re-ran the node count) once per checkpointed
-    // step — ~2 extra jobs per iteration for two constants (StageProf:
-    // supplier_pagerank ran 34 jobs for 3 iterations). Same exact
-    // integers, oracle unchanged. Old arm behind the knob.
-    val c0lit = !sys.props.getOrElse("graft.exp.pagerank.c0bcast", "false").toBoolean
-    val c0 = nodes.agg(count(lit(1)).as("n"))
-      .select(
-        expr(s"$FP div n").as("init"),
-        expr(s"(15 * ($FP div n)) div 100").as("base"))
-    val (initLit, baseLit) =
-      if (c0lit) { val row = c0.head(); (row.getLong(0), row.getLong(1)) }
-      else (0L, 0L)
+    // N, the uniform init FP/N and the teleport term 0.15·init as
+    // DRIVER LITERALS: one count on the persisted node table (O(1)
+    // rows back at any scale). The r12 form crossJoined a broadcast
+    // 1-row aggregate into EVERY iteration, which rebuilt the
+    // broadcast (and re-ran the node count) once per checkpointed
+    // step — ~2 extra jobs per iteration for two constants. An empty
+    // edge list has N = 0: the literals are then 0 and the loop runs
+    // over empty tables, so the result is 0 rows with the usual
+    // schema.
+    val n = nodes.count()
+    val initLit = if (n == 0) 0L else FP / n
+    val baseLit = (15 * initLit) / 100
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val eDeg = e.join(deg, "src").persist()
-    var r = (if (c0lit) nodes.select(col("id"), lit(initLit).as("r"))
-             else nodes.crossJoin(broadcast(c0))
-               .select(col("id"), col("init").as("r")))
-      .localCheckpoint()
+    var r = nodes.select(col("id"), lit(initLit).as("r")).localCheckpoint()
     for (it <- 1 to iters) {
       // Shuffle join on src each iteration. broadcast(r) was measured
       // here and was a wash at 30:1 edges:nodes (the per-iteration
@@ -103,26 +81,15 @@ object PageRank {
       val contrib = eDeg.join(r, eDeg("src") === r("id"))
         .select(col("dst"), expr("r div outdeg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("s"))
-      val rNext = (if (c0lit)
-          nodes.join(contrib, col("id") === col("dst"), "left")
-            .select(col("id"),
-              (lit(baseLit) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
-        else
-          nodes.crossJoin(broadcast(c0))
-            .join(contrib, col("id") === col("dst"), "left")
-            .select(col("id"),
-              (col("base") + expr("(85 * coalesce(s, 0L)) div 100")).as("r")))
-      // lineage truncation every ckptEvery iterations (always on the
-      // last): a skipped checkpoint saves one materialization job but
-      // deepens the next iteration's plan by one join+agg level
-      r = if (it % ckptEvery == 0 || it == iters) rNext.localCheckpoint()
-          else rNext
+      val rNext = nodes.join(contrib, col("id") === col("dst"), "left")
+        .select(col("id"),
+          (lit(baseLit) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
+      r = if (it % 2 == 0 || it == iters) rNext.localCheckpoint() else rNext
     }
     e.unpersist(); eDeg.unpersist()
     val out = r.select(col("id"), col("r").as("rank_fp"),
       (col("r").cast("double") / lit(1.0e12)).as("rank"))
     nodes.unpersist()
     out
-    } finally session.conf.set(aqeKey, prevAqe)
   }
 }

@@ -29,13 +29,13 @@ import graft.llm.TextHash
   * predicate (slope undefined; both engines drop identically).
   *
   * CACHING CONTRACT (r12 ADVICE): [[slope]] persists its bottom-k
-  * sample (knob `graft.exp.theilsen.persistsample`) and returns a
-  * lazy DataFrame that references the cache entry — the entry is NOT
-  * unpersisted here (the result must stay computable, and the helper
-  * cannot know when the caller's last action runs). The engine's own
-  * callers (Bench/Verify) `clearCache()` between queries; a library
-  * caller embedding this in a long-lived session should do the same
-  * after consuming the result, or disable the knob.
+  * sample and returns a lazy DataFrame that references the cache
+  * entry — the entry is NOT unpersisted here (the result must stay
+  * computable, and the helper cannot know when the caller's last
+  * action runs). The engine's own callers (Bench/Verify)
+  * `clearCache()` between queries; a library caller embedding this in
+  * a long-lived session should do the same after consuming the
+  * result.
   */
 object TheilSen {
 
@@ -64,18 +64,10 @@ object TheilSen {
     // function-scope-cache caveat doesn't bite here: the bench/driver
     // clear the cache between queries, the same policy as
     // Dedup.bandedBuckets.)
-    val sample0 = hashed.withColumn("rn", row_number().over(w))
+    val sample = hashed.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k).drop("rn", "h")
       .withColumn("n_sample", count(lit(1)).over(Window.partitionBy("key")))
-    // The self-join sides do NOT share one exchange in practice: at
-    // broadcastable sample sizes one side becomes a BroadcastExchange,
-    // so the scan → rank-window → count-window subtree runs twice
-    // (plan shows 2 scans / 5 windows, 0 ReusedExchange). persist()
-    // computes it once; knob for interleaved A/B (see scaladoc).
-    val sample =
-      if (sys.props.getOrElse("graft.exp.theilsen.persistsample", "true").toBoolean)
-        sample0.persist()
-      else sample0
+      .persist()
 
     val pairs = sample.as("a").join(sample.as("b"),
         col("a.key") === col("b.key") && col("a.x") < col("b.x"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -237,6 +238,94 @@ object AnalyticsQueries {
     """)
   )
 
+  /** `corr_features` over any lineitem-shaped frame (l_returnflag,
+    * l_quantity, l_extendedprice, l_discount): the registry query
+    * applies it to the lineitem table, CorrMomentsSpec to hand-built
+    * frames at and beyond the TPC-H bounds.
+    */
+  private[graft] def corrFeaturesOf(lineitem: DataFrame): DataFrame = {
+    def dbl(name: String) = col(name).cast("double")
+    val nD = col("n").cast("double")
+    def corr(sxy: String, sx: String, sxx: String, sy: String, syy: String) =
+      (nD * dbl(sxy) - dbl(sx) * dbl(sy)) /
+        (sqrt(nD * dbl(sxx) - dbl(sx) * dbl(sx)) *
+         sqrt(nD * dbl(syy) - dbl(sy) * dbl(sy)))
+    // r13 LONG-UNSCALED moments (r12 VERDICT #5), bit-identical by
+    // construction to the r12 DECIMAL(25,8)-product form
+    // (CorrMomentsSpec pins it against that form, kept as its
+    // reference; the DuckDB oracle hash-checks it end-to-end):
+    //
+    // 1. Per-row quantization IS the same `cast(x AS DECIMAL(12,4))`
+    //    (HALF_UP) as the decimal form; the unscaled integer is then
+    //    recovered through one double multiply-round. Exactness:
+    //    |v|·10⁴ ≤ 1.05·10⁹ (l_quantity ∈ [1,50], l_extendedprice
+    //    < 105 000, l_discount ∈ [0,0.1] — TPC-H spec bounds,
+    //    re-measured on every test SF), the decimal→double cast of
+    //    a ≤12-significant-digit value and the ·10⁴ product each
+    //    err ≤ 1 ulp, so the total error ≤ 2·2⁻⁵²·1.05·10⁹ ≈ 5·10⁻⁷
+    //    « 0.5 and round() recovers the integer exactly.
+    // 2. Per-row products are single LONG multiplies: the largest,
+    //    p_u², is ≤ (1.05·10⁹)² = 1.103·10¹⁸ < 2⁶³−1 (8.4×
+    //    headroom). ENFORCED, not assumed: the aggregate carries
+    //    max(abs(unscaled)) per column and the 3-row tail raises
+    //    an error if any exceeds √(2⁶³−1) ≈ 3.03·10⁹.
+    // 3. Sums are exact DECIMAL(38,0) over the long products —
+    //    capacity 10³⁸ covers any row count to 10¹⁹.
+    // 4. The one double per moment is produced by BigDecimal
+    //    (unscaled)·10⁻ˢ → doubleValue(): one correctly-rounded
+    //    conversion of the exact moment — the same value the
+    //    decimal form's DECIMAL(35,8)→double cast and DuckDB's
+    //    VARCHAR→DOUBLE cast produce. (A 3-row scalar UDF tail,
+    //    deliberately outside the typed-decimal division rules,
+    //    whose loss-adjusted scales would round 10⁻⁸ to 10⁻⁶.)
+    val rescale = udf { (bd: java.math.BigDecimal, scale: Int) =>
+      bd.movePointLeft(scale).doubleValue
+    }
+    // (x + 0.5).cast(long) == round-half-up for these NON-NEGATIVE
+    // columns (error « 0.5, point 1 above) and is a pure codegen
+    // primitive — Spark's round() routes every double through a
+    // per-row BigDecimal.setScale (measured 0.9 s of the query)
+    def u(c: String) =
+      (col(c).cast(DecimalType(12, 4)).cast("double") * lit(1e4) + lit(0.5))
+        .cast("long")
+    val li = lineitem.select(
+      col("l_returnflag"),
+      u("l_quantity").as("qu"),
+      u("l_extendedprice").as("pu"),
+      u("l_discount").as("du"))
+    def s38(c: org.apache.spark.sql.Column) = sum(c.cast(DecimalType(28, 0)))
+    val m = li.groupBy("l_returnflag").agg(
+      count(lit(1)).as("n"),
+      s38(col("qu")).as("squ"), s38(col("pu")).as("spu"), s38(col("du")).as("sdu"),
+      s38(col("qu") * col("pu")).as("sqpu"), s38(col("qu") * col("du")).as("sqdu"),
+      s38(col("qu") * col("qu")).as("sqqu"), s38(col("pu") * col("pu")).as("sppu"),
+      s38(col("du") * col("du")).as("sddu"),
+      greatest(max(abs(col("qu"))), max(abs(col("pu"))),
+        max(abs(col("du")))).as("__maxu"),
+      least(min(col("qu")), min(col("pu")), min(col("du"))).as("__minu"))
+    // the guard rides n's value path (+0 when in range) so it can
+    // never be pruned: 3 rows, zero cost, hard failure on any
+    // out-of-range input instead of a silent long overflow
+    val guardedN = (col("n") +
+      when(col("__maxu") > lit(3037000499L) || col("__minu") < lit(0L),
+        raise_error(lit("corr_features needs l_quantity, l_extendedprice and " +
+          "l_discount non-negative with DECIMAL(12,4) unscaled values at most " +
+          "3037000499 (sqrt(Long.MaxValue)), so per-row products fit a long")).cast("long"))
+        .otherwise(lit(0L))).as("n")
+    val scaled = m.select(col("l_returnflag"), guardedN,
+      rescale(col("squ"), lit(4)).as("sq"),
+      rescale(col("spu"), lit(4)).as("sp"),
+      rescale(col("sdu"), lit(4)).as("sd"),
+      rescale(col("sqpu"), lit(8)).as("sqp"),
+      rescale(col("sqdu"), lit(8)).as("sqd"),
+      rescale(col("sqqu"), lit(8)).as("sqq"),
+      rescale(col("sppu"), lit(8)).as("spp"),
+      rescale(col("sddu"), lit(8)).as("sdd"))
+    scaled.select(col("l_returnflag"), col("n"),
+      corr("sqp", "sq", "sqq", "sp", "spp").as("corr_qty_price"),
+      corr("sqd", "sq", "sqq", "sd", "sdd").as("corr_qty_discount"))
+  }
+
   /** Exact per-group Pearson correlation from DECIMAL-exact raw
     * moments: the sums are exact (DECIMAL(12,4) inputs, DECIMAL(25,8)
     * products, no rounding), so both engines start the final IEEE
@@ -246,107 +335,7 @@ object AnalyticsQueries {
     */
   val corrFeatures: Q = Q(
     "corr_features",
-    (s, dir) => {
-      def dbl(name: String) = col(name).cast("double")
-      val nD = col("n").cast("double")
-      def corr(sxy: String, sx: String, sxx: String, sy: String, syy: String) =
-        (nD * dbl(sxy) - dbl(sx) * dbl(sy)) /
-          (sqrt(nD * dbl(sxx) - dbl(sx) * dbl(sx)) *
-           sqrt(nD * dbl(syy) - dbl(sy) * dbl(sy)))
-      if (sys.props.getOrElse("graft.exp.corr.decimal", "false").toBoolean) {
-        // r12 arm: DECIMAL(25,8) per-row products — exact but every
-        // product is a BigDecimal multiply (precision 25 > the
-        // long-backed limit 18). Kept re-measurable behind the knob.
-        val li = Tables.lineitem(s, dir).select(
-          col("l_returnflag"),
-          col("l_quantity").cast(DecimalType(12, 4)).as("q"),
-          col("l_extendedprice").cast(DecimalType(12, 4)).as("p"),
-          col("l_discount").cast(DecimalType(12, 4)).as("d"))
-        val m = li.groupBy("l_returnflag").agg(
-          count(lit(1)).as("n"),
-          sum(col("q")).as("sq"), sum(col("p")).as("sp"), sum(col("d")).as("sd"),
-          sum(col("q") * col("p")).as("sqp"), sum(col("q") * col("d")).as("sqd"),
-          sum(col("q") * col("q")).as("sqq"), sum(col("p") * col("p")).as("spp"),
-          sum(col("d") * col("d")).as("sdd"))
-        m.select(col("l_returnflag"), col("n"),
-          corr("sqp", "sq", "sqq", "sp", "spp").as("corr_qty_price"),
-          corr("sqd", "sq", "sqq", "sd", "sdd").as("corr_qty_discount"))
-      } else {
-        // r13 LONG-UNSCALED moments (r12 VERDICT #5), bit-identical by
-        // construction to the decimal arm (CorrMomentsSpec pins it;
-        // the unchanged DuckDB oracle hash-checks it end-to-end):
-        //
-        // 1. Per-row quantization IS the same `cast(x AS DECIMAL(12,4))`
-        //    (HALF_UP) as the decimal arm; the unscaled integer is then
-        //    recovered through one double multiply-round. Exactness:
-        //    |v|·10⁴ ≤ 1.05·10⁹ (l_quantity ∈ [1,50], l_extendedprice
-        //    < 105 000, l_discount ∈ [0,0.1] — TPC-H spec bounds,
-        //    re-measured on every test SF), the decimal→double cast of
-        //    a ≤12-significant-digit value and the ·10⁴ product each
-        //    err ≤ 1 ulp, so the total error ≤ 2·2⁻⁵²·1.05·10⁹ ≈ 5·10⁻⁷
-        //    « 0.5 and round() recovers the integer exactly.
-        // 2. Per-row products are single LONG multiplies: the largest,
-        //    p_u², is ≤ (1.05·10⁹)² = 1.103·10¹⁸ < 2⁶³−1 (8.4×
-        //    headroom). ENFORCED, not assumed: the aggregate carries
-        //    max(abs(unscaled)) per column and the 3-row tail raises
-        //    an error if any exceeds √(2⁶³−1) ≈ 3.03·10⁹.
-        // 3. Sums are exact DECIMAL(38,0) over the long products —
-        //    capacity 10³⁸ covers any row count to 10¹⁹.
-        // 4. The one double per moment is produced by BigDecimal
-        //    (unscaled)·10⁻ˢ → doubleValue(): one correctly-rounded
-        //    conversion of the exact moment — the same value the
-        //    decimal arm's DECIMAL(35,8)→double cast and DuckDB's
-        //    VARCHAR→DOUBLE cast produce. (A 3-row scalar UDF tail,
-        //    deliberately outside the typed-decimal division rules,
-        //    whose loss-adjusted scales would round 10⁻⁸ to 10⁻⁶.)
-        val rescale = udf { (bd: java.math.BigDecimal, scale: Int) =>
-          bd.movePointLeft(scale).doubleValue
-        }
-        // (x + 0.5).cast(long) == round-half-up for these NON-NEGATIVE
-        // columns (error « 0.5, point 1 above) and is a pure codegen
-        // primitive — Spark's round() routes every double through a
-        // per-row BigDecimal.setScale (measured 0.9 s of the query)
-        def u(c: String) =
-          (col(c).cast(DecimalType(12, 4)).cast("double") * lit(1e4) + lit(0.5))
-            .cast("long")
-        val li = Tables.lineitem(s, dir).select(
-          col("l_returnflag"),
-          u("l_quantity").as("qu"),
-          u("l_extendedprice").as("pu"),
-          u("l_discount").as("du"))
-        def s38(c: org.apache.spark.sql.Column) = sum(c.cast(DecimalType(28, 0)))
-        val m = li.groupBy("l_returnflag").agg(
-          count(lit(1)).as("n"),
-          s38(col("qu")).as("squ"), s38(col("pu")).as("spu"), s38(col("du")).as("sdu"),
-          s38(col("qu") * col("pu")).as("sqpu"), s38(col("qu") * col("du")).as("sqdu"),
-          s38(col("qu") * col("qu")).as("sqqu"), s38(col("pu") * col("pu")).as("sppu"),
-          s38(col("du") * col("du")).as("sddu"),
-          greatest(max(abs(col("qu"))), max(abs(col("pu"))),
-            max(abs(col("du")))).as("__maxu"),
-          least(min(col("qu")), min(col("pu")), min(col("du"))).as("__minu"))
-        // the guard rides n's value path (+0 when in range) so it can
-        // never be pruned: 3 rows, zero cost, hard failure on any
-        // out-of-range input instead of a silent long overflow
-        val guardedN = (col("n") +
-          when(col("__maxu") > lit(3037000499L) || col("__minu") < lit(0L),
-            raise_error(lit("corr_features long-unscaled range guard: " +
-              "unscaled value negative or > sqrt(Long.MaxValue); re-run " +
-              "with -Dgraft.exp.corr.decimal=true")).cast("long"))
-            .otherwise(lit(0L))).as("n")
-        val scaled = m.select(col("l_returnflag"), guardedN,
-          rescale(col("squ"), lit(4)).as("sq"),
-          rescale(col("spu"), lit(4)).as("sp"),
-          rescale(col("sdu"), lit(4)).as("sd"),
-          rescale(col("sqpu"), lit(8)).as("sqp"),
-          rescale(col("sqdu"), lit(8)).as("sqd"),
-          rescale(col("sqqu"), lit(8)).as("sqq"),
-          rescale(col("sppu"), lit(8)).as("spp"),
-          rescale(col("sddu"), lit(8)).as("sdd"))
-        scaled.select(col("l_returnflag"), col("n"),
-          corr("sqp", "sq", "sqq", "sp", "spp").as("corr_qty_price"),
-          corr("sqd", "sq", "sqq", "sd", "sdd").as("corr_qty_discount"))
-      }
-    },
+    (s, dir) => corrFeaturesOf(Tables.lineitem(s, dir)),
     Some("""
       -- width 19 forces DuckDB's int128 decimal kernel: its int64
       -- kernel overflows on (12,4)×(12,4) products, and 19+19 → an
@@ -664,19 +653,13 @@ object AnalyticsQueries {
           .as("total_volume"), count(lit(1)).as("n_events"))
       val grouped = per.groupBy(col("total_volume"))
         .agg(max(col("n_events")).as("mxy"))
-      // the exclusive prefix max over DESC total_volume ran as an
-      // UNPARTITIONED window (WindowExec "No Partition Defined" — all
-      // distinct user-totals to ONE task, the r12 VERDICT #4 100 TB
-      // choke); the two-phase PrefixSum form is bit-identical (max is
-      // associative; PrefixSumSpec pins equality) and parallel. Old
-      // arm kept re-measurable behind the knob.
-      val mxt =
-        if (sys.props.getOrElse("graft.exp.pareto.window", "false").toBoolean)
-          grouped.withColumn("prev", max(col("mxy")).over(
-            Window.orderBy(col("total_volume").desc)
-              .rowsBetween(Window.unboundedPreceding, -1)))
-        else
-          PrefixSum.withRunningMaxDesc(grouped, "total_volume", "mxy", "prev")
+      // the exclusive prefix max over DESC total_volume as the
+      // two-phase PrefixSum form, not an UNPARTITIONED window
+      // (WindowExec "No Partition Defined" — all distinct user-totals
+      // to ONE task, the r12 VERDICT #4 100 TB choke): bit-identical
+      // (max is associative; PrefixSumSpec pins equality against the
+      // window) and parallel
+      val mxt = PrefixSum.withRunningMaxDesc(grouped, "total_volume", "mxy", "prev")
       per.join(mxt, "total_volume")
         .select(col("user_id"), col("total_volume"), col("n_events"),
           (col("n_events") === col("mxy") &&

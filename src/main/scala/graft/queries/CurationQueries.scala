@@ -1142,12 +1142,8 @@ object CurationQueries {
       // passes cheap (the chain's CC labels are checkpoint-backed and
       // its exact-dedup table is persisted internally, so a re-read
       // replays only joins + the PrefixSum cut), while the cache write
-      // serializes the full curated TEXT column. Default = recompute;
-      // knob kept so the balance is re-measurable.
-      val persistCurated =
-        sys.props.getOrElse("graft.exp.shards.persistcurated", "false").toBoolean
-      val curated0 = curatedFrame(s, dir, keepText = true)
-      val curated = if (persistCurated) curated0.persist() else curated0
+      // serializes the full curated TEXT column.
+      val curated = curatedFrame(s, dir, keepText = true)
       val model = Bpe.train(curated, "text", BpeMerges)
       val counts = Wordpiece.encodeCounts(curated, "doc_id", "text", model,
         maxWordLen = WpMaxWordLen)

@@ -19,8 +19,11 @@ import graft.SparkEntry
   *
   * An arm spec sets the listed system properties for its runs and
   * restores the previous values afterwards; the empty spec is the
-  * code-default arm. Knobs live in the operators themselves (e.g.
-  * graft.exp.pagerank.aqeoff, graft.exp.cc.fusedprobe).
+  * code-default arm. The operators have one code path each and read
+  * no properties, so an experiment adds its own property read for as
+  * long as it runs (e.g. an arm `"wide:exp.batch=16"` against a
+  * temporary `sys.props.getOrElse("exp.batch", "8")`), or compares
+  * two builds by running the default arm in alternating processes.
   */
 object LoopExp {
   def main(args: Array[String]): Unit = {

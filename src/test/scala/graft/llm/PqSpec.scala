@@ -97,33 +97,6 @@ class PqSpec extends SparkSpec {
       "a neighbor came from an unprobed cell")
   }
 
-  test("fused encode arm is bit-equal to the sequential default: books AND codes") {
-    val df = corpus.toDF("vec_id", "embedding")
-    def run(): (Seq[Seq[(Int, Seq[Double])]], Map[Long, Seq[Int]]) = {
-      val (books, encoded) = Pq.encode(df, "vec_id", "embedding",
-        dim = 64, m = 4, codes = 16, iters = 1)
-      (books, encoded.collect()
-        .map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap)
-    }
-    val saved = sys.props.get("graft.exp.pq.fused")
-    val (seqBooks, seqCodes) = try {
-      sys.props("graft.exp.pq.fused") = "false"; run()
-    } finally saved match {
-      case Some(v) => sys.props("graft.exp.pq.fused") = v
-      case None => sys.props.remove("graft.exp.pq.fused")
-    }
-    val (fusedBooks, fusedCodes) = try {
-      sys.props("graft.exp.pq.fused") = "true"; run()
-    } finally saved match {
-      case Some(v) => sys.props("graft.exp.pq.fused") = v
-      case None => sys.props.remove("graft.exp.pq.fused")
-    }
-    // exact double equality — the fused trainer must reproduce the
-    // pinned Lloyd recipe bit-for-bit, not approximately
-    assert(fusedBooks == seqBooks)
-    assert(fusedCodes == seqCodes)
-  }
-
   test("adist is a true squared-distance surrogate: non-negative everywhere") {
     val df = corpus.toDF("vec_id", "embedding")
     val out = Pq.pqTopK(df, "vec_id", "embedding", col("id") % 10 === 0, k = 5)

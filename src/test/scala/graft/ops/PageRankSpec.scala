@@ -34,4 +34,12 @@ class PageRankSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(d(3L) == a(3L).toDouble / 1e12)
   }
+
+  test("empty edge list: 0 rows with the (id, rank_fp, rank) schema") {
+    val edges = Seq.empty[(Long, Long)].toDF("s", "d")
+    val out = PageRank.ranks(edges, "s", "d", iters = 3)
+    assert(out.columns.toSeq === Seq("id", "rank_fp", "rank"))
+    assert(out.schema.map(_.dataType.typeName) === Seq("long", "long", "double"))
+    assert(out.count() === 0)
+  }
 }

@@ -34,4 +34,49 @@ class PrefixSumSpec extends SparkSpec {
       .select("event_id", "c").orderBy("event_id").collect().toSeq
     assert(a === b)
   }
+
+  // grouped (total_volume, mxy) table of the pareto_front query
+  private def grouped = Tables.events(spark, sf())
+    .groupBy(col("user_id"))
+    .agg(sum(col("value").cast(DecimalType(20, 4))).cast("double")
+      .as("total_volume"), count(lit(1)).as("n_events"))
+    .groupBy(col("total_volume"))
+    .agg(max(col("n_events")).as("mxy"))
+
+  /** The exclusive running max over DESC order as ONE unpartitioned
+    * window — the single-task form withRunningMaxDesc replaces.
+    */
+  private def windowMaxDesc(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("prev", max(col("mxy")).over(
+      Window.orderBy(col("total_volume").desc)
+        .rowsBetween(Window.unboundedPreceding, -1)))
+
+  private def prevByKey(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("total_volume"), col("prev")).collect()
+      .map(r => r.getDouble(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .toMap
+
+  test("withRunningMaxDesc equals the single-task exclusive window bit-for-bit") {
+    val g = grouped
+    val twoPhase = prevByKey(PrefixSum.withRunningMaxDesc(g, "total_volume", "mxy", "prev"))
+    val windowed = prevByKey(windowMaxDesc(g))
+    assert(windowed.size === g.count())
+    assert(twoPhase === windowed)
+    // the first row in DESC order has an empty frame: null
+    val top = g.agg(max(col("total_volume"))).collect()(0).getDouble(0)
+    assert(twoPhase(top) === None)
+    assert(twoPhase.values.count(_.isEmpty) === 1)
+  }
+
+  test("withRunningMaxDesc is invariant to input and range partitioning") {
+    val g = grouped
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val runs = try Seq(1, 3, 17).map { n =>
+      spark.conf.set(key, n.toString) // the range partition count
+      prevByKey(PrefixSum.withRunningMaxDesc(g.repartition(n), "total_volume", "mxy", "prev"))
+    } finally spark.conf.set(key, saved)
+    assert(runs.forall(_ === runs.head))
+    assert(runs.head === prevByKey(windowMaxDesc(g)))
+  }
 }

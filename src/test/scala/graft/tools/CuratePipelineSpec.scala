@@ -39,22 +39,30 @@ class CuratePipelineSpec extends SparkSpec {
     // and drops its OWN three caches (the nbServeAuto lifetime
     // discipline). Only RDDs persisted by jobs of this run count (the
     // SparkContext is shared), each known by the call site that built
-    // it. Local checkpoints are left out: the ContextCleaner frees them
-    // once their Dataset is garbage-collected, so their number at any
-    // moment depends on GC timing. Known library internals that
-    // legitimately outlive the call: PrefixSum's plan-referenced
-    // sorted cache and Dedup's persisted band index — so the bound on
-    // the other caches is 2
+    // it. Known library internals that legitimately outlive the call:
+    // PrefixSum's plan-referenced sorted cache and Dedup's persisted
+    // band index — so the bound on the other caches is 2. Of the
+    // run's local checkpoints only the final edge table of the
+    // connected-components loop may be left (the cluster labels read
+    // it); every earlier round's checkpoint must be released as the
+    // loop goes. The listener holds a strong reference to every RDD it
+    // sees persisted, so the ContextCleaner cannot free one after a GC:
+    // only an explicit unpersist removes it, and the counts do not
+    // depend on GC timing.
     val sc = spark.sparkContext
     val tag = "graft.test.curateRun"
     val mark = s"curate-${UUID.randomUUID()}"
     val built = new ConcurrentHashMap[Int, String]()
+    val held = new ConcurrentHashMap[Int, AnyRef]()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty(tag)).foreach { v =>
           if (v == mark) e.stageInfos.flatMap(_.rddInfos)
-            .filter(_.storageLevel.isValid).foreach(r => built.put(r.id, r.callSite))
+            .filter(_.storageLevel.isValid).foreach { r =>
+              built.put(r.id, r.callSite)
+              sc.getPersistentRDDs.get(r.id).foreach(held.put(r.id, _))
+            }
           if (v == s"$mark-done") drained.countDown()
         }
     }
@@ -74,13 +82,16 @@ class CuratePipelineSpec extends SparkSpec {
       sc.removeSparkListener(listener)
     }
     val ours = built.asScala.toMap -- before
-    val (own, library) = ours
-      .filter { case (_, site) => !site.startsWith("localCheckpoint ") }
+    val (ckpts, caches) = ours.partition { case (_, site) => site.startsWith("localCheckpoint ") }
+    val (own, library) = caches
       .partition { case (_, site) => site.contains("CuratePipeline.scala") }
     def left(rdds: Map[Int, String]) = rdds.filter { case (id, _) => sc.getPersistentRDDs.contains(id) }
     assert(own.size === 3, s"expected the pipeline's scored/exact/surv persists: $ours")
     assert(left(own).isEmpty, s"pipeline must drop its own caches: ${left(own)}")
     assert(left(library).size <= 2, s"library caches beyond the known internals: ${left(library)}")
+    assert(ckpts.size >= 2, s"expected the connected-components checkpoints: $ours")
+    assert(left(ckpts).size <= 1, s"local checkpoints beyond the final edge table: ${left(ckpts)}")
+    held.clear()
     val a = curated.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val b = spark.read.parquet(s"$dir2/curated")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
