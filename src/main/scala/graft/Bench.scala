@@ -39,19 +39,12 @@ object Bench {
       sys.exit(reexecPinned(args))
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // n timed sweeps after one warmup sweep: the reported per-query value
     // is the MEDIAN of n, so one GC/scheduler hiccup can't set the record;
     // min/median/max per query land in BENCH_LOCAL.json so jitter claims
     // are checkable from the artifact.
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warmup (untimed): run every query once at the smallest sf so
     // JIT + codegen + parquet-footer caches are hot before any timed
     // measurement — n=1 cold timings are dominated by first-run
@@ -71,11 +64,21 @@ object Bench {
     // that discards rows, so the timed work is the query's real work.
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    // A query (or canary) that throws in any run is recorded with the
+    // first exception's class as its status, gets no time, and makes
+    // Bench exit 1: a failure is never timed as a fast success.
+    val failures = collection.mutable.LinkedHashMap.empty[String, String]
+    def attempt(name: String)(body: => Unit): Boolean =
+      try { body; true }
+      catch { case e: Throwable =>
+        failures.getOrElseUpdate(name, e.getClass.getName)
+        System.err.println(s"[bench] $name failed: $e")
+        false
+      }
     val warmDir = sfDir.replaceAll("sf[0-9.]+/?$", "sf0.001")
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
       names.foreach { name =>
-        try force(SparkEntry.queries(name)(spark, warmDir))
-        catch { case _: Throwable => () }
+        attempt(name)(force(SparkEntry.queries(name)(spark, warmDir)))
         spark.catalog.clearCache()
       }
     }
@@ -96,8 +99,7 @@ object Bench {
         .join(Tables.customer(s, dir),
           col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment").count()))
-    canaries.foreach { case (_, fn) => try force(fn(spark, warmDir))
-      catch { case _: Throwable => () } }
+    canaries.foreach { case (cname, fn) => attempt(cname)(force(fn(spark, warmDir))) }
     val samples = collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     val canarySamples = collection.mutable.Map.empty[String, Vector[Double]]
@@ -106,19 +108,19 @@ object Bench {
       for (name <- names) {
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+        val ok = attempt(name)(force(fn(spark, sfDir)))
         val dt = (System.nanoTime() - t0) / 1e9
         // operators may persist() self-join inputs; drop them so later
         // queries aren't squeezed by accumulated storage memory, and GC
         // (untimed) so one query's garbage isn't billed to the next
         spark.catalog.clearCache()
         System.gc()
-        samples(name) = samples(name) :+ dt
+        if (ok) samples(name) = samples(name) :+ dt
       }
       canaries.foreach { case (cname, fn) =>
         val t0 = System.nanoTime()
-        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-        canarySamples(cname) = canarySamples(cname) :+ (System.nanoTime() - t0) / 1e9
+        if (attempt(cname)(force(fn(spark, sfDir))))
+          canarySamples(cname) = canarySamples(cname) :+ (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         System.gc()
       }
@@ -128,7 +130,8 @@ object Bench {
       val s = xs.sorted
       s(s.size / 2) // n is odd by default; for even n the upper median
     }
-    val med = names.map(n => n -> median(samples(n)))
+    val timed = names.filterNot(failures.contains)
+    val med = timed.map(n => n -> median(samples(n)))
     val qs = med.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = med.map(_._2).sum
@@ -136,7 +139,7 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     // File record additionally carries the full [min, median, max] per
     // query so dispersion survives independent of any stdout capture.
-    val triples = names.map { n =>
+    val triples = timed.map { n =>
       val s = samples(n).sorted
       "\"" + n + "\":[" + r3(s.head) + "," + r3(median(s)) + "," + r3(s.last) + "]"
     }.mkString("{", ",", "}")
@@ -146,8 +149,11 @@ object Bench {
     val canaryRuns = canaries.map { case (n, _) =>
       "\"" + n + "\":[" + canarySamples(n).map(r3).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val status = (names ++ canaries.map(_._1)).map { n =>
+      "\"" + n + "\":\"" + failures.get(n).fold("ok")("error:" + _) + "\""
+    }.mkString("{", ",", "}")
     val fileLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_runs":$nRuns,"queries":$qs,"runs_min_med_max":$triples,"canary_runs_sec":$canaryRuns,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_runs":$nRuns,"failed":${failures.size},"queries":$qs,"runs_min_med_max":$triples,"status":$status,"canary_runs_sec":$canaryRuns,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (fileLine + "\n").getBytes("UTF-8"))
     spark.sparkContext.setLogLevel("OFF")
@@ -163,7 +169,9 @@ object Bench {
     // in BENCH_LOCAL.json) as SELF-CONTAINED chunks of ≤ ~1.2 kB each:
     // any bounded tail then retains whole, machine-parseable chunk
     // lines. Additions only — the full line stays first and the
-    // compact total line stays LAST (the existing parse contract).
+    // compact total line stays LAST (the existing parse contract). Each
+    // chunk carries its map under its own key (`queries_<i>`), so a
+    // parser that merges the lines into one object keeps every chunk.
     val entries = med.map { case (k, v) => "\"" + k + "\":" + r3(v) }
     val chunks = {
       val bufs = collection.mutable.ArrayBuffer(collection.mutable.ArrayBuffer.empty[String])
@@ -175,10 +183,11 @@ object Bench {
       bufs.filter(_.nonEmpty)
     }
     chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"metric":"queries_chunk","i":${i + 1},"of":${chunks.size},"queries":${c.mkString("{", ",", "}")}}""")
+      println(s"""{"metric":"queries_chunk","i":${i + 1},"of":${chunks.size},"queries_${i + 1}":${c.mkString("{", ",", "}")}}""")
     }
     println(s"""{"metric":"canaries","canary_runs_sec":$canaryRuns}""")
-    println(s"""{"metric":"total","value":${r3(total)},"n":${names.size},"n_runs":$nRuns,"unit":"sec"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"n":${names.size},"failed":${failures.size},"n_runs":$nRuns,"unit":"sec"}""")
     System.out.flush()
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order lambdas are interpreted per element (ArrayTransform is
   * CodegenFallback), and each element pays md5 → 32-char hex UTF8String
   * → substring → conv (a string base-conversion) → cast. Stage
-  * isolation at sf0.1 (tools/HashExp, noop sink, median of 5):
+  * isolation at sf0.1 (OPTIMIZATION_r12, noop sink, median of 5):
   * char-trigram hashing 2.75 s and word-8-gram hashing 3.07 s per pass
   * over the 5 000-doc corpus, vs 0.12 s for the raw text scan. These
   * kernels compute the identical values — md5 over the identical UTF-8

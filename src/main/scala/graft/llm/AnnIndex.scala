@@ -177,7 +177,8 @@ object AnnIndex {
     * assignments drift from the build's own cells (measured: 34/450
     * borderline flips when assigning against member-means).
     *
-    * THIS is where build-once/probe-many pays hardest (AnnIndexExp,
+    * THIS is where build-once/probe-many pays hardest (NOTES_r10 /
+    * SCALE_DECADES_r10,
     * 200k/512 cells, after the native-dot assignment landed: build
     * 26 s ONCE vs 16 s of Lloyd retraining per monolithic batch;
     * probe 1.3 s — breakeven at ~2 batches, ~12× per batch after;
@@ -284,7 +285,8 @@ object AnnIndex {
     * same `dotAdaptive` IEEE fold. Zero shuffle, stream-legal.
     *
     * Encoding: the BOXED struct-array `typedLit` — kept ON MEASUREMENT
-    * after the r12 flat re-encode was tried and reverted (ArgminLitExp,
+    * after the r12 flat re-encode was tried and reverted (NOTES_r12 /
+    * SCALE_DECADES_r12,
     * 200k rows × dim 64, three bit-equal arms): the per-cell vector
     * here is accessed by REFERENCE (`getField`, no copy), so the boxed
     * arm reads 0.51/1.45/6.3 s at k = 64/256/1024, while the flat
@@ -295,7 +297,7 @@ object AnnIndex {
     * fallback — non-monotone, not a servable law). The boxed per-ACTION
     * serialization tax this encoding pays is trivial at quantizer
     * widths (k·dim ≤ 32k elements sits on the flat part of the
-    * CentLitExp curve, ~0.24 s/action; SCALE_DECADES_r12) — the
+    * r12 per-action literal curve, ~0.24 s/action; SCALE_DECADES_r12) — the
     * streaming ingest path pays it once per micro-batch against
     * thousands of per-row dots. Flat DenseLit encodings stay where
     * access is O(1)-INDEXED rather than whole-vector (NB/DSIR dense

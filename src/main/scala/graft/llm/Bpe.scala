@@ -102,7 +102,7 @@ object Bpe {
     *
     * `batch` > 1 amortizes the driver round-trip that dominates wall
     * time at production vocab sizes (one Spark job + one collect PER
-    * MERGE otherwise — measured in tools/BpeLoopExp): each round
+    * MERGE otherwise — measured in NOTES_r6): each round
     * collects the top `3·batch` pairs and selects a prefix that is
     * PROVABLY the next run of sequential merges, then applies the
     * whole run in one projection. The selection rule that makes the
@@ -320,7 +320,7 @@ object Bpe {
     (merges.toSeq, cur)
   }
 
-  /** Diagnostic only (dev measurement, e.g. [[graft.tools.BpeLoopExp]]):
+  /** Diagnostic only (dev measurement, as in the NOTES_r6 loop profile):
     * number of pair-count rounds the last [[train]] call ran. merges ÷
     * rounds is the realized batch length — how far conflict stops cut
     * the requested `batch` (the exactness rules keep only a pairwise-

@@ -46,7 +46,7 @@ object Decontam {
   /** [[gramHashes]] through the fused one-pass kernel when the session
     * carries GraftExtensions (per-gram md5 → hex → conv through
     * interpreted HOF lambdas measured ~3 s per corpus pass at sf0.1 —
-    * tools/HashExp), the portable HOF otherwise. Bit-equal incl.
+    * OPTIMIZATION_r12), the portable HOF otherwise. Bit-equal incl.
     * first-occurrence dedup order (TextHashExpressionsSpec).
     */
   def gramHashesAdaptive(df: DataFrame)(text: Column, n: Int): Column =

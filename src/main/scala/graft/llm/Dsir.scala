@@ -58,7 +58,7 @@ object Dsir {
     * carries GraftExtensions: "u:w" ≡ prefix "u:" over 1-grams,
     * "b:w1 w2" ≡ prefix "b:" over 2-grams (identical md5 bytes, mod
     * applied in-kernel); the interpreted HOF md5 → hex → conv chain
-    * is the measured map-side cost (tools/HashExp). Bit-equality
+    * is the measured map-side cost (OPTIMIZATION_r12). Bit-equality
     * pinned in TextHashExpressionsSpec; HOF fallback for plain
     * sessions.
     */
@@ -168,7 +168,7 @@ object Dsir {
     * buckets) instead of a map literal. DSIR buckets are already
     * dense ints in [0, buckets), so `element_at(array, b+1)` is an
     * O(1) index where the map literal's `element_at(map, k)` is a
-    * LINEAR key scan — the NbServeExp r10 4-arm law (map literal
+    * LINEAR key scan — the r10 4-arm serving law, NOTES_r10 (map literal
     * climbs 0.44→1.83 s from 256 to 16k keys while the dense array
     * holds ~0.21 s flat; identical expression shapes here). Bit-equal
     * to [[scoreWith]] and the shuffled join (DsirSpec): same integer
@@ -231,7 +231,8 @@ object Dsir {
   val LiteralModelMaxBuckets = 2048
 
   /** Measured CROSSOVER of the DENSE array-literal serving path
-    * (r10 verdict #2 → r11 DenseCeilingExp → r12 extended sweep):
+    * (r10 verdict #2 → r11 ceiling sweep → r12 extended sweep; NOTES_r11/
+    * r12, SCALE_DECADES_r11/r12):
     * with the [[DenseLit]] UnsafeArrayData encoding the dense NB
     * scorer is FLAT to 1M buckets — 0.18/0.16/0.20/0.24 s at
     * B = 16k/64k/256k/1M vs a 0.24–0.35 s join arm — and the r12
@@ -267,7 +268,7 @@ object Dsir {
       // (≤buckets rows — bounded driver metadata, the kmeans-centroid
       // budget), and score MAP-SIDE via the dense array-literal
       // projection (r10: O(1) indexed lookups where the map literal
-      // scans keys linearly — the NbServeExp law): zero
+      // scans keys linearly — the NOTES_r10 serving law): zero
       // doc-proportional shuffles end to end. defaultMicro is never
       // consulted scoring the training corpus itself — every bucket a
       // scored document hashes into was, by construction, counted into

@@ -45,7 +45,7 @@ object Pq {
     * m sequential Lloyd trainings (each its own persist + seed collect
     * + per-iteration assign-crossJoin-window-groupBy-collect job) and
     * m assignment passes unioned through a groupBy. Measured
-    * (PqStageExp, sf0.1, local[32], warm): encode = 1.9 of pq_topk's
+    * (OPTIMIZATION_r12, sf0.1, local[32], warm): encode = 1.9 of pq_topk's
     * 2.0 s — training coordination, not the ADC scan, IS the query.
     * A fused form (one seed collect, one job per Lloyd iteration for
     * all subspaces, per-row unrolled argmin) was measured and lost

@@ -190,7 +190,7 @@ object QualityClassifier {
     * [[Dsir.LiteralModelMaxBuckets]]: past a few thousand features,
     * serve with [[nbScore]]'s broadcast join instead.
     */
-  /** Measured serving crossover (NbServeExp, 200k Zipf docs / Heaps
+  /** Measured serving crossover (NOTES_r9, 200k Zipf docs / Heaps
     * vocab 4473, interleaved arms, median of 5): the map-literal
     * scorer wins below ~1k occupied features (0.56–0.91× the join's
     * time) and LOSES 1.8×/2.7×/3.5× at 1.8k/2.7k/3.9k features, while
@@ -241,7 +241,7 @@ object QualityClassifier {
     *  - `buckets = Some(b)` with `b ≤` [[Dsir.DenseModelMaxBuckets]]
     *    (a [[hashedFeature]]`(b)` model inside the measured dense
     *    width): the dense O(1) array-literal path ([[serveDense]] +
-    *    [[nbScoreDense]]) — the NbServeExp 4-arm winner at EVERY
+    *    [[nbScoreDense]]) — the NOTES_r10 4-arm winner at EVERY
     *    measured width (flat 0.21–0.29 s from B=256 to 16384, and
     *    flat to B=1M in the r11 ceiling sweep under the [[DenseLit]]
     *    encoding), stateless, zero-shuffle, stream-legal. Past the
@@ -297,8 +297,8 @@ object QualityClassifier {
     val m0 = if (preMaterialized) model else model.persist()
     def dropOurCache(): Unit = if (!preMaterialized) { m0.unpersist(); () }
     buckets match {
-      // hashed model inside the MEASURED dense width (DenseCeilingExp,
-      // flat to 1M): the dense array-literal winner
+      // hashed model inside the MEASURED dense width (NOTES_r11 /
+      // SCALE_DECADES_r11, flat to 1M): the dense array-literal winner
       case Some(b) if b <= denseMaxBuckets =>
         val (llr, occ, pm) = serveDense(m0, prior, b)
         dropOurCache()
@@ -335,7 +335,7 @@ object QualityClassifier {
     * — the join-based serving form of [[nbScoreBroadcast]]. Unlike
     * [[serve]]'s driver-side literal, the map never enters generated
     * code: it arrives as broadcast DATA, so the compile-time literal
-    * ceiling does not apply. MEASURED honest negative (NbServeExp r10,
+    * ceiling does not apply. MEASURED honest negative (NOTES_r10,
     * 40k Zipf docs, interleaved arms): the runtime cost is WORSE than
     * the literal at every B — the broadcast join copies the whole map
     * into each joined row and `element_at(map, k)` is a linear key
@@ -398,7 +398,7 @@ object QualityClassifier {
     * bucket with the OOV mass pre-filled, plus occupancy for the OOV
     * count). `element_at(array, i)` is an O(1) index, and a literal
     * array is ONE expression node — so per-token cost is flat in B,
-    * unlike every alternative. MEASURED (NbServeExp r10 4-arm run,
+    * unlike every alternative. MEASURED (NOTES_r10 4-arm run,
     * 40k Zipf docs scored, 160k trained, interleaved arms, median of
     * 5): dense holds 0.21–0.29 s at EVERY B from 256 to 16384
     * (dense/join 0.33–0.34 flat) while the map literal climbs
@@ -406,7 +406,7 @@ object QualityClassifier {
     * at its flat ~0.6 s (stream-illegal: stateful re-aggregation),
     * and the one-row broadcast map climbs 1.2→8.3 s (map copied into
     * every joined row — 14× the join at B=16k). The r11 ceiling sweep
-    * (DenseCeilingExp) extends the law to production widths:
+    * (NOTES_r11 / SCALE_DECADES_r11) extends the law to production widths:
     * 0.18/0.16/0.20/0.24 s at B = 16k/64k/256k/1M — flat to 1M under
     * the [[DenseLit]] UnsafeArrayData encoding (the boxed typedlit
     * encoding grew to 2.34 s at 1M from per-action object-graph

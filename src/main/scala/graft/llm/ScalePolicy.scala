@@ -78,7 +78,7 @@ object ScalePolicy {
   }
 
   /** [[Similarity.mipsLshTopK]] under the SAME occupancy policies as
-    * [[lshTopKAuto]]: MipsScaleExp measured the LIFTED space
+    * [[lshTopKAuto]]: the r12 sweep measured the LIFTED space
     * following the cosine occupancy law (SCALE_DECADES_r12
     * `mips_lift_occupancy_law` — fixed 16×6 grows 3.8× over the
     * 20k→200k decade while finer-bits+probes beats it on both time
@@ -155,8 +155,8 @@ object ScalePolicy {
     * buckets query-side, probes = bits — recall restoration at
     * (1+bits)x query cost, index unchanged). The driver queries pin 16×6 (their oracles restate the
     * exact planes); at 200k vectors the pinned planes were measured
-    * quadratic (93.6 s vs the policy arm — LabelScaleExp), the same
-    * law as every other fixed-bits member.
+    * quadratic (93.6 s vs the policy arm — NOTES_r7 /
+    * SCALE_DECADES_r7), the same law as every other fixed-bits member.
     */
   def labelPlanesFor(corpus: Long, dim: Int = 64,
                      targetOccupancy: Int = 20): Seq[Seq[Seq[Double]]] = {

@@ -56,8 +56,9 @@ object SemDedup {
     * ([[AnnIndex.buildIvf]]'s `(vectors, _, quantizer)` tables) — the
     * nightly-dedup shape: the Lloyd training the monolithic form
     * repeats per run (the measured ~6× dominant cost of the 20k/64-cell
-    * build, AnnIndexExp) is read from the index instead. The centroid
-    * distance the dominance rule needs is recomputed MAP-SIDE from the
+    * build, NOTES_r8 / SCALE_DECADES_r8) is read from the index
+    * instead. The centroid distance the dominance rule needs is
+    * recomputed MAP-SIDE from the
     * quantizer (`nrm + cn − 2·v·cv` — the assignment's own expression,
     * so bit-equal to kmeansCells' `dist` column; SemDedupSpec pins
     * indexed == monolithic through a parquet round-trip).

@@ -61,7 +61,7 @@ object Winnow {
     // Fused kernels when the session carries GraftExtensions: the
     // HOF gram hashing (per-gram md5 → hex → conv, interpreted) and
     // the O(len·w) boxed window-min fold are the measured map-side
-    // cost of this operator family (tools/HashExp: ~3 s per gram pass
+    // cost of this operator family (OPTIMIZATION_r12: ~3 s per gram pass
     // at sf0.1). Bit-equal incl. dedup order (TextHashExpressionsSpec).
     val native = TextHash.nativeHash(df.sparkSession, "wordgram_h32")
     val hs =

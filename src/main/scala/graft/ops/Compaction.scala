@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * `merge(stats(A), stats(B)) == stats(A ∪ B)` bit-for-bit (proved by
   * the `incremental_stats` oracle, which IS the plain full-table
   * GROUP BY, and property-checked over random splits in
-  * CompactionSpec).
+  * OpPropertySpec).
   *
   * This is the 100 TB daily-pipeline shape: each day aggregates only
   * its delta (O(day)), then one tiny merge over #keys rows folds it

@@ -266,9 +266,11 @@ object AnalyticsQueries {
     //    « 0.5 and round() recovers the integer exactly.
     // 2. Per-row products are single LONG multiplies: the largest,
     //    p_u², is ≤ (1.05·10⁹)² = 1.103·10¹⁸ < 2⁶³−1 (8.4×
-    //    headroom). ENFORCED, not assumed: the aggregate carries
-    //    max(abs(unscaled)) per column and the 3-row tail raises
-    //    an error if any exceeds √(2⁶³−1) ≈ 3.03·10⁹.
+    //    headroom). ENFORCED, not assumed: each row raises an error
+    //    before any product if an unscaled value is negative or
+    //    exceeds √(2⁶³−1) ≈ 3.03·10⁹, so the named precondition
+    //    fires under ANSI arithmetic too (a square would overflow
+    //    first otherwise).
     // 3. Sums are exact DECIMAL(38,0) over the long products —
     //    capacity 10³⁸ covers any row count to 10¹⁹.
     // 4. The one double per moment is produced by BigDecimal
@@ -285,9 +287,16 @@ object AnalyticsQueries {
     // columns (error « 0.5, point 1 above) and is a pure codegen
     // primitive — Spark's round() routes every double through a
     // per-row BigDecimal.setScale (measured 0.9 s of the query)
-    def u(c: String) =
-      (col(c).cast(DecimalType(12, 4)).cast("double") * lit(1e4) + lit(0.5))
+    def u(c: String) = {
+      val v = (col(c).cast(DecimalType(12, 4)).cast("double") * lit(1e4) + lit(0.5))
         .cast("long")
+      when(v > lit(3037000499L) || v < lit(0L),
+        raise_error(lit("corr_features needs l_quantity, l_extendedprice and " +
+          "l_discount non-negative with DECIMAL(12,4) unscaled values at most " +
+          "3037000499 (sqrt(Long.MaxValue)), so per-row products fit a long"))
+          .cast("long"))
+        .otherwise(v)
+    }
     val li = lineitem.select(
       col("l_returnflag"),
       u("l_quantity").as("qu"),
@@ -299,20 +308,8 @@ object AnalyticsQueries {
       s38(col("qu")).as("squ"), s38(col("pu")).as("spu"), s38(col("du")).as("sdu"),
       s38(col("qu") * col("pu")).as("sqpu"), s38(col("qu") * col("du")).as("sqdu"),
       s38(col("qu") * col("qu")).as("sqqu"), s38(col("pu") * col("pu")).as("sppu"),
-      s38(col("du") * col("du")).as("sddu"),
-      greatest(max(abs(col("qu"))), max(abs(col("pu"))),
-        max(abs(col("du")))).as("__maxu"),
-      least(min(col("qu")), min(col("pu")), min(col("du"))).as("__minu"))
-    // the guard rides n's value path (+0 when in range) so it can
-    // never be pruned: 3 rows, zero cost, hard failure on any
-    // out-of-range input instead of a silent long overflow
-    val guardedN = (col("n") +
-      when(col("__maxu") > lit(3037000499L) || col("__minu") < lit(0L),
-        raise_error(lit("corr_features needs l_quantity, l_extendedprice and " +
-          "l_discount non-negative with DECIMAL(12,4) unscaled values at most " +
-          "3037000499 (sqrt(Long.MaxValue)), so per-row products fit a long")).cast("long"))
-        .otherwise(lit(0L))).as("n")
-    val scaled = m.select(col("l_returnflag"), guardedN,
+      s38(col("du") * col("du")).as("sddu"))
+    val scaled = m.select(col("l_returnflag"), col("n"),
       rescale(col("squ"), lit(4)).as("sq"),
       rescale(col("spu"), lit(4)).as("sp"),
       rescale(col("sdu"), lit(4)).as("sd"),

@@ -1528,7 +1528,7 @@ object CurationQueries {
 
   /** The hashed model served through the dense O(1) array-literal form
     * (QualityClassifier.serveDense + nbScoreDense) — the flat-in-B
-    * stream serving shape NbServeExp r10 measured as the winner for
+    * stream serving shape NOTES_r10 records as the winner for
     * hashed features (map lookups are linear key scans; the broadcast
     * map row additionally copies the model into every joined row).
     * Same scores as nb_quality_hashed by construction; the oracle

@@ -395,7 +395,7 @@ object LlmQueries {
     * knob; the r5 sf1 curve measured 16×6 at 12.2× for 10× corpus)
     * with each query also probing its 10 Hamming-distance-1 buckets
     * per group, recovering the recall finer buckets lose at
-    * query-side-only cost. Measured at sf1 (LshScaleExp, interleaved
+    * query-side-only cost. Measured at sf1 (NOTES_r5, interleaved
     * arms): 16×10+p10 = 3.93 s / recall 0.760 vs baseline 16×6 =
     * 4.63 s / 0.710 — better on BOTH axes. Planes stay md5-derived ⇒
     * full DuckDB oracle (probe = bucket XOR single-bit masks).
@@ -618,7 +618,7 @@ object LlmQueries {
     * it, including through a parquet round-trip), so the identical
     * oracle SQL anchors this path independently. The split matters
     * MOST here: the monolithic composition repeats the Lloyd
-    * training every query batch (AnnIndexExp measures the curve).
+    * training every query batch (NOTES_r8 / SCALE_DECADES_r8 record the curve).
     */
   /** SemDeDup over the PERSISTED IVF index (SemDedup
     * .semanticDedupIndexed): Lloyd cells + quantizer read from the
@@ -1314,7 +1314,7 @@ object LlmQueries {
     * per-block pair space shrinks ~8× and STAYS bounded as the corpus
     * grows (bits grow with log₂(corpus); a fixed 10-label vocabulary
     * makes Σ cell² quadratic — `knn_graph` measured 8.6× for 10× data
-    * on the r5 sf1 slice). Measured at sf1 (KnnBlockExp, interleaved
+    * on the r5 sf1 slice). Measured at sf1 (NOTES_r5, interleaved
     * arms): 10.2 → 1.1 s (9.6×) at 3 bits, mean edge cosine 0.337 vs
     * 0.389 optimal (87%), strict edge agreement 0.24 — the blocking
     * tradeoff is geometry-dependent, and this synthetic corpus is
@@ -2206,7 +2206,7 @@ object LlmQueries {
     * but top-5 exact-cosine rank against the persisted index — the
     * batch probe surface whose bit-equality to the monolithic lshTopK
     * AnnIndexSpec pins (the index amortizes corpus bucketing across
-    * query batches; AnnIndexExp measures the curve).
+    * query batches; NOTES_r8 / SCALE_DECADES_r8 record the curve).
     */
   val annIndexTopkQ: Q = Q(
     "ann_index_topk",
@@ -2364,7 +2364,7 @@ object LlmQueries {
   )
 
   /** The MEASURED-better MIPS arm as its own full oracle: 16×10
-    * lifted buckets + 10 Hamming-1 probes — MipsScaleExp
+    * lifted buckets + 10 Hamming-1 probes — the r12 sweep
     * (SCALE_DECADES_r12 `mips_lift_occupancy_law`) shows this beats
     * the 16×6 form on BOTH axes at the 200k-corpus decade (6.5 s /
     * recall 0.850 vs 7.4 s / 0.795): finer buckets hold occupancy as

@@ -11,7 +11,9 @@ import graft.ops.{Candles, Envelope}
 /** Streaming pipeline assembly — the reference's five jobs re-expressed
   * as Structured Streaming plans (SURVEY.md §2.1/2.2/2.9, §3.1-3.2).
   *
-  * The Kafka boundary is pluggable ([[SourceSpec]]/[[SinkSpec]]): the
+  * The Kafka boundary is pluggable ([[graft.sources.OffsetFileSource]]
+  * stands in for the connector; `KafkaFormatSpec`/`SinkSpec` pin both
+  * ends): the
   * downstream plan is identical whether the source is
   * `format("kafka")` in production or a file/MemoryStream source in
   * tests (no kafka connector jar offline — SURVEY.md §7). This is the
@@ -152,7 +154,7 @@ object Streams {
     *
     * Exactly-once then follows from latestMerge idempotence
     * (`latest(state ∪ batch)` twice = once, proved in
-    * `OpsPropertySpec`) — now for crash-DURING-write as well as
+    * `UpsertSinkSpec`) — now for crash-DURING-write as well as
     * crash-before-write.
     *
     * Scale notes: each micro-batch is one keyed reduction over

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.llm.{AnnIndex, Similarity}
 
 /** The IVF index lifecycle as a USER-OPERABLE runnable (r10 verdict
@@ -131,13 +132,7 @@ object AnnLifecycle {
     val Array(path, idCol, vecCol, indexDir) = args.take(4)
     val cells = args.lift(4).map(_.toInt).getOrElse(64)
     val deltaPath = args.lift(5)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val corpus = spark.read.parquet(path)
     val delta = deltaPath.map(spark.read.parquet(_))
     run(spark, corpus, idCol, vecCol, indexDir, cells, delta)

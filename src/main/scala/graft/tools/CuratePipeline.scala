@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Session
 import graft.llm.{Dedup, TextHash, TextStats}
 import graft.ops.PrefixSum
 
@@ -118,13 +119,7 @@ object CuratePipeline {
     }
     val Array(path, idCol, textCol, outDir) = args.take(4)
     val budget = args.lift(4).map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     run(spark, spark.read.parquet(path), idCol, textCol, outDir, budget)
       .foreach(s => println(s.json))
     spark.stop()

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Interleaved A/B harness for runtime-knob experiments (dev-side, not
   * part of the driver contract). Sequential whole-process benchmarks
@@ -37,13 +35,7 @@ object LoopExp {
           .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     def withProps[T](props: Map[String, String])(body: => T): T = {
       val saved = props.keys.map(k => k -> sys.props.get(k)).toMap

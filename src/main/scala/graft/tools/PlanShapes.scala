@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+
+import graft.Session
 
 /** Plan-shape ledger (r11 verdict #6 — drift_check's PLAN-level twin):
   * dumps, per registry query, the structural facts the flagship
@@ -73,15 +74,8 @@ object PlanShapes {
     val outJson = args.lift(1).getOrElse("PLAN_SHAPES.json")
     val only = args.drop(2).flatMap(_.split(",")).map(_.trim)
       .filter(_.nonEmpty).toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val qs = graft.queries.Registry.all
       .filter(q => only.isEmpty || only(q.name))

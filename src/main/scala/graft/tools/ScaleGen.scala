@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Generates a COMPLETE sf1 slice (default 10× sf0.1) — every table
   * the engine reads — so the full 125-query surface can run at the
@@ -73,12 +75,7 @@ object ScaleGen {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(AllTables)
     require(want.subsetOf(AllTables), s"unknown tables: ${want -- AllTables}")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     import spark.implicits._
 
     lazy val orders   = spark.read.parquet(s"$src/orders.parquet")

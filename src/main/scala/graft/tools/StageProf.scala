@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Per-stage profile of one registry query (dev-side, guide §1.1/§7.1:
   * "open the UI, find the slowest stage" — headless equivalent). Runs
@@ -19,14 +18,7 @@ object StageProf {
     val sfDir = args(0)
     val query = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     case class St(id: Int, name: String, ms: Long, tasks: Int,
                   gcMs: Long, shufReadMB: Double, shufWriteMB: Double,
@@ -71,7 +63,7 @@ object StageProf {
     }
     // listener events are posted asynchronously; give the bus a moment
     Thread.sleep(1500)
-    println(f"\n=== $query @ $sfDir, local[$cpus]: last run $last%.3f s, $jobs jobs, ${stages.size} stages ===")
+    println(f"\n=== $query @ $sfDir, local[${spark.sparkContext.defaultParallelism}]: last run $last%.3f s, $jobs jobs, ${stages.size} stages ===")
     println(f"${"stage"}%6s ${"ms"}%7s ${"tasks"}%5s ${"gcMs"}%6s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"in_MB"}%8s  name")
     stages.sortBy(-_.ms).foreach { s =>
       println(f"${s.id}%6d ${s.ms}%7d ${s.tasks}%5d ${s.gcMs}%6d ${s.shufReadMB}%8.2f ${s.shufWriteMB}%8.2f ${s.inputMB}%8.2f  ${s.name}")

@@ -1,10 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.llm.Dedup
 import graft.stream.{StatefulFeatures, StreamDedup, Streams}
 
@@ -58,16 +59,9 @@ object StreamBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(5)
     val outJson = args.lift(2).getOrElse("STREAMBENCH_r6.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "200")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     import spark.implicits._
 
     val work = java.nio.file.Files.createTempDirectory("streambench").toFile
@@ -211,9 +205,10 @@ object StreamBench {
       nbHashedModel, nbHashedPrior, 4096)
     println(s"nb hashed model features=${nbHm.size} (B=4096)")
     // r11 (verdict #6): the same gate a DECADE past where the map
-    // literal cliffed — B=65536, inside the DenseCeilingExp
-    // measured-flat band. Throughput must hold ~flat vs the 4096 row
-    // (the 0.5 MB UnsafeArrayData literal is one memcpy per action).
+    // literal cliffed — B=65536, inside the measured-flat band of
+    // NOTES_r11 / SCALE_DECADES_r11. Throughput must hold ~flat vs the
+    // 4096 row (the 0.5 MB UnsafeArrayData literal is one memcpy per
+    // action).
     val nbHashed64kModel = graft.llm.QualityClassifier.nbModel(
       nbTrain, "text", nbPos,
       graft.llm.QualityClassifier.hashedFeature(65536)).localCheckpoint()
@@ -300,11 +295,11 @@ object StreamBench {
       "nb_quality_score_hashed" -> (() => graft.llm.QualityClassifier
         .nbScoreBroadcast(docSource(), "id", "text", nbHashedRow, nbHashedFeat)),
       // same model forced through the literal path — the stream side of
-      // NbServeExp's crossover table
+      // the NOTES_r9 crossover table
       "nb_quality_score_hashed_lit" -> (() => graft.llm.QualityClassifier
         .nbScoreMap(docSource(), "id", "text", nbHm, nbHoov, nbHprior, nbHashedFeat)),
       // dense O(1) array-literal serving of the same hashed model —
-      // flat in B (NbServeExp r10), the winning stream form for hashed
+      // flat in B (NOTES_r10), the winning stream form for hashed
       // features at any bucket count
       "nb_quality_score_hashed_dense" -> (() => graft.llm.QualityClassifier
         .nbScoreDense(docSource(), "id", "text", nbDllr, nbDocc, nbDprior, 4096)),
@@ -321,8 +316,8 @@ object StreamBench {
       "dsir_score" -> (() => graft.llm.Dsir.scoreWith(
         docSource(), "id", "text", dsirModel, defaultMicro = 0L,
         buckets = 1024)),
-      // same model as a dense O(1) array literal (r10, the NbServeExp
-      // law applied to DSIR) — the production path importanceWeights
+      // same model as a dense O(1) array literal (the NOTES_r10
+      // serving law applied to DSIR) — the production path importanceWeights
       // now serves below the ceiling
       "dsir_score_dense" -> (() => graft.llm.Dsir.scoreDense(
         docSource(), "id", "text",

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.llm.{Bpe, Chunking, Wordpiece}
 
 /** The full north-star path as ONE runnable (r11 verdict #5): raw
@@ -103,13 +104,7 @@ object TrainShards {
     val seqLen = args.lift(5).map(_.toInt).getOrElse(1024)
     val merges = args.lift(6).map(_.toInt).getOrElse(32)
     val perShard = args.lift(7).map(_.toInt).getOrElse(1024)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     run(spark, spark.read.parquet(path), idCol, textCol, outDir,
       budget, seqLen, merges, perShard)
       .foreach(s => println(s.json))

@@ -128,7 +128,7 @@ class DsirSpec extends SparkSpec {
 
   test("above the dense-model bucket ceiling, weights route to the broadcast-join form") {
     // r11: the dense UnsafeArrayData literal is measured flat to 1M
-    // buckets (DenseCeilingExp), so the dispatch ceiling moved from
+    // buckets (NOTES_r11 / SCALE_DECADES_r11), so the dispatch ceiling moved from
     // the janino map-literal bound (2048) to the measured dense width
     // (DenseModelMaxBuckets = 1M). Past it the plan must carry the
     // model as a join, not a literal; at DSIR's production 10k — the

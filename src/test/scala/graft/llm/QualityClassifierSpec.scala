@@ -142,7 +142,7 @@ class QualityClassifierSpec extends SparkSpec {
     assert(!autoSmall.queryExecution.executedPlan.toString().contains("Exchange"))
     // the two serving paths are bit-equal (pinned by the nbScoreMap
     // test above), so dispatch only has to pick one; the join side of
-    // the perf law itself is NbServeExp's measurement, not a unit test
+    // the perf law itself is a measurement (NOTES_r9), not a unit test
     val joinSmall = QualityClassifier.nbScore(tst, "doc_id", "text", mSmall, prior)
     assert(autoSmall.orderBy("doc_id").collect().toSeq ===
       joinSmall.orderBy("doc_id").collect().toSeq)

@@ -48,23 +48,12 @@ class CorrMomentsSpec extends SparkSpec {
       messages(intercept[Exception] {
         AnalyticsQueries.corrFeaturesOf(frame(inRange :+ bad: _*)).collect()
       })
-    // without ANSI arithmetic a long product wraps silently: the guard
-    // is then the only thing between an oversized value and a wrong
-    // correlation
-    val ansi = "spark.sql.ansi.enabled"
-    val saved = spark.conf.get(ansi)
-    try {
-      spark.conf.set(ansi, "false")
-      for (bad <- Seq(negative, oversized)) {
-        val msgs = run(bad)
-        assert(msgs.exists(_.contains("corr_features needs")), msgs)
-      }
-    } finally spark.conf.set(ansi, saved)
-    // under ANSI (the default) the negative value still meets the
-    // guard; the oversized one overflows its square first, which fails
-    // the query just as hard
-    val msgs = run(negative)
-    assert(msgs.exists(_.contains("corr_features needs")), msgs)
-    run(oversized)
+    // each row is checked before its products, so under ANSI (the
+    // default) the oversized value meets the named guard instead of
+    // a generic overflow of its square
+    for (bad <- Seq(negative, oversized)) {
+      val msgs = run(bad)
+      assert(msgs.exists(_.contains("corr_features needs")), msgs)
+    }
   }
 }
