@@ -533,7 +533,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2, "winnow_mins takes (hs, w)")
         WinnowMins(children.head, litInt(children(1), "winnow_mins"))
       }))
-    // whole-operator extension: native as-of join (SURVEY §7.3 (c))
+    // whole-operator extension: the as-of join (SURVEY §7.3 (c))
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
   }
 }

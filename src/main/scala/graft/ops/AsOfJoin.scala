@@ -1,9 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, RowOrdering}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.GraftSqlShim
+import org.apache.spark.sql.types.{ByteType, DayTimeIntervalType, IntegerType, LongType, ShortType,
+  TimestampType}
+
+import graft.plans.AsOfJoinNode
 
 /** As-of join — the reference's only join (SURVEY.md J1+W4,
   * `processing_raw_data_from_gcs.py:143-159`): attach to each left row
@@ -15,25 +19,23 @@ import org.apache.spark.sql.graftshim.GraftSqlShim
   * `row_number` rank; that form tests every left row against every
   * right row of its key, so its cost grows with the product of the two
   * sides per key (the reference has three codes). Here the join is one
-  * pass over the union of both sides instead: left and right rows are
-  * tagged, partitioned by key, sorted by time, and each left row picks
-  * up the nearest right payload seen so far with `last(_, ignoreNulls)`
-  * over a running frame. One shuffle, one sort per direction, cost
-  * linear in the input. `AsOfJoinReference` in the test tree keeps the
-  * join+rank form as the specification these results must equal.
+  * [[graft.plans.AsOfJoinNode]], planned by the
+  * [[graft.functions.GraftExtensions]] strategy as
+  * [[graft.plans.AsOfJoinExec]]: both sides hash-partitioned on the key
+  * and sorted by (key, time), then one merge pass per partition holding
+  * O(1) state. `AsOfJoinReference` in the test tree keeps the join+rank
+  * form as the specification these results must equal.
   */
 object AsOfJoin {
 
   val Directions: Seq[String] = Seq("backward", "forward", "nearest")
 
-  private val Key = "__asof_k"
-  private val Time = "__asof_t"
-  private val Side = "__asof_side"
-  private val Payload = "__asof_r"
-  private val LeftRow = "__asof_l"
-  private val Back = "__asof_b"
-  private val Fwd = "__asof_f"
-  private val Match = "__asof_m"
+  /** The right key's name inside the join, so that it never shares a
+    * name (and, through the alias, an attribute) with the left key.
+    */
+  private val RightKey = "__asof_rk"
+
+  private val Extensions = classOf[graft.functions.GraftExtensions].getName
 
   /** Backward as-of, the reference's semantics. */
   def joined(left: DataFrame, right: DataFrame, key: String,
@@ -64,56 +66,71 @@ object AsOfJoin {
     * never matches. Right timestamps must be unique per key (the
     * shared determinism contract of every rank-1 pick in this engine).
     *
-    * Backward sorts each key's rows by time ascending, forward by time
-    * descending, with right rows ahead of left rows at equal times so
-    * that both bounds are inclusive; nearest runs both sorts over the
-    * same shuffle. Forward reverses the order rather than use a
-    * `currentRow … unboundedFollowing` frame, which Spark recomputes
-    * for every row.
+    * Both time columns are timestamps with a day-time interval
+    * `tolerance`, or both longs with an integral one. The tolerance is a
+    * constant, evaluated once here on the driver. The session must carry
+    * [[graft.functions.GraftExtensions]], whose strategy plans the join.
+    * Each of these, the direction and matching key types are checked
+    * here, before anything runs.
     */
   def directional(left: DataFrame, right: DataFrame, key: String,
                   leftTs: String, rightTs: String, tolerance: Column,
                   direction: String): DataFrame = {
     require(Directions.contains(direction),
-      s"direction must be backward|forward|nearest, got $direction")
-    val rightCols = right.columns.toSeq.filter(_ != key)
-    val rTagged = right
-      .filter(col(key).isNotNull && col(rightTs).isNotNull)
-      .select(col(key).as(Key), col(rightTs).as(Time), lit(0).as(Side),
-        struct(rightCols.map(col): _*).as(Payload))
-    val lTagged = left
-      .select(col(key).as(Key), col(leftTs).as(Time), lit(1).as(Side),
-        lit(null).cast(rTagged.schema(Payload).dataType).as(Payload),
-        struct(left.columns.toIndexedSeq.map(col): _*).as(LeftRow))
-    val rPadded = rTagged
-      .withColumn(LeftRow, lit(null).cast(lTagged.schema(LeftRow).dataType))
+      s"direction must be ${Directions.mkString("|")}, got $direction")
+    val spark = left.sparkSession
+    requireExtensions(spark.conf.getOption("spark.sql.extensions"))
+    // a null key or right time never matches: drop those rows before the
+    // shuffle, where the filter reaches the scan
+    val r = right.filter(col(key).isNotNull && col(rightTs).isNotNull)
+      .withColumnRenamed(key, RightKey)
+    val (lk, lt, rk, rt) = (attr(left, key), attr(left, leftTs), attr(r, RightKey), attr(r, rightTs))
+    // keys feed a hash ClusteredDistribution and an interpreted ordering,
+    // both type-sensitive: an int/bigint mismatch would pass analysis but
+    // mis-co-partition, so fail here
+    require(lk.dataType == rk.dataType, s"as-of key columns must have identical types, got " +
+      s"${lk.dataType.simpleString}/${rk.dataType.simpleString}")
+    require(RowOrdering.isOrderable(lk.dataType),
+      s"as-of key type ${lk.dataType.simpleString} has no ordering")
+    require(Seq(TimestampType, LongType).contains(lt.dataType) && rt.dataType == lt.dataType,
+      s"as-of time columns must both be timestamp or long, got " +
+        s"${lt.dataType.simpleString}/${rt.dataType.simpleString}")
+    val node = AsOfJoinNode(GraftSqlShim.analyzed(left), GraftSqlShim.analyzed(r), lk, lt, rk, rt,
+      toleranceOf(spark, tolerance, lt.dataType == TimestampType), direction)
+    GraftSqlShim.ofRows(spark, node).drop(RightKey)
+  }
 
-    val t = col(Time)
-    def carried(df: DataFrame, name: String, timeOrder: Column): DataFrame =
-      df.withColumn(name, last(col(Payload), ignoreNulls = true).over(Window
-        .partitionBy(Key).orderBy(timeOrder, col(Side))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // latest right row at or before t / earliest at or after t
-    val unioned = rPadded.union(lTagged)
-    val withBack = if (direction == "forward") unioned else carried(unioned, Back, t.asc)
-    val withBoth = if (direction == "backward") withBack else carried(withBack, Fwd, t.desc)
-    def rt(name: String): Column = col(name).getField(rightTs)
-    def back = when(rt(Back) >= t - tolerance, col(Back))
-    def fwd = when(rt(Fwd) <= t + tolerance, col(Fwd))
-    val matched = direction match {
-      case "backward" => back
-      case "forward" => fwd
-      case "nearest" =>
-        when(fwd.isNull || (back.isNotNull && t - rt(Back) <= rt(Fwd) - t), back)
-          .otherwise(fwd)
+  /** Fails unless the `spark.sql.extensions` value names
+    * [[graft.functions.GraftExtensions]]: without its strategy the
+    * planner has no plan for [[graft.plans.AsOfJoinNode]].
+    */
+  def requireExtensions(extensions: Option[String]): Unit =
+    if (!extensions.exists(_.split(",").map(_.trim).contains(Extensions)))
+      throw new IllegalStateException(s"the as-of join needs $Extensions, which this session " +
+        s"lacks (spark.sql.extensions = ${extensions.getOrElse("unset")}); build the session " +
+        "with graft.Session.local")
+
+  private def attr(df: DataFrame, name: String): Attribute = {
+    val out = GraftSqlShim.analyzed(df).output
+    out.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"as-of column $name not in [${out.map(_.name).mkString(", ")}]"))
+  }
+
+  /** The tolerance in the time columns' unit: µs for a day-time
+    * interval against timestamps, the value itself for an integral
+    * constant against longs.
+    */
+  private def toleranceOf(spark: SparkSession, tolerance: Column, timestamps: Boolean): Long = {
+    val e = GraftSqlShim.expression(spark, tolerance)
+    require(e.resolved && e.foldable, s"as-of tolerance must be a constant, got $e")
+    val v = e.eval()
+    require(v != null, "as-of tolerance must not be null")
+    e.dataType match {
+      case _: DayTimeIntervalType if timestamps => v.asInstanceOf[Long]
+      case ByteType | ShortType | IntegerType | LongType if !timestamps => v.asInstanceOf[Number].longValue
+      case t => throw new IllegalArgumentException(s"as-of tolerance of type ${t.simpleString} " +
+        s"does not fit ${if (timestamps) "timestamp" else "long"} time columns: a timestamp " +
+        "takes a day-time interval, a long an integral constant")
     }
-    val leftOut = left.schema.fields.toSeq.map { f =>
-      val c = col(LeftRow).getField(f.name)
-      (if (f.nullable) c else GraftSqlShim.knownNotNull(c)).as(f.name)
-    }
-    withBoth
-      .filter(col(Side) === 1)
-      .withColumn(Match, matched)
-      .select(leftOut ++ rightCols.map(c => col(Match).getField(c).as(c)): _*)
   }
 }

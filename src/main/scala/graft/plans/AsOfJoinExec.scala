@@ -1,104 +1,49 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences,
-  Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
+  Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.graftshim.GraftSqlShim
-import org.apache.spark.sql.types.{LongType, TimestampType}
 
-/** Native as-of join — SURVEY.md §7.3 path (c): a whole-operator
-  * semantics Spark's built-ins can only express as an equi+band join
-  * followed by a row_number dedup (reference
-  * `processing_raw_data_from_gcs.py:143-159`). That formulation
-  * duplicates every left row once per in-band right row BEFORE the
-  * rank filter — O(left × band-density) intermediate blowup on dense
-  * right sides. This operator plans it as what it is: both sides
+/** The as-of join as one logical operator, built (and its inputs
+  * checked) only by `graft.ops.AsOfJoin.directional`. Spark's built-ins
+  * can express it only as an equi+band join followed by a row_number
+  * dedup (reference `processing_raw_data_from_gcs.py:143-159`), which
+  * duplicates every left row once per in-band right row before the rank
+  * filter. This operator plans it as what it is: both sides
   * hash-partitioned on the key and sorted by (key, time), then ONE
-  * streaming merge pass per partition holding O(1) state (the last
-  * right row ≤ the current left time). Cost: two sort-shuffles and a
-  * linear merge, independent of band density — strictly the
-  * SortMergeJoin shape without the per-band duplication.
+  * streaming merge pass per partition holding O(1) state. Cost: two
+  * sort-shuffles and a linear merge, independent of band density.
   *
-  * Wiring: [[AsOfJoinNode]] (logical, built directly on analyzed
-  * child plans) → [[AsOfJoinStrategy]] (injected via
+  * Wiring: [[AsOfJoinNode]] (logical, on analyzed child plans) →
+  * [[AsOfJoinStrategy]] (injected via
   * `GraftExtensions.injectPlannerStrategy`) → [[AsOfJoinExec]]
   * (physical; `requiredChildDistribution`/`Ordering` make
   * EnsureRequirements insert the exchanges and sorts).
   *
-  * Semantics = `AsOfJoin.directional` (left outer) in all three
-  * pandas-`merge_asof` directions, selected by `direction`:
+  * `direction` is one of the pandas-`merge_asof` directions
+  * (`AsOfJoin.Directions`):
   *
-  *  - `backward` (default) — latest right with rightTime ≤ leftTime
-  *    and leftTime − rightTime ≤ tolerance
+  *  - `backward` — latest right with rightTime ≤ leftTime and
+  *    leftTime − rightTime ≤ tolerance
   *  - `forward` — earliest right with rightTime ≥ leftTime and
   *    rightTime − leftTime ≤ tolerance
   *  - `nearest` — right minimizing |rightTime − leftTime| within
   *    ±tolerance; equidistant ties break to the EARLIER right row
-  *    (same contract as the DuckDB join+rank oracles)
   *
-  * All three share one physical shape: the same co-partition + co-sort
-  * requirements, one forward-only merge pass, O(1) per-partition state
-  * (backward keeps the last right row ≤ t; forward keeps only the
-  * lookahead; nearest keeps both and picks the closer). Proven on the
-  * same DuckDB oracles (`asof_join_native`,
-  * `asof_join_forward_native`, `asof_join_nearest_native`) and by
-  * direct equality in AsOfJoinNativeSpec.
-  */
-object AsOfJoinNative {
-
-  val Directions: Set[String] = Set("backward", "forward", "nearest")
-
-  /** Build the DataFrame. `leftTimeCol`/`rightTimeCol` must be
-    * TimestampType or LongType; key columns any atomic type with an
-    * ordering. Output = left columns ++ right columns (nullable).
-    * `tolerance` is in the time columns' native unit (µs for
-    * TimestampType).
-    */
-  def join(left: DataFrame, right: DataFrame,
-           leftKeyCol: String, leftTimeCol: String,
-           rightKeyCol: String, rightTimeCol: String,
-           tolerance: Long, direction: String = "backward"): DataFrame = {
-    val spark = left.sparkSession
-    val lp = GraftSqlShim.analyzed(left)
-    val rp = GraftSqlShim.analyzed(right)
-    def attr(p: LogicalPlan, name: String): Attribute =
-      p.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $name not in [${p.output.map(_.name).mkString(", ")}]"))
-    GraftSqlShim.ofRows(spark,
-      AsOfJoinNode(lp, rp, attr(lp, leftKeyCol), attr(lp, leftTimeCol),
-        attr(rp, rightKeyCol), attr(rp, rightTimeCol), tolerance, direction))
-  }
-}
-
-/** Logical node: carries resolved child plans + join attributes.
-  * `output` nullifies the right side (left outer semantics).
+  * Time columns are both TimestampType or both LongType; `tolerance` is
+  * in their unit (µs for TimestampType). Key columns share one
+  * orderable type. `output` nullifies the right side (left outer
+  * semantics).
   */
 case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
                         leftKey: Attribute, leftTime: Attribute,
                         rightKey: Attribute, rightTime: Attribute,
-                        tolerance: Long,
-                        direction: String = "backward") extends BinaryNode {
-  require(AsOfJoinNative.Directions.contains(direction),
-    s"direction must be one of ${AsOfJoinNative.Directions.mkString("|")}, got $direction")
-  require(Seq(TimestampType, LongType).contains(leftTime.dataType) &&
-    rightTime.dataType == leftTime.dataType,
-    s"as-of time columns must both be timestamp or long, got " +
-      s"${leftTime.dataType.simpleString}/${rightTime.dataType.simpleString}")
-  // keys feed a hash ClusteredDistribution and an interpreted ordering,
-  // both type-sensitive: an int/bigint mismatch would pass analysis but
-  // mis-co-partition (or CCE at execution), so fail fast here
-  require(leftKey.dataType == rightKey.dataType,
-    s"as-of key columns must have identical types, got " +
-      s"${leftKey.dataType.simpleString}/${rightKey.dataType.simpleString}")
-  require(RowOrdering.isOrderable(leftKey.dataType),
-    s"as-of key type ${leftKey.dataType.simpleString} has no ordering")
+                        tolerance: Long, direction: String) extends BinaryNode {
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))

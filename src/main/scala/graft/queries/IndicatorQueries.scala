@@ -335,10 +335,9 @@ object IndicatorQueries {
     * unique per key (the events table guarantees it) — equal-ts
     * quotes would make the picked mid engine-dependent.
     *
-    * Scale: two as-of joins, each one shuffle and one sorted pass of
-    * AsOfJoin.directional over the union of trades and quotes per user
-    * (the native operator slots in unchanged); output is one row per
-    * trade.
+    * Scale: two as-of joins, each a co-partitioned merge pass of
+    * AsOfJoin.directional over the trades and quotes of each user;
+    * output is one row per trade.
     */
   val tcaSpread: Q = Q(
     "tca_spread",

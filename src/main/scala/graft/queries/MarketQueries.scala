@@ -242,11 +242,6 @@ object MarketQueries {
     """)
   )
 
-  /** As-of join (reference `processing_raw_data_from_gcs.py:143-159`,
-    * J1+W4): dollar bars built from purchase events, each joined to
-    * the latest click event within a 3-day lookback (left outer —
-    * bars with no click in range keep nulls).
-    */
   /** The (bars, clicks) pair every as-of variant joins: purchase
     * dollar-bars as the left/sparse side, clicks as the right/dense
     * side (reference roles).
@@ -284,14 +279,14 @@ object MarketQueries {
 
   /** Forward as-of: the EARLIEST click within 3 days AFTER each bar
     * close — the "next event after" join (pandas merge_asof
-    * direction='forward'); the backward form's single sorted pass with
-    * the time order reversed.
+    * direction='forward'); the same merge pass as the backward form,
+    * matching the pass's lookahead row.
     */
   val asofJoinForward: Q = Q(
     "asof_join_forward",
     (s, dir) => {
       val (bars, clicks) = barsAndClicks(s, dir)
-      graft.ops.AsOfJoin.directional(bars, clicks, "user_id", "end_ts", "click_ts",
+      AsOfJoin.directional(bars, clicks, "user_id", "end_ts", "click_ts",
         expr("INTERVAL 3 DAYS"), "forward")
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("next_click_ts"), col("click_value").as("next_click_value"))
@@ -318,7 +313,7 @@ object MarketQueries {
     "asof_join_nearest",
     (s, dir) => {
       val (bars, clicks) = barsAndClicks(s, dir)
-      graft.ops.AsOfJoin.directional(bars, clicks, "user_id", "end_ts", "click_ts",
+      AsOfJoin.directional(bars, clicks, "user_id", "end_ts", "click_ts",
         expr("INTERVAL 3 DAYS"), "nearest")
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("near_click_ts"), col("click_value").as("near_click_value"))
@@ -337,39 +332,22 @@ object MarketQueries {
     """)
   )
 
+  /** As-of join (reference `processing_raw_data_from_gcs.py:143-159`,
+    * J1+W4): dollar bars built from purchase events, each joined to
+    * the latest click event within a 3-day lookback (left outer —
+    * bars with no click in range keep nulls).
+    */
   val asofJoin: Q = Q(
     "asof_join",
     (s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"),
-          col("value").cast(DecimalType(20, 4)).as("notional"))
-      val bars = DollarBars
-        .bars(purchases, "user_id", "ts", "value", "notional", BarSize)
-        .select("user_id", "bar_num", "close", "end_ts")
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("value").as("click_value"))
+      val (bars, clicks) = barsAndClicks(s, dir)
       AsOfJoin.joined(bars, clicks, "user_id", "end_ts", "click_ts",
         expr("INTERVAL 3 DAYS"))
         .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
           col("click_ts").as("last_click_ts"), col("click_value").as("last_click_value"))
     },
-    Some("""
-      WITH p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
-      t AS (
-        SELECT user_id, ts, value,
-               CAST(sum(CAST(value AS DECIMAL(20,4)))
-                    OVER (PARTITION BY user_id ORDER BY ts
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS DOUBLE) AS cumsum
-        FROM p),
-      b AS (SELECT *, CAST(floor(cumsum / 500.0) AS INT) AS bar_num FROM t),
-      bars AS (
-        SELECT user_id, bar_num, arg_max(value, ts) AS close, max(ts) AS end_ts
-        FROM b GROUP BY 1, 2),
-      c AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click')
+    Some(s"""
+      $asofCtes
       SELECT bars.user_id, bars.bar_num, bars.close, bars.end_ts,
              c.ts AS last_click_ts, c.value AS last_click_value
       FROM bars LEFT JOIN c
@@ -429,99 +407,6 @@ object MarketQueries {
         FROM events GROUP BY 1)
       SELECT user_id, nd[1] / nd[2] AS ewma, n_events FROM f
     """)
-  )
-
-  /** The as-of join kept under its scale-form name: since AsOfJoin has
-    * one formulation (the single-shuffle union + last-value pass), this
-    * is `asof_join` again and shares its oracle.
-    */
-  val asofJoinScalable: Q = Q(
-    "asof_join_scalable",
-    (s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"),
-          col("value").cast(DecimalType(20, 4)).as("notional"))
-      val bars = DollarBars
-        .bars(purchases, "user_id", "ts", "value", "notional", BarSize)
-        .select("user_id", "bar_num", "close", "end_ts")
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("value").as("click_value"))
-      AsOfJoin.joined(bars, clicks, "user_id", "end_ts", "click_ts",
-        expr("INTERVAL 3 DAYS"))
-        .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
-          col("click_ts").as("last_click_ts"), col("click_value").as("last_click_value"))
-    },
-    asofJoin.oracle
-  )
-
-  /** The as-of join through the engine's NATIVE physical operator
-    * (graft.plans.AsOfJoinNative: custom LogicalPlan → injected
-    * SparkStrategy → co-partitioned sorted-merge SparkPlan with O(1)
-    * per-partition state — no per-band row duplication, no
-    * row_number pass). Same semantics ⇒ same oracle as asof_join.
-    */
-  val asofJoinNative: Q = Q(
-    "asof_join_native",
-    (s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"),
-          col("value").cast(DecimalType(20, 4)).as("notional"))
-      val bars = DollarBars
-        .bars(purchases, "user_id", "ts", "value", "notional", BarSize)
-        .select("user_id", "bar_num", "close", "end_ts")
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("r_user"), col("ts").as("click_ts"),
-          col("value").as("click_value"))
-      graft.plans.AsOfJoinNative.join(bars, clicks, "user_id", "end_ts",
-        "r_user", "click_ts", tolerance = 3L * 24 * 3600 * 1000000)
-        .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
-          col("click_ts").as("last_click_ts"), col("click_value").as("last_click_value"))
-    },
-    asofJoin.oracle
-  )
-
-  /** Forward as-of through the native operator — same semantics and
-    * oracle as `asof_join_forward`, but planned as the co-partitioned
-    * sorted-merge pass (the forward match is the merge lookahead
-    * itself, so the pass keeps NO copied state at all).
-    */
-  val asofJoinForwardNative: Q = Q(
-    "asof_join_forward_native",
-    (s, dir) => {
-      val (bars, clicks0) = barsAndClicks(s, dir)
-      val clicks = clicks0.withColumnRenamed("user_id", "r_user")
-      graft.plans.AsOfJoinNative.join(bars, clicks, "user_id", "end_ts",
-        "r_user", "click_ts", tolerance = 3L * 24 * 3600 * 1000000,
-        direction = "forward")
-        .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
-          col("click_ts").as("next_click_ts"), col("click_value").as("next_click_value"))
-    },
-    asofJoinForward.oracle
-  )
-
-  /** Nearest as-of through the native operator — same semantics and
-    * oracle as `asof_join_nearest` (closest click within ±3 days,
-    * equidistant ties to the earlier click); the pass keeps the
-    * backward candidate and compares it against the merge lookahead.
-    */
-  val asofJoinNearestNative: Q = Q(
-    "asof_join_nearest_native",
-    (s, dir) => {
-      val (bars, clicks0) = barsAndClicks(s, dir)
-      val clicks = clicks0.withColumnRenamed("user_id", "r_user")
-      graft.plans.AsOfJoinNative.join(bars, clicks, "user_id", "end_ts",
-        "r_user", "click_ts", tolerance = 3L * 24 * 3600 * 1000000,
-        direction = "nearest")
-        .select(col("user_id"), col("bar_num"), col("close"), col("end_ts"),
-          col("click_ts").as("near_click_ts"), col("click_value").as("near_click_value"))
-    },
-    asofJoinNearest.oracle
   )
 
   /** Per-row expanding EWMA — the scalable secondary-sort
@@ -972,8 +857,7 @@ object MarketQueries {
 
   val all: Seq[Q] = Seq(dollarBars, dollarBarsScalable, tickBars, imbalanceBars,
     candlesTumbling, candlesSliding, candlesVolume, candlesGapFilled,
-    candlesReagg, asofJoin, asofJoinScalable, asofJoinNative, asofJoinForward,
-    asofJoinNearest, asofJoinForwardNative, asofJoinNearestNative,
+    candlesReagg, asofJoin, asofJoinForward, asofJoinNearest,
     ewmaLast, ewmaAdjusted, ewmaRowwise, ofiFlow, ofiBook,
     bookFeatures, bookReplayFinal, rangePairs, distinctUsers, latestPerKey,
     eventEnrich, envelopeRoundtrip)

@@ -28,11 +28,13 @@ object GraftSqlShim {
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
-  /** `c` declared non-nullable, for a value the caller knows is never
-    * null where the analyzer cannot see it (a union padded with typed
-    * nulls, filtered back to the rows that hold real values).
+  /** The Catalyst expression behind a Column, converted by the
+    * session (`classic.SparkSession.expression` is `private[sql]`; the
+    * session-free `ExpressionUtils.expression` only wraps the column
+    * for later conversion), e.g. to evaluate a constant argument once
+    * on the driver.
     */
-  def knownNotNull(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
-      org.apache.spark.sql.classic.ExpressionUtils.expression(c)))
+  def expression(spark: SparkSession, c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
 }

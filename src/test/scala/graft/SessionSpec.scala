@@ -21,8 +21,8 @@ class SessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(dot === 11.0)
   }
 
-  test("plans asof_join_native through AsOfJoinExec") {
-    val df = SparkEntry.queries("asof_join_native")(spark, sf())
+  test("plans asof_join through AsOfJoinExec") {
+    val df = SparkEntry.queries("asof_join")(spark, sf())
     assert(df.collect().nonEmpty)
     val plan = df.queryExecution.executedPlan
     assert(collect(plan) { case e: AsOfJoinExec => e }.size === 1, plan)

@@ -143,4 +143,35 @@ class AsOfJoinSpec extends SparkSpec {
       assertMatchesReference(left, right, s"seed=$seed")
     }
   }
+
+  test("directional rejects bad input at construction, each with a named error") {
+    import spark.implicits._
+    val left = Seq((1L, 10L)).toDF("k", "t")
+    val right = Seq((1L, 5L, 1.0)).toDF("k", "rt", "v")
+    def rejected(l: DataFrame, r: DataFrame, tol: org.apache.spark.sql.Column,
+                 dir: String = "backward") =
+      intercept[IllegalArgumentException](AsOfJoin.directional(l, r, "k", "t", "rt", tol, dir))
+        .getMessage
+    assert(rejected(left.select(col("k"), timestamp_micros(col("t")).as("t")), right,
+      expr("INTERVAL 1 SECOND")).contains("as-of time columns must both be timestamp or long, " +
+      "got timestamp/bigint"))
+    assert(rejected(left.select(col("k"), col("t").cast("string")),
+      right.select(col("k"), col("rt").cast("string"), col("v")), lit(100L))
+      .contains("as-of time columns must both be timestamp or long, got string/string"))
+    assert(rejected(left, right, col("t")).contains("as-of tolerance must be a constant"))
+    assert(rejected(left, right, lit(null).cast("long")).contains("as-of tolerance must not be null"))
+    assert(rejected(left, right, expr("INTERVAL 1 SECOND"))
+      .contains("as-of tolerance of type interval second does not fit long time columns"))
+    assert(rejected(left, right, lit(100L).cast("string"))
+      .contains("as-of tolerance of type string does not fit long time columns"))
+  }
+
+  test("a session without GraftExtensions is rejected, naming the extension and Session.local") {
+    val e = intercept[IllegalStateException](AsOfJoin.requireExtensions(None))
+    assert(e.getMessage.contains("graft.functions.GraftExtensions"))
+    assert(e.getMessage.contains("graft.Session.local"))
+    intercept[IllegalStateException](AsOfJoin.requireExtensions(Some("other.Extensions")))
+    AsOfJoin.requireExtensions(Some("other.Extensions, graft.functions.GraftExtensions"))
+    AsOfJoin.requireExtensions(spark.conf.getOption("spark.sql.extensions"))
+  }
 }

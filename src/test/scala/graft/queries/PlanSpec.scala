@@ -1,11 +1,17 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
+
 import graft.SparkSpec
+import graft.plans.AsOfJoinExec
 
 /** Physical-plan contracts for the headline queries — the shapes the
   * 100 TB design story depends on (EXPLAIN.md).
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("q3_orders: AQE broadcasts the dim sides with no orders-side hint") {
     val df = Registry.byName("q3_orders").fn(spark, sf("sf0.01"))
@@ -448,15 +454,33 @@ class PlanSpec extends SparkSpec {
       s"theilsen_slope lost its measured sample persist:\n${plan.take(3000)}")
   }
 
+  /** The as-of guard: the plan holds the AsOfJoin merge exec, computes no
+    * Window outside the join's inputs, plans no join operator and no
+    * unbounded-following frame.
+    */
+  private def assertOneSortedPass(name: String, df: DataFrame): Unit = {
+    df.collect() // run so AQE finalizes the adaptive plan
+    val executed = df.queryExecution.executedPlan
+    val plan = executed.toString
+    val joins = collect(executed) { case j: AsOfJoinExec => j }
+    assert(joins.nonEmpty, s"$name has no AsOfJoin merge exec:\n$plan")
+    // the only windows are those that build the join's inputs (DollarBars' running sum)
+    def windows(p: SparkPlan) = collect(p) { case w: WindowExec => w }
+    val inputWindows = joins.flatMap(j => windows(j.left) ++ windows(j.right))
+    assert(windows(executed).forall(w => inputWindows.exists(_ eq w)),
+      s"$name computes a Window outside the as-of join's inputs:\n$plan")
+    Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
+      "CartesianProduct").foreach { op =>
+      assert(!plan.contains(op), s"$name plans a $op — the as-of join is quadratic again:\n$plan")
+    }
+    assert(!plan.toLowerCase.contains("unboundedfollowing"),
+      s"$name uses an unbounded-following frame, recomputed per row:\n$plan")
+  }
+
   test("native as-of directions plan as the single-merge operator — no band join, no rank pass") {
-    Seq("asof_join_native", "asof_join_forward_native", "asof_join_nearest_native")
-      .foreach { name =>
-        val df = Registry.byName(name).fn(spark, sf("sf0.01"))
-        val plan = df.queryExecution.sparkPlan.toString
-        assert(plan.contains("AsOfJoin"), s"$name lost the native operator:\n${plan.take(3000)}")
-        assert(!plan.contains("WindowGroupLimit") && !plan.contains("BroadcastNestedLoop"),
-          s"$name regressed to the band-join + rank formulation:\n${plan.take(3000)}")
-      }
+    Seq("asof_join", "asof_join_forward", "asof_join_nearest").foreach { name =>
+      assertOneSortedPass(name, Registry.byName(name).fn(spark, sf("sf0.01")))
+    }
   }
 
   test("as-of joins plan as one sorted pass: no join operator, no unbounded-following frame") {
@@ -470,19 +494,9 @@ class PlanSpec extends SparkSpec {
       """{"code":"KRW-BTC","timestamp":1704067200500,"total_ask_size":1.0,"total_bid_size":1.0,""" +
         """"orderbook_units":[{"ask_price":1001.0,"bid_price":999.0,"ask_size":1.0,"bid_size":1.0}]}"""),
       graft.schema.UpbitSchemas.orderbook)
-    val daily = graft.pipelines.Pipelines.dailyDollarBars(trades, books, 1000.0, "2024-01-01")
-    val registry = Seq("asof_join", "asof_join_forward", "asof_join_nearest")
-      .map(name => name -> Registry.byName(name).fn(spark, sf("sf0.01")))
-    (("dailyDollarBars" -> daily) +: registry).foreach { case (name, df) =>
-      df.collect() // run so AQE finalizes the adaptive plan
-      val plan = df.queryExecution.executedPlan.toString
-      Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
-        "CartesianProduct").foreach { op =>
-        assert(!plan.contains(op), s"$name plans a $op — the as-of join is quadratic again:\n$plan")
-      }
-      assert(!plan.toLowerCase.contains("unboundedfollowing"),
-        s"$name uses an unbounded-following frame, recomputed per row:\n$plan")
-    }
+    assertOneSortedPass("dailyDollarBars",
+      graft.pipelines.Pipelines.dailyDollarBars(trades, books, 1000.0, "2024-01-01"))
+    assertOneSortedPass("tca_spread", Registry.byName("tca_spread").fn(spark, sf("sf0.01")))
   }
 
   test("rrf_hybrid_scaled: union fusion; dense candidates bucket-equi-join, never cartesian") {

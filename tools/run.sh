@@ -2,8 +2,11 @@
 # Fast dev runner: skips sbt startup. Usage:
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 #   tools/run.sh graft.Bench
+# The classpath is found from this script's own directory; the JVM runs
+# in the caller's working directory, so relative paths and outputs
+# (BENCH_LOCAL.json, ScaleGen's default target/scale/sf1) land there.
 set -e
-cd "$(dirname "$0")/.."
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -16,5 +19,5 @@ exec java $ADDOPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$@"
