@@ -12,6 +12,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Callers that need a different conf (AQE off, a longer progress
   * history) set it with `spark.conf.set` on the returned session.
+  *
+  * The extensions are required, not optional: the vector and
+  * text-hash operators (`Similarity.dot`, `Dedup.minhashSignature`,
+  * `Decontam.gramHashes`, …) call their native kernel as the only
+  * path. On a session without GraftExtensions such an operator fails
+  * when its DataFrame is built, with Spark's `UNRESOLVED_ROUTINE`
+  * error naming the kernel (e.g. `dot_native`). The plain session of
+  * `Smoke` runs only `dollar_bars`, which calls no kernel.
   */
 object Session {
   def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * operators (guide §4: built-ins where they exist, a fused codegen'd
   * Expression where the built-in composition is the bottleneck).
   *
-  * The portable form everywhere in `graft.llm` is
+  * The portable form these kernels replace is
   * `transform(grams, g => conv(substring(md5(g), 1, 8), 16, 10))`:
   * higher-order lambdas are interpreted per element (ArrayTransform is
   * CodegenFallback), and each element pays md5 → 32-char hex UTF8String
@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (exactly `conv(substring(hex, 1, 8), 16, 10)`) — in one primitive
   * pass per row with no hex materialization and no per-element lambda
   * dispatch. Bit-equality with the HOF forms is pinned in
-  * TextHashExpressionsSpec; every call site dispatches adaptively
-  * (functionExists) so a plain session still runs the portable form.
+  * TextHashExpressionsSpec. The kernels are the only path: every call
+  * site needs a session carrying GraftExtensions (graft.Session).
   */
 object TextHashKernels {
 

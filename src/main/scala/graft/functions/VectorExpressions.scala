@@ -49,7 +49,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     // Length mismatch → NULL, exactly like the higher-order form:
     // zip_with null-pads the shorter side, the padded product is NULL,
     // and the fold propagates it. (Truncating to min length here would
-    // silently diverge from `Similarity.dot` on ragged input.)
+    // silently diverge from the higher-order form on ragged input.)
     if (x.numElements() != y.numElements()) return null
     val n = x.numElements()
     var i = 0
@@ -92,7 +92,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   * a primitive `long[60]` vote counter updated per element, then the
   * sign fold into the signature.
   *
-  * Semantics match `Dedup.simhash` (the HOF form) exactly, including
+  * Semantics match the 60-fold HOF form exactly, including
   * its null-element behavior: a NULL token hash votes −1 on every bit
   * (the HOF's `when(NULL…)` falls to the otherwise branch). NULL array
   * → NULL. Proved equal in VectorExpressionsSpec.

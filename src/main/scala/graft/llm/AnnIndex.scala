@@ -52,8 +52,7 @@ object AnnIndex {
       df.select(col(idCol).cast("long").as("corpus_id"),
         Similarity.toDoubleVec(col(vecCol)).as("v")), "v")
     val buckets = base
-      .withColumn("__buckets",
-        Similarity.bucketsAll(df, col("v"), planes, Similarity.dotAdaptive(df)(_, _)))
+      .withColumn("__buckets", Similarity.bucketsAll(col("v"), planes))
       .select(col("corpus_id"), posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val vectors = base.select(col("corpus_id"), col("v"), col("__norm").as("nrm"))
     (buckets, vectors)
@@ -67,15 +66,14 @@ object AnnIndex {
                    planes: Seq[Seq[Seq[Double]]]): (DataFrame, DataFrame) = {
     val dim = planes.head.head.length
     val skPlanes = Similarity.md5Planes(dim, groups = 2, bitsPerGroup = 32)
-    val dotF = Similarity.dotAdaptive(df)(_, _)
     val base = Similarity.withNorm(
       df.select(col(idCol).cast("long").as("corpus_id"),
         Similarity.toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("__sk", Similarity.bucketsAll(df, col("v"), skPlanes, dotF))
+      .withColumn("__sk", Similarity.bucketsAll(col("v"), skPlanes))
       .withColumn("s1", element_at(col("__sk"), 1))
       .withColumn("s2", element_at(col("__sk"), 2))
     val buckets = base
-      .withColumn("__buckets", Similarity.bucketsAll(df, col("v"), planes, dotF))
+      .withColumn("__buckets", Similarity.bucketsAll(col("v"), planes))
       .select(col("corpus_id"), col("s1"), col("s2"),
         posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val vectors = base.select(col("corpus_id"), col("v"), col("__norm").as("nrm"))
@@ -93,9 +91,7 @@ object AnnIndex {
     val q0 = queries
       .select(col(idCol).cast("long").as("query_id"),
         Similarity.toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("__buckets",
-        Similarity.bucketsAll(queries, col("qv"), planes,
-          Similarity.dotAdaptive(queries)(_, _)))
+      .withColumn("__buckets", Similarity.bucketsAll(col("qv"), planes))
       .select(col("query_id"), posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     if (probes <= 0) q0 else q0
       .withColumn("__flip",
@@ -139,7 +135,6 @@ object AnnIndex {
   def topK(buckets: DataFrame, vectors: DataFrame, queries: DataFrame,
            idCol: String, vecCol: String, planes: Seq[Seq[Seq[Double]]],
            k: Int, probes: Int = 0): DataFrame = {
-    val dotF = Similarity.dotAdaptive(queries)(_, _)
     val carriedNrm = buckets.columns.contains("nrm")
     val cols = Seq(col("query_id"), col("corpus_id").as("neighbor_id")) ++
       (if (carriedNrm) Seq(col("nrm")) else Nil)
@@ -155,7 +150,7 @@ object AnnIndex {
       .join(broadcast(queryVecs(queries, idCol, vecCol)), "query_id")
       .join(vside, "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
+        (Similarity.dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -203,12 +198,11 @@ object AnnIndex {
       df.join(assign, col(idCol) === col("__kid")).drop("__kid")
         .select(col(idCol).cast("long").as("id"), col("cell"),
           Similarity.toDoubleVec(col(vecCol)).as("v")), "v")
-    val dotF = Similarity.dotAdaptive(df)(_, _)
     val vectors = base.select(col("id").as("corpus_id"), col("cell"),
       col("v"), col("__norm").as("nrm"))
     val quantizer = trained.toDF("c_cell", "cv")
       .withColumn("cn", Similarity.dot(col("cv"), col("cv")))
-    (vectors, Similarity.cellCentroids(base, d, dotF), quantizer)
+    (vectors, Similarity.cellCentroids(base, d), quantizer)
   }
 
   /** Assign NEW vectors against the persisted QUANTIZER without
@@ -233,7 +227,7 @@ object AnnIndex {
         centroids.select(col("c_cell"), col("cv"), col("cn"))))
       .select(col("corpus_id"), col("c_cell"), col("v"), col("__norm"),
         (col("__norm") + col("cn") -
-          lit(2.0) * Similarity.dotAdaptive(df)(col("v"), col("cv"))).as("dist"))
+          lit(2.0) * Similarity.dot(col("v"), col("cv"))).as("dist"))
     val w = Window.partitionBy("corpus_id").orderBy(col("dist"), col("c_cell"))
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -249,7 +243,7 @@ object AnnIndex {
     * batch), the argmin runs MAP-SIDE over the quantizer as one array
     * literal: per row, `array_min` over (dist, cell) structs — struct
     * ordering is (dist asc, cell asc), exactly the batch tie rule.
-    * Distances use the same `dotAdaptive` fold at the same IEEE
+    * Distances use the same [[Similarity.dot]] fold at the same IEEE
     * accumulation order, so assignments are bit-equal to [[ivfAssign]]
     * (AnnIndexSpec pins zero flips on the build corpus and per-row
     * (v, nrm) equality on a streamed delta).
@@ -270,7 +264,7 @@ object AnnIndex {
     */
   def ivfAssignStream(stream: DataFrame, idCol: String, vecCol: String,
                       quantizer: DataFrame): DataFrame = {
-    val best = argminCell(stream, quantizer, col("v"), col("__norm"))
+    val best = argminCell(quantizer, col("v"), col("__norm"))
     Similarity.withNorm(
         stream.select(col(idCol).cast("long").as("corpus_id"),
           Similarity.toDoubleVec(col(vecCol)).as("v")), "v")
@@ -282,7 +276,7 @@ object AnnIndex {
     * structs built from the collected centroid table as ONE array
     * literal — struct ordering is (dist asc, cell asc), the exact
     * batch-assignment tie rule; `dist = ‖v‖² + ‖c‖² − 2·v·c` at the
-    * same `dotAdaptive` IEEE fold. Zero shuffle, stream-legal.
+    * same [[Similarity.dot]] IEEE fold. Zero shuffle, stream-legal.
     *
     * Encoding: the BOXED struct-array `typedLit` — kept ON MEASUREMENT
     * after the r12 flat re-encode was tried and reverted (NOTES_r12 /
@@ -304,19 +298,17 @@ object AnnIndex {
     * arrays, the bloom bitmap, [[Pq.dtColumn]]'s codebook) — the law
     * is access-pattern-specific, not one-encoding-fits-all.
     */
-  private def argminCell(df: DataFrame, centroids: DataFrame,
-                         vec: Column, nrm: Column): Column = {
+  private def argminCell(centroids: DataFrame, vec: Column, nrm: Column): Column = {
     val cents = centroids
       .select(col("c_cell").cast("int"), col("cv"), col("cn"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq, r.getDouble(2)))
       .sortBy(_._1).toSeq
     require(cents.nonEmpty, "centroid table is empty")
-    val dotF = Similarity.dotAdaptive(df)(_, _)
     val centArr = typedLit(cents) // array<struct<_1:int,_2:array<double>,_3:double>>
     array_min(transform(centArr, c =>
       struct((nrm + c.getField("_3") -
-        lit(2.0) * dotF(vec, c.getField("_2"))).as("dist"),
+        lit(2.0) * Similarity.dot(vec, c.getField("_2"))).as("dist"),
         c.getField("_1").as("cell"))))
       .getField("cell")
   }
@@ -341,7 +333,7 @@ object AnnIndex {
     * one 3-long aggregate — cheap enough for a nightly `observe()`.
     */
   def ivfChurn(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val re = argminCell(vectors, centroids, col("v"), col("nrm"))
+    val re = argminCell(centroids, col("v"), col("nrm"))
     vectors
       .select(col("cell"), re.as("re_cell"))
       .agg(count(lit(1)).as("total"),
@@ -360,20 +352,19 @@ object AnnIndex {
   def ivfTopK(vectors: DataFrame, centroids: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int,
               nprobe: Int = 1): DataFrame = {
-    val dotF = Similarity.dotAdaptive(queries)(_, _)
     val q = queryVecs(queries, idCol, vecCol)
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("probe_cos").desc, col("c_cell"))
     val probe = q.join(broadcast(centroids))
       .withColumn("probe_cos",
-        dotF(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))))
+        Similarity.dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))))
       .withColumn("pr", row_number().over(probeW))
       .filter(col("pr") <= nprobe)
       .select(col("query_id"), col("qv"), col("qn"), col("c_cell").as("probe_cell"))
     val scored = probe.join(vectors,
         col("cell") === col("probe_cell") && col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id").as("neighbor_id"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
+        (Similarity.dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -393,11 +384,10 @@ object AnnIndex {
                   shortlist: Int = 32, probes: Int = 0): DataFrame = {
     val dim = planes.head.head.length
     val skPlanes = Similarity.md5Planes(dim, groups = 2, bitsPerGroup = 32)
-    val dotF = Similarity.dotAdaptive(queries)(_, _)
     val qsk = queries
       .select(col(idCol).cast("long").as("query_id"),
         Similarity.toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("__sk", Similarity.bucketsAll(queries, col("qv"), skPlanes, dotF))
+      .withColumn("__sk", Similarity.bucketsAll(col("qv"), skPlanes))
       .select(col("query_id"), element_at(col("__sk"), 1).as("q1"),
         element_at(col("__sk"), 2).as("q2"))
     val cand = probeBuckets(queries, idCol, vecCol, planes, probes)
@@ -417,7 +407,7 @@ object AnnIndex {
       .join(vectors.select(col("corpus_id").as("neighbor_id"), col("v"),
         col("nrm")), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
+        (Similarity.dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))

@@ -39,15 +39,12 @@ object CountMin {
 
     val tok = df.select(explode(words(lower(trim(col(textCol))))).as("tok"))
 
-    // scalar h32 through the native kernel when available: the sketch
-    // evaluates depth hashes per token occurrence TWICE (cells +
-    // candidates), and the portable chain pays md5 → hex UTF8String →
-    // conv per call (guide §4; bit-equality in TextHashExpressionsSpec)
-    val h32Of: Column => Column =
-      if (TextHash.nativeHash(df.sparkSession, "h32_native"))
-        c => call_function("h32_native", c)
-      else c => h32(c)
-    def bucket(j: Int) = pmod(h32Of(concat(lit(s"cms$j:"), col("tok"))), lit(width))
+    // scalar h32 through the native kernel: the sketch evaluates depth
+    // hashes per token occurrence TWICE (cells + candidates), and the
+    // md5 → hex UTF8String → conv chain would pay that per call
+    // (bit-equality in TextHashExpressionsSpec)
+    def bucket(j: Int) = pmod(call_function("h32_native",
+      concat(lit(s"cms$j:"), col("tok"))), lit(width))
 
     // phase 1: the sketch — depth rows per token occurrence, partial-
     // aggregated to ≤ depth·width cells per partition before shuffling

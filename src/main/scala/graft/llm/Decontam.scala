@@ -25,34 +25,15 @@ import TextHash._
   */
 object Decontam {
 
-  /** Distinct hashed word n-grams of `text`. Documents shorter than
-    * `n` words yield an empty set (the `when` guard matters: Spark's
-    * `sequence(1, 0)` would DESCEND, not return empty).
-    *
-    * The token array is bound through a single-element `transform`
-    * lambda so the split evaluates ONCE per row: inlining `words(text)`
-    * into the position lambda makes codegen re-split the document per
-    * position — O(len²) per doc, measured ~3-4x on the gram family.
+  /** Distinct hashed word n-grams of `text`, in first-occurrence
+    * order; documents shorter than `n` words yield an empty set. One
+    * pass through the fused `wordgram_h32` kernel: per-gram md5 → hex
+    * → conv through interpreted HOF lambdas measured ~3 s per corpus
+    * pass at sf0.1 (OPTIMIZATION_r12). TextHashExpressionsSpec pins it
+    * bit-for-bit to that HOF form.
     */
   def gramHashes(text: Column, n: Int): Column =
-    element_at(transform(array(words(text)), w => {
-      val cnt = size(w) - (n - 1)
-      when(cnt <= 0, array().cast("array<bigint>"))
-        .otherwise(array_distinct(transform(
-          sequence(lit(1), cnt),
-          i => h32(array_join(slice(w, i, lit(n)), " ")))))
-    }), 1)
-
-  /** [[gramHashes]] through the fused one-pass kernel when the session
-    * carries GraftExtensions (per-gram md5 → hex → conv through
-    * interpreted HOF lambdas measured ~3 s per corpus pass at sf0.1 —
-    * OPTIMIZATION_r12), the portable HOF otherwise. Bit-equal incl.
-    * first-occurrence dedup order (TextHashExpressionsSpec).
-    */
-  def gramHashesAdaptive(df: DataFrame)(text: Column, n: Int): Column =
-    if (TextHash.nativeHash(df.sparkSession, "wordgram_h32"))
-      call_function("wordgram_h32", words(text), lit(n), lit(""), lit(0L), lit(true))
-    else gramHashes(text, n)
+    call_function("wordgram_h32", words(text), lit(n), lit(""), lit(0L), lit(true))
 
   /** Within-corpus exact n-gram overlap pairs — the verbatim-span
     * dedup signal (Lee et al., "Deduplicating Training Data Makes
@@ -81,7 +62,7 @@ object Decontam {
     // and every consumer reads the same shuffle files — the md5 gram
     // hashing (the dominant map-side cost) still runs exactly once.
     val grams = df.select(col(idCol).as("doc_id"),
-      explode(gramHashesAdaptive(df)(col(textCol), n)).as("g"))
+      explode(gramHashes(col(textCol), n)).as("g"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
     // Static plan shows the subtree twice, but persisting LOSES here
     // (r12 interleaved A/B: persist 1.33 s vs recompute 1.03 s on
@@ -129,25 +110,12 @@ object Decontam {
     */
   def dupSpans(df: DataFrame, idCol: String, textCol: String,
                n: Int): DataFrame = {
-    // Materialize the token array in its own projection FIRST: the
-    // position lambda below references a bound column, not the split
-    // expression — inlining `words(text)` into the lambda body makes
-    // codegen re-split the document once PER POSITION (O(len²) per
-    // doc; measured ~5x on this operator).
     val toks = df.select(col(idCol).as("doc_id"),
       words(col(textCol)).as("__ws"))
-    val w = col("__ws")
-    val cnt = size(w) - (n - 1)
     // Ordered (non-distinct) gram-hash sequence; positions are the
-    // 1-based array index. The fused kernel replaces the per-position
-    // md5 → hex → conv lambda (the measured map-side cost); the HOF
-    // fallback builds the identical array for plain sessions.
-    val gramSeq =
-      if (TextHash.nativeHash(df.sparkSession, "wordgram_h32"))
-        call_function("wordgram_h32", w, lit(n), lit(""), lit(0L), lit(false))
-      else when(cnt <= 0, array().cast("array<bigint>"))
-        .otherwise(transform(sequence(lit(1), cnt), i =>
-          h32(array_join(slice(w, i, lit(n)), " "))))
+    // 1-based array index.
+    val gramSeq = call_function("wordgram_h32", col("__ws"), lit(n), lit(""),
+      lit(0L), lit(false))
     // No persist (function-scoped caches over lazily-returned plans
     // leak — Winnow.pairs note). The occurrence table feeds both the
     // gram aggregate and the join-back, whose natural plans shuffle
@@ -246,7 +214,7 @@ object Decontam {
     // read twice (bloom build + exact verify join); eager so the
     // expensive gram explode+distinct runs once, lineage-free
     val banned = heldout
-      .select(explode(gramHashesAdaptive(heldout)(col(textCol), n)).as("g")).distinct()
+      .select(explode(gramHashes(col(textCol), n)).as("g")).distinct()
       .localCheckpoint(true)
     // DenseLit, not typedlit: the bitmap IS a dense long array, and
     // the boxed encoding re-serializes mBits/64 boxed longs into the
@@ -256,7 +224,7 @@ object Decontam {
     // DenseLit doc); the unsafe region is a memcpy at any width
     val bitmap = DenseLit.longs(bloomBuild(banned, "g", mBits, k))
     val trainG = train.select(col(idCol).as("doc_id"),
-      gramHashesAdaptive(train)(col(textCol), n).as("grams"))
+      gramHashes(col(textCol), n).as("grams"))
       .persist()
     val candidates = trainG
       .select(col("doc_id"), explode(col("grams")).as("g"))
@@ -280,10 +248,10 @@ object Decontam {
     // shuffle) — persist WINS 2x here (r12 interleaved A/B:
     // decontam_overlap 0.53 s vs 1.08 s; decontam_bloom 1.26 vs 1.36)
     val trainG = train.select(col(idCol).as("doc_id"),
-      gramHashesAdaptive(train)(col(textCol), n).as("grams"))
+      gramHashes(col(textCol), n).as("grams"))
       .persist()
     val banned = heldout
-      .select(explode(gramHashesAdaptive(heldout)(col(textCol), n)).as("g")).distinct()
+      .select(explode(gramHashes(col(textCol), n)).as("g")).distinct()
     val overlap = trainG.select(col("doc_id"), explode(col("grams")).as("g"))
       .join(broadcast(banned), "g")
       .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))

@@ -12,8 +12,8 @@ import TextHash._
   * Scale design (100 TB):
   * - exact: one hash shuffle on the normalized-text digest; group
   *   payload is ids only.
-  * - minhash: signatures are computed map-side with higher-order
-  *   array expressions (no shuffle, no UDF); the only shuffle is the
+  * - minhash: signatures are computed map-side by the fused
+  *   `minhash_sig` kernel (no shuffle, no UDF); the only shuffle is the
   *   band-bucket self-join, keyed by (band index, band hash) — the
   *   standard LSH trick that replaces the O(n²) pair space with
   *   per-bucket candidate generation. Hot buckets (boilerplate docs)
@@ -24,9 +24,6 @@ import TextHash._
   */
 object Dedup {
 
-  /** Mersenne prime 2³¹−1 for the affine minhash permutations. */
-  val P: Long = 2147483647L
-
   /** Exact dedup groups over normalized text: one row per distinct
     * normalized form with representative (min id) and group size.
     */
@@ -35,50 +32,34 @@ object Dedup {
       .groupBy("text_hash")
       .agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("group_size"))
 
-  /** MinHash signature from a *materialized* token-hash array column
-    * (materialize `transform(toks, h32)` once — md5 inside the
-    * permutation lambda would be recomputed numPerm× per row):
-    * `numPerm` affine permutations `(h·a_j + b_j) mod P` with
+  /** MinHash signature from a materialized token-hash array column:
+    * `numPerm` affine permutations `(h·a_j + b_j) mod P` (P = 2³¹−1) with
     * `a_j = 1 + 7919·j`, `b_j = 1 + 104729·j` — literal constants so
-    * the oracle can restate them — folded to their minima.
+    * the oracle can restate them — folded to their minima, in one pass
+    * through the fused `minhash_sig` kernel (graft.functions.MinHashSig;
+    * the nested HOF form re-walks the array numPerm times through
+    * interpreted lambdas). VectorExpressionsSpec pins it bit-for-bit
+    * to that HOF form.
     */
   def minhashSignature(hashesCol: Column, numPerm: Int): Column =
-    transform(sequence(lit(0), lit(numPerm - 1)), j =>
-      array_min(transform(hashesCol, h =>
-        (h * (lit(1L) + j.cast("long") * 7919L) + (lit(1L) + j.cast("long") * 104729L)) % P)))
+    call_function("minhash_sig", hashesCol, lit(numPerm))
 
-  /** The signature through the fused one-pass native expression
-    * (graft.functions.MinHashSig) when the session carries
-    * GraftExtensions — the HOF form above re-walks the token-hash
-    * array numPerm times through interpreted lambdas. Identical
-    * output (same affine constants, same mod), proved in
-    * VectorExpressionsSpec.
+  /** |A ∩ B| on distinct long-array sets through the `intersect_card`
+    * probe-table kernel — `size(array_intersect(a, b))` without the
+    * intermediate array (VectorExpressionsSpec).
     */
-  def minhashSignatureAdaptive(df: DataFrame)(hashesCol: Column, numPerm: Int): Column =
-    if (df.sparkSession.catalog.functionExists("minhash_sig"))
-      call_function("minhash_sig", hashesCol, lit(numPerm))
-    else minhashSignature(hashesCol, numPerm)
+  def intersectCard(a: Column, b: Column): Column =
+    call_function("intersect_card", a, b)
 
-  /** |A ∩ B| on long-array sets: native probe-table kernel when
-    * available, `size(array_intersect(...))` otherwise.
+  /** Distinct token-hash set `array_distinct(transform(toks, h32))` in
+    * one pass through the `wordgram_h32` kernel (n=1 word "grams", no
+    * prefix/mod — see graft.functions.TextHashKernels; per-token md5 →
+    * hex → conv through an interpreted HOF is the measured map-side
+    * cost of the minhash family). Equal to that HOF incl.
+    * first-occurrence dedup order (TextHashExpressionsSpec).
     */
-  def intersectCardAdaptive(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("intersect_card"))
-      call_function("intersect_card", a, b)
-    else size(array_intersect(a, b))
-
-  /** Distinct token-hash set `array_distinct(transform(toks, h32))`
-    * through the fused one-pass kernel when available (n=1 word
-    * "grams", no prefix/mod — see graft.functions.TextHashKernels;
-    * per-token md5 → hex → conv through an interpreted HOF is the
-    * measured map-side cost of the minhash family). Identical output
-    * incl. first-occurrence dedup order, proved in
-    * TextHashExpressionsSpec.
-    */
-  def wordHashSetAdaptive(df: DataFrame)(toks: Column): Column =
-    if (TextHash.nativeHash(df.sparkSession, "wordgram_h32"))
-      call_function("wordgram_h32", toks, lit(1), lit(""), lit(0L), lit(true))
-    else array_distinct(transform(toks, t => h32(t)))
+  def wordHashSet(toks: Column): Column =
+    call_function("wordgram_h32", toks, lit(1), lit(""), lit(0L), lit(true))
 
   /** Fold `rows` signature values per band into one bucket hash
     * (base-31 accumulation; init 0 ⇒ identical to DuckDB's init-free
@@ -166,7 +147,7 @@ object Dedup {
     val restricted = capped
       .join(deltaBuckets, Seq("band_idx", "band_hash"), "left_semi")
     jaccardVerify(
-      bucketPairs(df)(restricted, col(s"a.$deltaCol") || col(s"b.$deltaCol")), tau)
+      bucketPairs(restricted, col(s"a.$deltaCol") || col(s"b.$deltaCol")), tau)
   }
 
   /** Shared LSH candidate generation: banded minhash buckets (skew-
@@ -188,8 +169,8 @@ object Dedup {
     val rows = numPerm / bands
     val docs = df.select((col(idCol).as("id") +: extraCols.map(col)) :+
         wordSet(col(textCol)).as("toks"): _*)
-      .withColumn("hs", wordHashSetAdaptive(df)(col("toks")))
-      .withColumn("sig", minhashSignatureAdaptive(df)(col("hs"), numPerm))
+      .withColumn("hs", wordHashSet(col("toks")))
+      .withColumn("sig", minhashSignature(col("hs"), numPerm))
       .withColumn("bands", bandHashes(col("sig"), bands, rows))
     capBuckets(docs.select((col("id") +: extraCols.map(col)) ++ Seq(col("hs"),
         posexplode(col("bands")).as(Seq("band_idx", "band_hash"))): _*), maxBucket)
@@ -208,7 +189,7 @@ object Dedup {
     * the cost of re-running the map-side intersection kernel on the
     * ≤(bands−1)/bands duplicate fraction).
     */
-  private def bucketPairs(df: DataFrame)(buckets: DataFrame,
+  private def bucketPairs(buckets: DataFrame,
                           pairCond: Column = lit(true)): DataFrame =
     buckets.as("a")
       .join(buckets.as("b"),
@@ -216,7 +197,7 @@ object Dedup {
           col("a.band_hash") === col("b.band_hash") &&
           col("a.id") < col("b.id") && pairCond)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        intersectCardAdaptive(df)(col("a.hs"), col("b.hs")).as("inter"),
+        intersectCard(col("a.hs"), col("b.hs")).as("inter"),
         size(col("a.hs")).as("na"), size(col("b.hs")).as("nb"))
       .dropDuplicates("id_a", "id_b")
 
@@ -232,7 +213,7 @@ object Dedup {
   private def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                                 numPerm: Int, bands: Int,
                                 maxBucket: Int): DataFrame =
-    bucketPairs(df)(bandedBuckets(df, idCol, textCol, numPerm, bands, maxBucket))
+    bucketPairs(bandedBuckets(df, idCol, textCol, numPerm, bands, maxBucket))
 
   /** The banded signature table as a PUBLIC product — (id, hs,
     * band_idx, band_hash), corpus-side skew-capped and persisted.
@@ -247,47 +228,22 @@ object Dedup {
 
   /** 60-bit SimHash over a materialized token-hash array (h60 per
     * distinct token): bit j is set when the +1/−1 vote sum of
-    * token-hash bits j is positive.
-    *
-    * This HOF form re-walks the token array 60× per document (one
-    * inner `aggregate` per bit) — kept as the portable no-extensions
-    * fallback; the hot path is the single-pass native expression
-    * (`simhash_native`, graft.functions.SimHash), dispatched by
-    * [[simhashAdaptive]]. Bit-identical outputs, proved in
-    * VectorExpressionsSpec.
+    * token-hash bits j is positive. One pass through the
+    * `simhash_native` kernel (graft.functions.SimHash); the 60-fold
+    * HOF form it replaces re-walks the array once per bit.
+    * VectorExpressionsSpec pins the two bit-for-bit.
     */
-  def simhash(hashes: Column): Column = {
-    aggregate(
-      sequence(lit(0), lit(59)),
-      lit(0L),
-      (acc, j) => {
-        val votes = aggregate(hashes, lit(0L), (a, h) =>
-          a + when(call_function("shiftright", h, j.cast("int")).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-        acc + when(votes > 0, call_function("shiftleft", lit(1L), j.cast("int"))).otherwise(0L)
-      })
-  }
-
-  /** The signature through the fused one-pass native expression when
-    * the session carries GraftExtensions, the portable 60-fold HOF
-    * otherwise — same dispatch pattern as `Similarity.dotAdaptive`.
-    */
-  def simhashAdaptive(df: DataFrame)(hashes: Column): Column =
-    if (df.sparkSession.catalog.functionExists("simhash_native"))
-      call_function("simhash_native", hashes)
-    else simhash(hashes)
+  def simhash(hashes: Column): Column = call_function("simhash_native", hashes)
 
   /** SimHash near-dup pairs: banded 15-bit buckets (any shared band ⇒
     * candidate), Hamming distance popcount(xor) ≤ maxDist.
     */
   def simHashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxDist: Int, maxBucket: Int = 64): DataFrame = {
-    val h60s =
-      if (TextHash.nativeHash(df.sparkSession, "h60_array"))
-        call_function("h60_array", wordSet(col(textCol)))
-      else transform(wordSet(col(textCol)), t => h60(t))
     val docs = df
-      .select(col(idCol).as("id"), h60s.as("hs"))
-      .select(col("id"), simhashAdaptive(df)(col("hs")).as("sim"))
+      .select(col(idCol).as("id"),
+        call_function("h60_array", wordSet(col(textCol))).as("hs"))
+      .select(col("id"), simhash(col("hs")).as("sim"))
     val banded = capBuckets(docs.select(col("id"), col("sim"),
       posexplode(transform(sequence(lit(0), lit(3)), b =>
         call_function("shiftright", col("sim"), b.cast("int") * 15).bitwiseAND(32767L)))
@@ -645,20 +601,14 @@ object Dedup {
     // primitive longs instead of strings, shuffles carry 8-byte
     // values. Hash collisions would perturb Jaccard identically in
     // the oracle (same md5-derived hash).
-    val gramsCol =
-      if (TextHash.nativeHash(df.sparkSession, "ngram_h32_set"))
-        call_function("ngram_h32_set", col(textCol), lit(n), lit(modP.toLong))
-      else array_distinct(filter(transform(
-        sequence(lit(1), greatest(length(col(textCol)) - (n - 1), lit(1))),
-        i => h32(col(textCol).substr(i, lit(n)))),
-        h => h % modP === 0))
     val docs = df.select((col(idCol).as("id") +: blockCols.map(col)) :+
-      gramsCol.as("grams"): _*)
+      call_function("ngram_h32_set", col(textCol), lit(n), lit(modP.toLong))
+        .as("grams"): _*)
       .persist()
     // Empty-gram docs get null band hashes and fall out of the
     // equi-join naturally (their Jaccard is NULL anyway).
     val banded = docs.select(Seq(col("id")) ++ blockCols.map(col) :+
-      posexplode(bandHashes(minhashSignatureAdaptive(df)(col("grams"), numPerm), bands, rows))
+      posexplode(bandHashes(minhashSignature(col("grams"), numPerm), bands, rows))
         .as(Seq("band_idx", "band_hash")): _*)
     val capped = capBuckets(banded, maxBucket)
     val cond = (blockCols.map(c => col(s"a.$c") === col(s"b.$c")) :+
@@ -671,7 +621,7 @@ object Dedup {
     cand
       .join(docs.select(col("id").as("id_a"), col("grams").as("ga")), Seq("id_a"))
       .join(docs.select(col("id").as("id_b"), col("grams").as("gb")), Seq("id_b"))
-      .withColumn("inter", intersectCardAdaptive(df)(col("ga"), col("gb")))
+      .withColumn("inter", intersectCard(col("ga"), col("gb")))
       .select(col("id_a"), col("id_b"),
         (col("inter").cast("double") /
           (size(col("ga")) + size(col("gb")) - col("inter")).cast("double"))

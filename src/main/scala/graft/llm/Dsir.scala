@@ -47,37 +47,25 @@ object Dsir {
     */
   def hashedFeatures(df: DataFrame, idCol: String, textCol: String,
                      buckets: Int): DataFrame = {
-    val (uni, bi) = featureArrays(df, textCol, buckets)
+    val (uni, bi) = featureArrays(textCol, buckets)
     df.select(col(idCol).as("doc_id"), explode(concat(uni, bi)).as("bucket"))
       .groupBy("doc_id", "bucket").agg(count(lit(1)).as("m"))
   }
 
   /** The two hashed-feature arrays of one document — unigram and
-    * bigram bucket ids as pure per-row expressions (no explode).
-    * Routed through the fused wordgram kernel when the session
-    * carries GraftExtensions: "u:w" ≡ prefix "u:" over 1-grams,
-    * "b:w1 w2" ≡ prefix "b:" over 2-grams (identical md5 bytes, mod
-    * applied in-kernel); the interpreted HOF md5 → hex → conv chain
-    * is the measured map-side cost (OPTIMIZATION_r12). Bit-equality
-    * pinned in TextHashExpressionsSpec; HOF fallback for plain
-    * sessions.
+    * bigram bucket ids as pure per-row expressions (no explode),
+    * through the fused wordgram kernel: "u:w" ≡ prefix "u:" over
+    * 1-grams, "b:w1 w2" ≡ prefix "b:" over 2-grams (identical md5
+    * bytes, mod applied in-kernel); the interpreted HOF md5 → hex →
+    * conv chain it replaces was the measured map-side cost
+    * (OPTIMIZATION_r12). Bit-equality with that HOF form is pinned in
+    * TextHashExpressionsSpec.
     */
-  private def featureArrays(df: DataFrame, textCol: String,
-                            buckets: Int): (Column, Column) = {
+  private def featureArrays(textCol: String, buckets: Int): (Column, Column) = {
     val ws = words(lower(trim(col(textCol))))
-    if (TextHash.nativeHash(df.sparkSession, "wordgram_h32")) {
-      val uni = call_function("wordgram_h32", ws, lit(1), lit("u:"),
-        lit(buckets.toLong), lit(false))
-      val bi = call_function("wordgram_h32", ws, lit(2), lit("b:"),
-        lit(buckets.toLong), lit(false))
-      (uni, bi)
-    } else {
-      val uni = transform(ws, w => h32(concat(lit("u:"), w)) % buckets)
-      val bi = zip_with(
-        slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1),
-        (a, b) => h32(concat(lit("b:"), a, lit(" "), b)) % buckets)
-      (uni, bi)
-    }
+    def grams(n: Int, prefix: String) = call_function("wordgram_h32", ws,
+      lit(n), lit(prefix), lit(buckets.toLong), lit(false))
+    (grams(1, "u:"), grams(2, "b:"))
   }
 
   /** Bucket log-ratio model `(bucket, lr_micro)`: ln p̂_target −
@@ -95,7 +83,7 @@ object Dsir {
     // whose exchange grows with the corpus. Totals are identical
     // (sum over docs of per-doc multiplicities = plain occurrence
     // count), so the model is bit-equal to the pair-table form.
-    val (uni, bi) = featureArrays(df, textCol, buckets)
+    val (uni, bi) = featureArrays(textCol, buckets)
     val rc = df.select(explode(concat(uni, bi)).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cr"))
     val tc = df.filter(targetPred)
@@ -148,7 +136,7 @@ object Dsir {
                 model: Map[Long, Long], defaultMicro: Long,
                 buckets: Int): DataFrame = {
     val m = typedlit(model)
-    val (uni, bi) = featureArrays(df, textCol, buckets)
+    val (uni, bi) = featureArrays(textCol, buckets)
     val score: Column => Column = arr =>
       aggregate(arr, lit(0L),
         (acc, b) => acc + coalesce(element_at(m, b), lit(defaultMicro)))
@@ -184,7 +172,7 @@ object Dsir {
     // r11 ceiling finding) — at DSIR's production 10k default the
     // difference is small, at fasttext-gate widths (1–10M) decisive
     val m = DenseLit.longs(lr.toArray)
-    val (uni, bi) = featureArrays(df, textCol, buckets)
+    val (uni, bi) = featureArrays(textCol, buckets)
     val score: Column => Column = arr =>
       aggregate(arr, lit(0L),
         (acc, b) => acc + element_at(m, (b + lit(1L)).cast("int")))

@@ -181,12 +181,11 @@ object EmbeddingStats {
   def randomProject(df: DataFrame, idCol: String, vecCol: String,
                     dim: Int, outDim: Int): DataFrame = {
     val planes = Similarity.md5Planes(dim, groups = 1, bitsPerGroup = outDim).head
-    val dotF = Similarity.dotAdaptive(df)(_, _)
     df.select(col(idCol).cast("long").as("vec_id"),
         Similarity.toDoubleVec(col(vecCol)).as("v"))
       .select(col("vec_id"), col("v"),
         posexplode(typedlit(planes)).as(Seq("p", "plane")))
       .select(col("vec_id"), (col("p") + 1).cast("long").as("j"),
-        dotF(col("v"), col("plane")).as("y"))
+        Similarity.dot(col("v"), col("plane")).as("y"))
   }
 }

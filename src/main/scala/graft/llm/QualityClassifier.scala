@@ -69,19 +69,7 @@ object QualityClassifier {
     * `hash()`) so the DuckDB oracle reproduces buckets bit-for-bit.
     */
   def hashedFeature(buckets: Int): Column => Column =
-    w => {
-      // Scalar h32 through the native kernel when the plan is being
-      // built under a session carrying GraftExtensions (the feature
-      // closure has no DataFrame to consult — the active session at
-      // construction time is the session that will resolve the call).
-      // One md5 → hex → conv chain per exploded token otherwise.
-      // Bit-equality in TextHashExpressionsSpec.
-      val native = org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(TextHash.nativeHash(_, "h32_native"))
-      if (native)
-        pmod(call_function("h32_native", concat(lit("nbq:"), w)), lit(buckets.toLong))
-      else pmod(TextHash.h32(concat(lit("nbq:"), w)), lit(buckets.toLong))
-    }
+    w => pmod(call_function("h32_native", concat(lit("nbq:"), w)), lit(buckets.toLong))
 
   /** Train the NB model: one row per feature,
     * `(f, c_pos, c_neg, llr_micro)` where

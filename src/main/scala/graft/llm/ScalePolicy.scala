@@ -115,12 +115,12 @@ object ScalePolicy {
     * unchanged when occupancy is already bounded, else refined by
     * [[Similarity.refineBlock]] with [[blockBitsFor]] bits.
     */
-  def refinedBlockAuto(df: DataFrame, blockCol: Column, vecCol: Column,
+  def refinedBlockAuto(blockCol: Column, vecCol: Column,
                        corpus: Long, blocks: Int,
                        targetRows: Int = 250): Column = {
     val bits = blockBitsFor(corpus, blocks, targetRows)
     if (bits == 0) blockCol.cast("string")
-    else Similarity.refineBlock(df, blockCol, vecCol, bits)
+    else Similarity.refineBlock(blockCol, vecCol, bits)
   }
 
   /** SemDeDup cluster count holding expected cell occupancy at

@@ -65,10 +65,9 @@ object SemDedup {
     */
   def semanticDedupIndexed(vectors: DataFrame, quantizer: DataFrame,
                            tau: Double): DataFrame = {
-    val dotF = Similarity.dotAdaptive(vectors)(_, _)
     val j = vectors.join(broadcast(quantizer), col("cell") === col("c_cell"))
       .select(col("corpus_id").as("vec_id"), col("cell"),
-        (col("nrm") + col("cn") - lit(2.0) * dotF(col("v"), col("cv")))
+        (col("nrm") + col("cn") - lit(2.0) * Similarity.dot(col("v"), col("cv")))
           .as("dist"),
         col("v"), col("nrm").as("__norm"))
     dedupOnCells(j, tau)
@@ -76,7 +75,6 @@ object SemDedup {
 
   /** Shared core over `(vec_id, cell, dist, v, __norm)` rows. */
   private def dedupOnCells(j: DataFrame, tau: Double): DataFrame = {
-    val dotF = Similarity.dotAdaptive(j)(_, _)
     // Dominance pairs within a cell: y (farther from centroid) may
     // absorb x. Skinny projection — ids + cosine only cross the
     // exchange, vectors never ride the candidate shuffle (the
@@ -87,7 +85,7 @@ object SemDedup {
             (col("y.dist") === col("x.dist") &&
               col("y.vec_id") < col("x.vec_id"))))
       .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("cand_id"),
-        (dotF(col("x.v"), col("y.v")) /
+        (Similarity.dot(col("x.v"), col("y.v")) /
           (sqrt(col("x.__norm")) * sqrt(col("y.__norm")))).as("cand_cos"))
       .filter(col("cand_cos") >= tau)
 

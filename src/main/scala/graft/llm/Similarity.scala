@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 /** Similarity search over an embedding column (`array<float>`).
   *
   * - [[bruteTopK]] — exact cosine top-k: query set × corpus join with
-  *   the dot product as a sequential higher-order-function fold
-  *   (`zip_with` + `aggregate`, codegen'd — no UDF). The fold order is
-  *   element order, so the DuckDB oracle reproduces bit-identical
-  *   doubles. O(|Q|·|C|·d); right when |Q| is a filter-pushed sample.
+  *   the dot product as a sequential left fold ([[dot]], the fused
+  *   `dot_native` kernel — no UDF). The fold order is element order,
+  *   so the DuckDB oracle reproduces bit-identical doubles.
+  *   O(|Q|·|C|·d); right when |Q| is a filter-pushed sample.
   *
   * - [[lshTopK]] — the scale path: random-hyperplane LSH. Each vector
   *   maps to a sign-bit bucket; candidates share a bucket in at least
@@ -25,27 +25,18 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Sequential left-fold dot product — deterministic double math. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** The same fold through the fused native expression when the
-    * session carries GraftExtensions (~75× on 64-dim vectors —
-    * VectorExpressionsSpec), the portable higher-order form otherwise.
-    * Identical IEEE accumulation order either way.
+  /** Sequential left-fold dot product — deterministic double math —
+    * through the fused `dot_native` kernel (graft.functions.DotProduct,
+    * ~75× the `zip_with`/`aggregate` fold on 64-dim vectors).
+    * VectorExpressionsSpec pins it bit-for-bit to that fold, including
+    * null and ragged inputs.
     */
-  def dotAdaptive(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("dot_native"))
-      call_function("dot_native", a, b)
-    else dot(a, b)
+  def dot(a: Column, b: Column): Column = call_function("dot_native", a, b)
 
   def toDoubleVec(c: Column): Column = transform(c, _.cast("double"))
 
   def withNorm(df: DataFrame, vecCol: String): DataFrame =
-    df.withColumn("__norm", dotAdaptive(df)(col(vecCol), col(vecCol)))
-
-  def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dot(a, b) / (sqrt(normA) * sqrt(normB))
+    df.withColumn("__norm", dot(col(vecCol), col(vecCol)))
 
   /** Exact top-k cosine neighbors for rows matching `queryPred`.
     * Ties broken by neighbor id — fully deterministic.
@@ -57,7 +48,7 @@ object Similarity {
       col("v").as("qv"), col("__norm").as("qn"))
     val scored = q.join(base.filter(col("id").isNotNull), col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        (dotAdaptive(df)(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -81,11 +72,10 @@ object Similarity {
                blockCol: String, k: Int): DataFrame = {
     val base = withNorm(df.select(col(idCol).as("id"), col(blockCol).as("blk"),
       toDoubleVec(col(vecCol)).as("v")), "v")
-    val dotF = dotAdaptive(base)(_, _)
     val scored = base.as("a").join(base.as("b"),
         col("a.blk") === col("b.blk") && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("src"), col("b.id").as("dst"),
-        (dotF(col("a.v"), col("b.v")) / (sqrt(col("a.__norm")) * sqrt(col("b.__norm"))))
+        (dot(col("a.v"), col("b.v")) / (sqrt(col("a.__norm")) * sqrt(col("b.__norm"))))
           .as("cosine"))
     val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
     scored.withColumn("rank", row_number().over(w))
@@ -109,7 +99,7 @@ object Similarity {
       col("lbl").as("qlbl"), col("v").as("qv"), col("__norm").as("qn"))
     val scored = q.join(base, col("lbl") =!= col("qlbl"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        (dotAdaptive(df)(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -137,7 +127,7 @@ object Similarity {
     val nn = q.join(refs, col("id") =!= col("query_id"))
       .select(col("query_id"), col("true_label"), col("id").as("neighbor_id"),
         col("lbl").as("nlbl"),
-        (dotAdaptive(df)(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -170,10 +160,9 @@ object Similarity {
                                  neighborPred: Column,
                                  planes: Seq[Seq[Seq[Double]]],
                                  probes: Int): DataFrame = {
-    val dotF = dotAdaptive(df)(_, _)
     val base = withNorm(df.select(col(idCol).as("id"), col(labelCol).as("lbl"),
         toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("__buckets", bucketsAll(df, col("v"), planes, dotF))
+      .withColumn("__buckets", bucketsAll(col("v"), planes))
     val exploded = base.select(col("id"), col("lbl"), col("v"), col("__norm"),
       posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val q0 = exploded.filter(queryPred).select(col("id").as("query_id"),
@@ -188,7 +177,7 @@ object Similarity {
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("qlbl"), col("id").as("neighbor_id"),
         col("lbl").as("nlbl"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
   }
@@ -249,42 +238,24 @@ object Similarity {
     * fixed cost), while log₂-growing refinement bits hold block
     * occupancy constant.
     */
-  def refineBlock(df: DataFrame, blockCol: Column, vecCol: Column,
-                  bits: Int): Column = {
+  def refineBlock(blockCol: Column, vecCol: Column, bits: Int): Column = {
     val planes = md5Planes(dim = 64, groups = 1, bitsPerGroup = bits)
     concat(blockCol.cast("string"), lit(":"),
-      element_at(bucketsAll(df, toDoubleVec(vecCol), planes, dotAdaptive(df)), 1)
+      element_at(bucketsAll(toDoubleVec(vecCol), planes), 1)
         .cast("string"))
   }
 
   /** All group buckets at once (bit p of group g set iff
-    * v·plane_{g,p} > 0). With GraftExtensions the whole matrix runs
-    * through the fused `plane_buckets` kernel (the planes flatten ONCE
-    * into a primitive double[] reference object — no plane expression
-    * tree to janino-compile at all). Fallback: the planes as ONE
-    * nested-array literal instead of groups×bits×dim inline `lit`
-    * nodes — the per-element form builds a ~6k-node expression tree
-    * whose generated code takes seconds to compile per session
-    * (measured 12.6 s first-run / 3.2 s warm on 16×6×64 planes; the
-    * HOF-literal form is 1.3 s / 0.2 s; the native kernel removes the
-    * residual cold cost). Both preserve the exact sequential
-    * accumulation order, so bucket values are bit-identical
-    * (VectorExpressionsSpec).
+    * v·plane_{g,p} > 0) through the fused `plane_buckets` kernel: the
+    * planes flatten ONCE into a primitive double[] reference object,
+    * so there is no plane expression tree to janino-compile (the
+    * per-element `lit` form took 12.6 s first-run / 3.2 s warm on
+    * 16×6×64 planes, the nested-literal HOF fold 1.3 s / 0.2 s).
+    * Same sequential accumulation order as [[dot]], so bucket values
+    * are bit-identical to the HOF fold (VectorExpressionsSpec).
     */
-  def bucketsAll(df: DataFrame, vecCol: Column, planes: Seq[Seq[Seq[Double]]],
-                         dotFn: (Column, Column) => Column): Column =
-    if (df.sparkSession.catalog.functionExists("plane_buckets"))
-      call_function("plane_buckets", vecCol, typedLit(planes))
-    else {
-      val bits = planes.head.length
-      val weights = typedLit(Seq.tabulate(bits)(1L << _))
-      transform(typedLit(planes), g =>
-        aggregate(
-          transform(g, (plane, p) =>
-            when(dotFn(vecCol, plane) > 0, element_at(weights, p + 1))
-              .otherwise(0L)),
-          lit(0L), (acc, x) => acc + x))
-    }
+  def bucketsAll(vecCol: Column, planes: Seq[Seq[Seq[Double]]]): Column =
+    call_function("plane_buckets", vecCol, typedLit(planes))
 
   /** Deterministic hyperplanes: seeded JVM RNG, `groups` independent
     * tables of `bitsPerGroup` planes each (multi-probe via OR of
@@ -331,8 +302,7 @@ object Similarity {
     * [[ivfTopK]], factored out so [[AnnIndex.buildIvf]] persists the
     * IDENTICAL table (bit-equal folds: members summed in id order).
     */
-  private[graft] def cellCentroids(base: DataFrame, dim: Int,
-                                 dotF: (Column, Column) => Column): DataFrame =
+  private[graft] def cellCentroids(base: DataFrame, dim: Int): DataFrame =
     base.groupBy("cell")
       .agg(sort_array(collect_list(struct(col("id"), col("v")))).as("lst"),
         count(lit(1)).as("n"))
@@ -341,28 +311,27 @@ object Similarity {
           aggregate(col("lst"), lit(0.0),
             (acc, sv) => acc + element_at(sv.getField("v"), (i + 1).cast("int")))
             / col("n")).as("cv"))
-      .withColumn("cn", dotF(col("cv"), col("cv")))
+      .withColumn("cn", dot(col("cv"), col("cv")))
 
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, cellCol: String,
               queryPred: Column, k: Int, dim: Int, nprobe: Int = 1): DataFrame = {
-    val dotF: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column = dotAdaptive(df)(_, _)
     val base = withNorm(df.select(col(idCol).as("id"), col(cellCol).as("cell"),
       toDoubleVec(col(vecCol)).as("v")), "v")
-    val cents = cellCentroids(base, dim, dotF)
+    val cents = cellCentroids(base, dim)
     val q = base.filter(queryPred)
       .select(col("id").as("query_id"), col("v").as("qv"), col("__norm").as("qn"))
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("probe_cos").desc, col("c_cell"))
     val probe = q.join(broadcast(cents))
       .withColumn("probe_cos",
-        dotF(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))))
+        dot(col("qv"), col("cv")) / (sqrt(col("qn")) * sqrt(col("cn"))))
       .withColumn("pr", row_number().over(probeW))
       .filter(col("pr") <= nprobe)
       .select(col("query_id"), col("qv"), col("qn"), col("c_cell").as("probe_cell"))
     val scored = probe.join(base,
         col("cell") === col("probe_cell") && col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -390,7 +359,7 @@ object Similarity {
               queryPred: Column, k: Int,
               planes: Seq[Seq[Seq[Double]]], probes: Int = 0): DataFrame = {
     val base = withNorm(df.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("__buckets", bucketsAll(df, col("v"), planes, dotAdaptive(df)))
+      .withColumn("__buckets", bucketsAll(col("v"), planes))
     val exploded = base.select(col("id"), col("v"), col("__norm"),
       posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val q0 = exploded.filter(queryPred).select(col("id").as("query_id"),
@@ -415,7 +384,7 @@ object Similarity {
     val cand = q.join(exploded, Seq("grp", "bucket"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        (dotAdaptive(df)(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
@@ -439,7 +408,7 @@ object Similarity {
     val q = base.filter(queryPred).select(col("id").as("query_id"), col("v").as("qv"))
     val scored = q.join(base, col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        dotAdaptive(df)(col("qv"), col("v")).as("dot"))
+        dot(col("qv"), col("v")).as("dot"))
     val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -470,18 +439,16 @@ object Similarity {
   def mipsLshTopK(df: DataFrame, idCol: String, vecCol: String,
                   queryPred: Column, k: Int,
                   planes: Seq[Seq[Seq[Double]]], probes: Int = 0): DataFrame = {
-    val dotF = dotAdaptive(df)(_, _)
     val base0 = withNorm(df.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v")), "v")
     val m2 = base0.agg(max(col("__norm")).as("__m2"))
     val base = base0.crossJoin(broadcast(m2))
     val corpus = base
-      .withColumn("__buckets", bucketsAll(df,
+      .withColumn("__buckets", bucketsAll(
         concat(col("v"), array(sqrt(greatest(lit(0.0), col("__m2") - col("__norm"))))),
-        planes, dotF))
+        planes))
       .select(col("id"), col("v"), posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val q0 = base.filter(queryPred)
-      .withColumn("__buckets", bucketsAll(df,
-        concat(col("v"), array(lit(0.0))), planes, dotF))
+      .withColumn("__buckets", bucketsAll(concat(col("v"), array(lit(0.0))), planes))
       .select(col("id").as("query_id"), col("v").as("qv"),
         posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val q = if (probes <= 0) q0 else q0
@@ -494,7 +461,7 @@ object Similarity {
     val cand = q.join(corpus, Seq("grp", "bucket"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
-        dotF(col("qv"), col("v")).as("dot"))
+        dot(col("qv"), col("v")).as("dot"))
       .dropDuplicates("query_id", "neighbor_id")
     val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("neighbor_id"))
     cand.withColumn("rank", row_number().over(w))
@@ -591,7 +558,6 @@ object Similarity {
                    queryPred: Column, k: Int, dim: Int = 64,
                    outDim: Int = 16, shortlist: Int = 32): DataFrame = {
     val planes = md5Planes(dim, groups = 1, bitsPerGroup = outDim).head
-    val dotF = dotAdaptive(df)(_, _)
     // No persist: nothing here runs an eager action before the caller
     // executes the returned plan, so a persist/unpersist pair inside
     // this function would never be consulted (CacheManager lookup
@@ -600,7 +566,7 @@ object Similarity {
     // scan, which is the cheap part; the y-projection is outDim dots.
     val base = withNorm(df.select(col(idCol).cast("long").as("id"),
         toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("y", transform(typedlit(planes), p => dotF(col("v"), p)))
+      .withColumn("y", transform(typedlit(planes), p => dot(col("v"), p)))
     val q = base.filter(queryPred)
       .select(col("id").as("query_id"), col("v").as("qv"),
         col("__norm").as("qn"), col("y").as("qy"))
@@ -615,7 +581,7 @@ object Similarity {
     val cand = short.withColumn("srn", row_number().over(sw))
       .filter(col("srn") <= shortlist)
     val scored = cand.select(col("query_id"), col("neighbor_id"),
-      (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+      (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
         .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -646,11 +612,10 @@ object Similarity {
                            rpOutDim: Int = 16, shortlist: Int = 32): DataFrame = {
     val dim = planes.head.head.length
     val rp = md5Planes(dim, groups = 1, bitsPerGroup = rpOutDim).head
-    val dotF = dotAdaptive(df)(_, _)
     val base = withNorm(df.select(col(idCol).cast("long").as("id"),
         toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("y", transform(typedlit(rp), p => dotF(col("v"), p)))
-      .withColumn("__buckets", bucketsAll(df, col("v"), planes, dotF))
+      .withColumn("y", transform(typedlit(rp), p => dot(col("v"), p)))
+      .withColumn("__buckets", bucketsAll(col("v"), planes))
     val exploded = base.select(col("id"), col("y"),
       posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val q = exploded.filter(queryPred).select(col("id").as("query_id"),
@@ -673,7 +638,7 @@ object Similarity {
       .join(vecs.select(col("id").as("neighbor_id"), col("v"), col("__norm")),
         "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -708,10 +673,9 @@ object Similarity {
                         queryPred: Column, k: Int, dim: Int = 64,
                         shortlist: Int = 32): DataFrame = {
     val planes = md5Planes(dim, groups = 2, bitsPerGroup = 32)
-    val dotF = dotAdaptive(df)(_, _)
     val base = withNorm(df.select(col(idCol).cast("long").as("id"),
         toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("__sk", bucketsAll(df, col("v"), planes, dotF))
+      .withColumn("__sk", bucketsAll(col("v"), planes))
       .select(col("id"), col("v"), col("__norm"),
         element_at(col("__sk"), 1).as("s1"), element_at(col("__sk"), 2).as("s2"))
     val sk = base.select("id", "s1", "s2")
@@ -731,7 +695,7 @@ object Similarity {
       .join(base.select(col("id").as("neighbor_id"), col("v").as("nv"),
         col("__norm").as("nn")), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        (dotF(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn"))))
+        (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -766,13 +730,12 @@ object Similarity {
                                 probes: Int = 0): DataFrame = {
     val dim = planes.head.head.length
     val skPlanes = md5Planes(dim, groups = 2, bitsPerGroup = 32)
-    val dotF = dotAdaptive(df)(_, _)
     val base = withNorm(df.select(col(idCol).cast("long").as("id"),
         toDoubleVec(col(vecCol)).as("v")), "v")
-      .withColumn("__sk", bucketsAll(df, col("v"), skPlanes, dotF))
+      .withColumn("__sk", bucketsAll(col("v"), skPlanes))
       .withColumn("s1", element_at(col("__sk"), 1))
       .withColumn("s2", element_at(col("__sk"), 2))
-      .withColumn("__buckets", bucketsAll(df, col("v"), planes, dotF))
+      .withColumn("__buckets", bucketsAll(col("v"), planes))
     val exploded = base.select(col("id"), col("s1"), col("s2"),
       posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     val q0 = exploded.filter(queryPred).select(col("id").as("query_id"),
@@ -801,7 +764,7 @@ object Similarity {
       .join(vecs.select(col("id").as("neighbor_id"), col("v"), col("__norm")),
         "neighbor_id")
       .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
+        (dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("__norm"))))
           .as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -817,11 +780,10 @@ object Similarity {
                  cents: Seq[(Int, Seq[Double])], nprobe: Int): DataFrame = {
     val base = withNorm(df.select(col(idCol).as("id"),
       toDoubleVec(col(vecCol)).as("v")), "v")
-    // dotAdaptive for the same reason as assignOn: per-row × per-cell
-    // distance dots are the hot loop, same IEEE order either way
+    // per-row × per-cell distance dots are the hot loop (assignOn)
     val scored = base.crossJoin(broadcast(centFrame(df, cents)))
       .select(col("id").as("vec_id"), col("cell"),
-        (col("__norm") + col("cn") - lit(2.0) * dotAdaptive(base)(col("v"), col("cv")))
+        (col("__norm") + col("cn") - lit(2.0) * dot(col("v"), col("cv")))
           .as("dist"))
     val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cell"))
     scored.withColumn("rn", row_number().over(w))
@@ -836,14 +798,13 @@ object Similarity {
   }
 
   private def assignOn(base: DataFrame, cdf: DataFrame): DataFrame = {
-    // dotAdaptive, not the HOF fold: assignment is the n×k hot loop of
-    // every Lloyd call (kmeans cells, IVF builds, PQ codebooks) and the
-    // native kernel is ~75× per dot at the SAME IEEE accumulation
-    // order (VectorExpressionsSpec bit-equality) — measured on
-    // ann_ivf_scaled below (NOTES_r8)
+    // assignment is the n×k hot loop of every Lloyd call (kmeans
+    // cells, IVF builds, PQ codebooks): the native dot is ~75× the HOF
+    // fold per dot at the SAME IEEE accumulation order — measured on
+    // ann_ivf_scaled (NOTES_r8)
     val scored = base.crossJoin(broadcast(cdf))
       .select(col("id").as("vec_id"), col("cell"),
-        (col("__norm") + col("cn") - lit(2.0) * dotAdaptive(base)(col("v"), col("cv")))
+        (col("__norm") + col("cn") - lit(2.0) * dot(col("v"), col("cv")))
           .as("dist"))
     val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cell"))
     scored.withColumn("rn", row_number().over(w))

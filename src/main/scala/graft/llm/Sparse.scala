@@ -29,15 +29,10 @@ object Sparse {
     * 8-byte keys and the oracle reproduces them exactly.
     */
   def sparseTf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // scalar h32 through the native kernel when available (one md5 →
-    // hex → conv chain per token occurrence otherwise — guide §4;
-    // bit-equality in TextHashExpressionsSpec)
-    val termHash =
-      if (TextHash.nativeHash(df.sparkSession, "h32_native"))
-        call_function("h32_native", col("tok"))
-      else h32(col("tok"))
+    // scalar h32 through the native kernel (bit-equal to the md5 →
+    // hex → conv chain, TextHashExpressionsSpec)
     df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col("id"), termHash.as("term"))
+      .groupBy(col("id"), call_function("h32_native", col("tok")).as("term"))
       .agg(count(lit(1)).as("tf"))
   }
 

@@ -29,15 +29,6 @@ object TextHash {
   def wordSet(text: Column): Column = array_distinct(words(text))
 
 
-  /** True when the fused md5 kernels should be used: the session
-    * carries GraftExtensions. Without them every call site falls back
-    * to the portable higher-order form, which TextHashExpressionsSpec
-    * pins the kernels against. All kernel call sites dispatch through
-    * this.
-    */
-  def nativeHash(session: org.apache.spark.sql.SparkSession, fn: String): Boolean =
-    session.catalog.functionExists(fn)
-
   /** Canonical text form for exact dedup: lowercase, trimmed,
     * whitespace collapsed.
     */

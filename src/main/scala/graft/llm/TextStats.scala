@@ -239,29 +239,14 @@ object TextStats {
     * minhash over character shingles) + distinct gram count.
     */
   def withFingerprint(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    if (TextHash.nativeHash(df.sparkSession, "char_fingerprint")) {
-      // fused kernel: one byte pass computes both outputs (min h32 +
-      // exact distinct-gram count) — the HOF form pays per-gram
-      // md5 → hex → conv through interpreted lambdas plus a second
-      // string-distinct walk (guide §4; bit-equality pinned in
-      // TextHashExpressionsSpec)
-      df.withColumn("__fp", call_function("char_fingerprint", t, lit(8)))
-        .withColumn("fingerprint", col("__fp").getField("fingerprint"))
-        .withColumn("n_grams", col("__fp").getField("n_grams"))
-        .drop("__fp")
-    } else {
-      val grams = transform(
-        sequence(lit(1), greatest(length(t) - 7, lit(1))),
-        i => t.substr(i, lit(8)))
-      // bind the gram array ONCE: referencing the `grams` expression in
-      // both output columns would inline the O(len) substr extraction
-      // twice per row (the HOF lambda-inlining trap — dup_ngram_pairs
-      // measured 2-8x on exactly this pattern)
-      df.withColumn("__grams", grams)
-        .withColumn("fingerprint", array_min(transform(col("__grams"), g => h32(g))))
-        .withColumn("n_grams", size(array_distinct(col("__grams"))))
-        .drop("__grams")
-    }
+    // fused kernel: one byte pass computes both outputs (min h32 +
+    // exact distinct-gram count) — the HOF form pays per-gram
+    // md5 → hex → conv through interpreted lambdas plus a second
+    // string-distinct walk (bit-equality pinned in
+    // TextHashExpressionsSpec)
+    df.withColumn("__fp", call_function("char_fingerprint", col(textCol), lit(8)))
+      .withColumn("fingerprint", col("__fp").getField("fingerprint"))
+      .withColumn("n_grams", col("__fp").getField("n_grams"))
+      .drop("__fp")
   }
 }

@@ -20,36 +20,13 @@ import org.apache.spark.sql.functions._
   * md5-derived (TextHash.h32) so the oracle restates them exactly.
   *
   * Scale design (100 TB): fingerprint extraction is a PURE PROJECTION
-  * — the gram sequence and the windowed minima are higher-order array
-  * functions over each row, zero shuffles, O(len·w) per document with
-  * w small. Only the (doc, fp) pair table is ever shuffled, and it is
-  * ~2/(w+1) the size of the gram table the non-winnowed path ships.
-  * HOF-binding note: the gram array is bound through a one-element
-  * `transform` (and the pair query projects it to a real column)
-  * before any lambda indexes it — an inlined expression would
-  * re-evaluate per probe (the O(len²) trap).
+  * — the gram sequence and the windowed minima are per-row kernels
+  * (`wordgram_h32`, `winnow_mins`), zero shuffles, O(len·w) per
+  * document with w small. Only the (doc, fp) pair table is ever
+  * shuffled, and it is ~2/(w+1) the size of the gram table the
+  * non-winnowed path ships.
   */
 object Winnow {
-
-  /** Ordered (non-distinct) k-gram hash sequence of a document. */
-  private def gramSeq(text: Column, n: Int): Column =
-    element_at(transform(array(TextHash.words(text)), ws => {
-      val cnt = size(ws) - (n - 1)
-      when(cnt <= 0, array().cast("array<bigint>"))
-        .otherwise(transform(sequence(lit(1), cnt),
-          i => TextHash.h32(array_join(slice(ws, i, lit(n)), " "))))
-    }), 1)
-
-  /** Windowed-minimum selection over a bound gram-sequence column. */
-  private def selectMins(hs: Column, w: Int): Column =
-    element_at(transform(array(hs), h => {
-      val cnt = size(h) - (w - 1)
-      when(cnt <= 0,
-        when(size(h) > 0, array(array_min(h)))
-          .otherwise(array().cast("array<bigint>")))
-        .otherwise(array_distinct(transform(sequence(lit(1), cnt),
-          i => array_min(slice(h, i, lit(w))))))
-    }), 1)
 
   /** Per-document fingerprint rows `(doc_id, fp)` — distinct within a
     * document. Documents shorter than `k` words emit nothing; those
@@ -58,21 +35,15 @@ object Winnow {
     */
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 5, w: Int = 4): DataFrame = {
-    // Fused kernels when the session carries GraftExtensions: the
-    // HOF gram hashing (per-gram md5 → hex → conv, interpreted) and
-    // the O(len·w) boxed window-min fold are the measured map-side
-    // cost of this operator family (OPTIMIZATION_r12: ~3 s per gram pass
-    // at sf0.1). Bit-equal incl. dedup order (TextHashExpressionsSpec).
-    val native = TextHash.nativeHash(df.sparkSession, "wordgram_h32")
-    val hs =
-      if (native) call_function("wordgram_h32",
-        TextHash.words(col(textCol)), lit(k), lit(""), lit(0L), lit(false))
-      else gramSeq(col(textCol), k)
-    def mins(h: Column) =
-      if (native) call_function("winnow_mins", h, lit(w))
-      else selectMins(h, w)
+    // Fused kernels: the HOF gram hashing (per-gram md5 → hex → conv,
+    // interpreted) and the O(len·w) boxed window-min fold they replace
+    // were the measured map-side cost of this operator family
+    // (OPTIMIZATION_r12: ~3 s per gram pass at sf0.1). Bit-equal incl.
+    // dedup order (TextHashExpressionsSpec).
+    val hs = call_function("wordgram_h32",
+      TextHash.words(col(textCol)), lit(k), lit(""), lit(0L), lit(false))
     df.select(col(idCol).cast("long").as("doc_id"), hs.as("hs"))
-      .select(col("doc_id"), mins(col("hs")).as("fps"))
+      .select(col("doc_id"), call_function("winnow_mins", col("hs"), lit(w)).as("fps"))
       .select(col("doc_id"), explode(col("fps")).as("fp"))
   }
 

@@ -104,8 +104,8 @@ object Wordpiece {
     * `wordpiece_count` by GraftExtensions): one primitive loop per
     * word against two hashed vocab sets instead of the interpreted
     * 24-step × maxPiece-probe HOF fold. Bit-equal on split() input
-    * (WordpieceNativeSpec); requires the extension to be installed —
-    * callers that must run on a vanilla session keep the HOF form.
+    * (WordpieceNativeSpec); like every kernel call it needs a session
+    * carrying GraftExtensions ([[graft.Session]]).
     */
   def tokenCountNative(text: Column, vs: Seq[(String, Boolean)],
                        maxWordLen: Int = 24): Column = {

@@ -947,7 +947,7 @@ object AnalyticsQueries {
   private def bucketedKnnGraph(s: org.apache.spark.sql.SparkSession,
                                dir: String) = {
     val emb = Tables.embeddings(s, dir)
-    val blk = Similarity.refineBlock(emb, col("label"), col("embedding"), bits = 3)
+    val blk = Similarity.refineBlock(col("label"), col("embedding"), bits = 3)
     Similarity.knnGraph(emb.withColumn("blk", blk), "vec_id", "embedding", "blk", k = 3)
   }
 

@@ -451,12 +451,11 @@ object LlmQueries {
       val base = Similarity.withNorm(
         Tables.embeddings(s, dir).select(col("vec_id"), col("label"),
           Similarity.toDoubleVec(col("embedding")).as("v")), "v")
-      val dotF = Similarity.dotAdaptive(base)(_, _)
       base.as("a").join(base.as("b"),
           col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          (dotF(col("a.v"), col("b.v")) / (sqrt(col("a.__norm")) * sqrt(col("b.__norm"))))
-            .as("cosine"))
+          (Similarity.dot(col("a.v"), col("b.v")) /
+            (sqrt(col("a.__norm")) * sqrt(col("b.__norm")))).as("cosine"))
         .filter(col("cosine") >= 0.35)
     },
     Some("""
@@ -1210,13 +1209,12 @@ object LlmQueries {
       val base = Similarity.withNorm(
         Tables.embeddings(s, dir).select(col("vec_id"), col("label"),
           Similarity.toDoubleVec(col("embedding")).as("v")), "v")
-      val dotF = Similarity.dotAdaptive(base)(_, _)
       val eval_ = base.filter(col("vec_id") % 40 === 0)
       val train = base.filter(col("vec_id") % 40 =!= 0)
       val scored = train.as("t").join(eval_.as("e"),
           col("t.label") === col("e.label"))
         .select(col("t.vec_id").as("train_id"), col("e.vec_id").as("eval_id"),
-          (dotF(col("t.v"), col("e.v")) /
+          (Similarity.dot(col("t.v"), col("e.v")) /
             (sqrt(col("t.__norm")) * sqrt(col("e.__norm")))).as("cosine"))
         .filter(col("cosine") >= 0.25)
       val w = org.apache.spark.sql.expressions.Window
@@ -1328,7 +1326,7 @@ object LlmQueries {
     "knn_graph_bucketed",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val blk = Similarity.refineBlock(emb, col("label"), col("embedding"), bits = 3)
+      val blk = Similarity.refineBlock(col("label"), col("embedding"), bits = 3)
       Similarity.knnGraph(emb.withColumn("blk", blk), "vec_id", "embedding", "blk", k = 3)
     },
     Some("""

@@ -95,23 +95,33 @@ object StatefulFeatures {
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: Long, it: Iterator[Tick], state: GroupState[FeatState]) => {
-          val batch = it.toArray.sortBy(_.tsUs)
-          var st = state.getOption.getOrElse(FeatState(0.0, 0.0, 0, hasPrev = false))
-          val out = batch.map { t =>
-            val e = if (!st.hasPrev) t.price else alpha * t.price + (1 - alpha) * st.ewma
-            val ofi = if (!st.hasPrev) None
-            else {
-              val bid = if (t.price >= st.prevPrice) t.size else -st.prevSize
-              val ask = if (t.price <= st.prevPrice) t.size else -st.prevSize
-              Some(bid - ask)
-            }
-            st = FeatState(e, t.price, t.size, hasPrev = true)
-            FeatOut(key, t.tsUs, t.price, e, ofi)
-          }
+          val (out, st) = featStep(alpha, key, it, state.getOption)
           state.update(st)
           out.iterator
         })
       .toDF()
+  }
+
+  /** One key's micro-batch through the EWMA/OFI step, in event-time
+    * order, from the stored state (none before the key's first tick):
+    * the output rows and the state to store. Shared by [[apply]] and
+    * [[FeatProcessor]], so both stateful APIs compute the same rows.
+    */
+  private def featStep(alpha: Double, key: Long, rows: Iterator[Tick],
+                       stored: Option[FeatState]): (Array[FeatOut], FeatState) = {
+    var st = stored.getOrElse(FeatState(0.0, 0.0, 0, hasPrev = false))
+    val out = rows.toArray.sortBy(_.tsUs).map { t =>
+      val e = if (!st.hasPrev) t.price else alpha * t.price + (1 - alpha) * st.ewma
+      val ofi = if (!st.hasPrev) None
+      else {
+        val bid = if (t.price >= st.prevPrice) t.size else -st.prevSize
+        val ask = if (t.price <= st.prevPrice) t.size else -st.prevSize
+        Some(bid - ask)
+      }
+      st = FeatState(e, t.price, t.size, hasPrev = true)
+      FeatOut(key, t.tsUs, t.price, e, ofi)
+    }
+    (out, st)
   }
 
   /** `transformWithState` form of [[apply]] — Spark 4's successor
@@ -139,20 +149,8 @@ object StatefulFeatures {
 
     override def handleInputRows(key: Long, rows: Iterator[Tick],
                                  timerValues: TimerValues): Iterator[FeatOut] = {
-      val batch = rows.toArray.sortBy(_.tsUs)
-      var st = if (state.exists()) state.get()
-               else FeatState(0.0, 0.0, 0, hasPrev = false)
-      val out = batch.map { t =>
-        val e = if (!st.hasPrev) t.price else alpha * t.price + (1 - alpha) * st.ewma
-        val ofi = if (!st.hasPrev) None
-        else {
-          val bid = if (t.price >= st.prevPrice) t.size else -st.prevSize
-          val ask = if (t.price <= st.prevPrice) t.size else -st.prevSize
-          Some(bid - ask)
-        }
-        st = FeatState(e, t.price, t.size, hasPrev = true)
-        FeatOut(key, t.tsUs, t.price, e, ofi)
-      }
+      val (out, st) = featStep(alpha, key, rows,
+        if (state.exists()) Some(state.get()) else None)
       state.update(st)
       out.iterator
     }

@@ -56,13 +56,12 @@ object StreamAnn {
               idCol: String, vecCol: String,
               planes: Seq[Seq[Seq[Double]]], minCosine: Double,
               passThrough: Seq[String] = Nil): DataFrame = {
-    val dotF = Similarity.dotAdaptive(stream)(_, _)
     val probe = Similarity.withNorm(
         stream.select((col(idCol).cast("long").as("id") +:
           passThrough.map(col)) :+
           Similarity.toDoubleVec(col(vecCol)).as("qv"): _*), "qv")
       .withColumnRenamed("__norm", "qn")
-      .withColumn("__buckets", Similarity.bucketsAll(stream, col("qv"), planes, dotF))
+      .withColumn("__buckets", Similarity.bucketsAll(col("qv"), planes))
       .select((col("id") +: passThrough.map(col)) ++ Seq(col("qv"), col("qn"),
         posexplode(col("__buckets")).as(Seq("grp", "bucket"))): _*)
     probe.join(buckets, Seq("grp", "bucket"))
@@ -70,7 +69,7 @@ object StreamAnn {
       .join(vectors, "corpus_id")
       .select((col("id") +: passThrough.map(col)) ++ Seq(col("corpus_id"),
         col("grp"),
-        (dotF(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
+        (Similarity.dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
           .as("cosine")): _*)
       .filter(col("cosine") >= minCosine)
   }

@@ -51,14 +51,14 @@ object StreamDedup {
     val rows = numPerm / bands
     val probe = docs
       .select((col(idCol).as("id") +: passThrough.map(col)) :+
-        Dedup.wordHashSetAdaptive(docs)(wordSet(col(textCol))).as("hs"): _*)
-      .withColumn("sig", Dedup.minhashSignatureAdaptive(docs)(col("hs"), numPerm))
+        Dedup.wordHashSet(wordSet(col(textCol))).as("hs"): _*)
+      .withColumn("sig", Dedup.minhashSignature(col("hs"), numPerm))
       .withColumn("bands", Dedup.bandHashes(col("sig"), bands, rows))
       .select((col("id") +: passThrough.map(col)) ++ Seq(col("hs"),
         posexplode(col("bands")).as(Seq("band_idx", "band_hash"))): _*)
     val corpus = index.select(col("id").as("corpus_id"),
       col("hs").as("corpus_hs"), col("band_idx"), col("band_hash"))
-    val inter = Dedup.intersectCardAdaptive(docs)(col("hs"), col("corpus_hs"))
+    val inter = Dedup.intersectCard(col("hs"), col("corpus_hs"))
     probe.join(corpus, Seq("band_idx", "band_hash"))
       .filter(col("id") =!= col("corpus_id"))
       .select((col("id") +: passThrough.map(col)) ++ Seq(col("corpus_id"),

@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
@@ -21,14 +21,6 @@ import graft.ops.{Candles, Envelope}
   * bytes/string `value` on the wire, typed struct inside.
   */
 object Streams {
-
-  /** Raw-ingest plan (reference `kafka_to_gcs_by_spark_streaming.py`):
-    * wire `value` → explicit-schema parse → flatten → partition
-    * columns. Pure map — no shuffle, scales with source parallelism.
-    */
-  def rawIngest(wire: DataFrame, schema: StructType): DataFrame =
-    Envelope.parse(Envelope.bytesToString(wire), schema)
-      .withColumn("processing_date", current_date())
 
   /** Feature pipeline plan (reference
     * `kafka_to_kafka_by_spark_for_druid.py`): parse → event-time +
@@ -123,14 +115,6 @@ object Streams {
       .trigger(trigger)
     if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w
   }
-
-  /** Run queries concurrently and await any termination — the
-    * idiomatic form of the reference's thread-per-query await
-    * (`kafka_to_gcs_by_spark_streaming.py:93-102`). Distinct
-    * checkpoint dirs per query are load-bearing (reference comment).
-    */
-  def awaitAny(spark: SparkSession, queries: Seq[StreamingQuery]): Unit =
-    spark.streams.awaitAnyTermination()
 
   /** `foreachBatch` upsert sink: maintains a latest-state table under
     * `statePath` keyed by `keyCols` with `orderCols` deciding

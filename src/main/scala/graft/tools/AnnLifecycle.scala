@@ -59,11 +59,10 @@ object AnnLifecycle {
           indexDir: String, cells: Int, delta: Option[DataFrame],
           k: Int = 5, nprobe: Int = 2,
           retrainFactor: Double = 2.0): Seq[Stage] = {
-    val dotF = Similarity.dotAdaptive(corpus)(_, _)
     val dim = corpus.select(Similarity.toDoubleVec(col(vecCol)).as("v"))
       .limit(1).collect().head.getSeq[Double](0).length
     def memberMeans(v: DataFrame): DataFrame = Similarity.cellCentroids(
-      v.select(col("corpus_id").as("id"), col("cell"), col("v")), dim, dotF)
+      v.select(col("corpus_id").as("id"), col("cell"), col("v")), dim)
     def churnOf(v: DataFrame): Double =
       AnnIndex.ivfChurn(v, memberMeans(v)).collect()(0).getDouble(2)
 

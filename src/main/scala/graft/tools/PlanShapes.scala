@@ -25,6 +25,11 @@ import graft.Session
   * differ at other scale factors — the ledger pins ONE observation
   * point and watches it move.
   *
+  * Pushed filters are recorded as a total and per scanned relation
+  * (`pushed_by_relation`: the relation's file or directory name → the
+  * pushed-filter count of each of its scans), so `plan_drift.py` can
+  * tell a scan that lost a filter from a scan that is only reused.
+  *
   * Usage: tools/run.sh graft.tools.PlanShapes [sfDir] [outJson] [names...]
   */
 object PlanShapes {
@@ -32,14 +37,41 @@ object PlanShapes {
   final case class Shape(shuffles: Int, broadcasts: Int,
                          joins: Map[String, Int], aggregates: Int,
                          windows: Int, sorts: Int, scans: Int,
-                         pushedFilters: Int, wholeStage: Int) {
+                         pushedByRelation: Map[String, Seq[Int]],
+                         wholeStage: Int) {
+    def pushedFilters: Int = pushedByRelation.values.flatten.sum
+
     def json: String = {
       val js = joins.toSeq.sorted
         .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      val pr = pushedByRelation.toSeq.sortBy(_._1)
+        .map { case (k, v) => s""""${Json.esc(k)}":${v.sorted.mkString("[", ",", "]")}""" }
+        .mkString("{", ",", "}")
       s"""{"shuffles":$shuffles,"broadcasts":$broadcasts,"joins":$js,""" +
         s""""aggregates":$aggregates,"windows":$windows,"sorts":$sorts,""" +
         s""""scans":$scans,"pushed_filters":$pushedFilters,""" +
-        s""""wholestage_spans":$wholeStage}"""
+        s""""pushed_by_relation":$pr,"wholestage_spans":$wholeStage}"""
+    }
+  }
+
+  /** Number of filters in a scan's `PushedFilters` metadata string,
+    * e.g. `[IsNotNull(event_type), EqualTo(event_type,purchase)]` → 2:
+    * the commas outside every parenthesis and inner bracket, plus one
+    * unless the list is empty.
+    */
+  def pushedFilterCount(pushed: String): Int = {
+    val body = pushed.trim.stripPrefix("[").stripSuffix("]")
+    if (body.trim.isEmpty) 0
+    else {
+      var depth = 0
+      var commas = 0
+      body.foreach {
+        case '(' | '[' => depth += 1
+        case ')' | ']' => depth -= 1
+        case ',' if depth == 0 => commas += 1
+        case _ =>
+      }
+      commas + 1
     }
   }
 
@@ -52,10 +84,9 @@ object PlanShapes {
       "CartesianProductExec")
     val joins = joinNames.map(j => j -> cnt(j)).filter(_._2 > 0).toMap
     val pushed = nodes.collect { case s: FileSourceScanExec =>
-      s.metadata.get("PushedFilters")
-        .map(f => f.count(_ == ',') + (if (f.trim == "[]") 0 else 1))
-        .getOrElse(0)
-    }.sum
+      s.relation.location.rootPaths.map(_.getName).sorted.mkString(",") ->
+        s.metadata.get("PushedFilters").map(pushedFilterCount).getOrElse(0)
+    }.groupMap(_._1)(_._2)
     Shape(
       shuffles = cnt("ShuffleExchangeExec"),
       broadcasts = cnt("BroadcastExchangeExec"),
@@ -65,7 +96,7 @@ object PlanShapes {
       windows = cnt("WindowExec", "WindowGroupLimitExec"),
       sorts = cnt("SortExec"),
       scans = cnt("FileSourceScanExec", "BatchScanExec"),
-      pushedFilters = pushed,
+      pushedByRelation = pushed,
       wholeStage = cnt("WholeStageCodegenExec"))
   }
 

@@ -9,9 +9,9 @@ import graft.llm.TextHash._
 /** Bit-equality of the fused md5 text-hash kernels against the
   * portable HOF forms they replace — on the real fixture corpus AND
   * adversarial synthetic rows (empty text, docs shorter than the gram
-  * width, unicode multi-byte chars, heavy repetition). Every call site
-  * dispatches adaptively, so these equalities are exactly the claim
-  * that native and plain sessions produce identical query results.
+  * width, unicode multi-byte chars, heavy repetition). The operators
+  * call only the kernels, so these equalities are the claim that the
+  * kernels compute the md5-prefix hashes the DuckDB oracle restates.
   */
 class TextHashExpressionsSpec extends SparkSpec {
 
@@ -58,7 +58,7 @@ class TextHashExpressionsSpec extends SparkSpec {
       assertColsEqual(d,
         call_function("wordgram_h32", words(col("text")), lit(8), lit(""),
           lit(0L), lit(true)),
-        graft.llm.Decontam.gramHashes(col("text"), 8))
+        KernelReference.gramHashes(col("text"), 8))
     }
   }
 
@@ -106,8 +106,8 @@ class TextHashExpressionsSpec extends SparkSpec {
     // 2-gram windows joining to "a" and "b"); for n = 1 it maps to a
     // null hash (transform semantics). No production caller produces
     // null elements today (words() = split never does) — this test
-    // documents what happens if one ever did, so native and portable
-    // arms can be held to the same contract.
+    // documents what happens if one ever did, so the kernel and the HOF
+    // form can be held to the same contract.
     val arr = array(lit("a"), lit(null).cast("string"), lit("b"))
     val d = Seq(Tuple1(1L)).toDF("doc_id")
     assertColsEqual(d,

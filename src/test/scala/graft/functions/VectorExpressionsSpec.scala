@@ -5,6 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 import graft.llm.Similarity
 
+/** Bit-equality of the fused vector kernels (`dot_native`,
+  * `plane_buckets`, `simhash_native`, `minhash_sig`, `intersect_card`)
+  * against the higher-order forms in [[KernelReference]] and the
+  * built-ins — including null elements and ragged lengths. The
+  * operators call only the kernels, so these equalities are the claim
+  * that the kernels compute the folds the DuckDB oracle restates.
+  */
 class VectorExpressionsSpec extends SparkSpec {
 
   private def vecs = Similarity.withNorm(
@@ -15,7 +22,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = vecs.limit(200).crossJoin(
       vecs.limit(200).select(col("vec_id").as("id2"), col("v").as("v2")))
     val cmp = df.select(
-      Similarity.dot(col("v"), col("v2")).as("hof"),
+      KernelReference.dot(col("v"), col("v2")).as("hof"),
       call_function("dot_native", col("v"), col("v2")).as("native"))
     assert(cmp.filter(col("hof") =!= col("native")).count() === 0)
     assert(cmp.filter(col("native").isNull).count() === 0)
@@ -25,8 +32,9 @@ class VectorExpressionsSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((Seq(Some(1.0), None, Some(3.0)), Seq(Some(1.0), Some(2.0), Some(3.0))))
       .toDF("a", "b")
-    val out = df.select(call_function("dot_native", col("a"), col("b"))).collect()
-    assert(out(0).isNullAt(0))
+    val out = df.select(call_function("dot_native", col("a"), col("b")),
+      KernelReference.dot(col("a"), col("b"))).collect()
+    assert(out(0).isNullAt(0) && out(0).isNullAt(1))
   }
 
   test("ragged-length input is NULL, matching the higher-order form") {
@@ -34,16 +42,16 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
     val out = df.select(
       call_function("dot_native", col("a"), col("b")).as("native"),
-      Similarity.dot(col("a"), col("b")).as("hof")).collect()(0)
+      KernelReference.dot(col("a"), col("b")).as("hof")).collect()(0)
     assert(out.isNullAt(0) && out.isNullAt(1))
   }
 
   test("simhash_native equals the 60-fold higher-order form bit-for-bit") {
-    import graft.llm.{Dedup, TextHash}
+    import graft.llm.TextHash
     val hs = Tables.documents(spark, sf("sf0.01"))
       .select(transform(TextHash.wordSet(col("text")), t => TextHash.h60(t)).as("hs"))
     val cmp = hs.select(
-      Dedup.simhash(col("hs")).as("hof"),
+      KernelReference.simhash(col("hs")).as("hof"),
       call_function("simhash_native", col("hs")).as("native"))
     assert(cmp.filter(col("hof") =!= col("native")).count() === 0)
     assert(cmp.filter(col("native").isNull).count() === 0)
@@ -55,12 +63,12 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("minhash_sig equals the nested higher-order form bit-for-bit") {
-    import graft.llm.{Dedup, TextHash}
+    import graft.llm.TextHash
     val hs = Tables.documents(spark, sf("sf0.01"))
       .select(array_distinct(transform(TextHash.wordSet(col("text")),
         t => TextHash.h32(t))).as("hs"))
     val cmp = hs.select(
-      Dedup.minhashSignature(col("hs"), 16).as("hof"),
+      KernelReference.minhashSignature(col("hs"), 16).as("hof"),
       call_function("minhash_sig", col("hs"), lit(16)).as("native"))
     assert(cmp.filter(not(col("hof") <=> col("native"))).count() === 0)
     // empty input: all-null signature, like array_min over empty
@@ -89,16 +97,7 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("plane_buckets equals the HOF literal fold bit-for-bit") {
     val planes = Similarity.md5Planes(dim = 64, groups = 4, bitsPerGroup = 6)
-    val bits = planes.head.length
-    val weights = typedLit(Seq.tabulate(bits)(1L << _))
-    // the fallback HOF form bucketsAll uses (same expression shape)
-    def hofBuckets(v: org.apache.spark.sql.Column) =
-      transform(typedLit(planes), g =>
-        aggregate(
-          transform(g, (plane, p) =>
-            when(Similarity.dot(v, plane) > 0, element_at(weights, p + 1))
-              .otherwise(0L)),
-          lit(0L), (acc, x) => acc + x))
+    def hofBuckets(v: org.apache.spark.sql.Column) = KernelReference.planeBuckets(v, planes)
     val cmp = vecs.select(
       hofBuckets(col("v")).as("hof"),
       call_function("plane_buckets", col("v"), typedLit(planes)).as("native"))
@@ -131,9 +130,9 @@ class VectorExpressionsSpec extends SparkSpec {
       df.select(sum(c)).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    time(Similarity.dot(col("v"), col("v2")))                 // warm both
+    time(KernelReference.dot(col("v"), col("v2")))                 // warm both
     time(call_function("dot_native", col("v"), col("v2")))
-    val hof = time(Similarity.dot(col("v"), col("v2")))
+    val hof = time(KernelReference.dot(col("v"), col("v2")))
     val native = time(call_function("dot_native", col("v"), col("v2")))
     info(f"hof=$hof%.2fs native=$native%.2fs speedup=${hof / native}%.1fx (250k pairs x 64 dims)")
     assert(native <= hof * 1.2) // allow noise; expectation is native is faster

@@ -253,9 +253,8 @@ class AnnIndexSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     val emb = graft.Tables.embeddings(spark, sf())
       .select(col("vec_id"), col("embedding"))
-    val dotF = Similarity.dotAdaptive(emb)(_, _)
     def memberMeans(v: org.apache.spark.sql.DataFrame) = Similarity.cellCentroids(
-      v.select(col("corpus_id").as("id"), col("cell"), col("v")), dim = 64, dotF)
+      v.select(col("corpus_id").as("id"), col("cell"), col("v")), dim = 64)
 
     // BUILD: persist the index pair as production would
     val dir = Files.createTempDirectory("graft_ivf_life").toString

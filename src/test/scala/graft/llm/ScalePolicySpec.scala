@@ -78,11 +78,11 @@ class ScalePolicySpec extends SparkSpec {
     val n = emb.count()
     // sf0.001 has few rows per label: policy says no refinement
     val plain = emb.withColumn("blk",
-      ScalePolicy.refinedBlockAuto(emb, col("label"), col("embedding"), n, blocks = 10))
+      ScalePolicy.refinedBlockAuto(col("label"), col("embedding"), n, blocks = 10))
     assert(plain.filter(col("blk") =!= col("label").cast("string")).count() == 0)
     // forcing a large virtual corpus produces a strictly finer key
     val fine = emb.withColumn("blk",
-      ScalePolicy.refinedBlockAuto(emb, col("label"), col("embedding"),
+      ScalePolicy.refinedBlockAuto(col("label"), col("embedding"),
         corpus = 1000000, blocks = 10))
     val coarse = plain.select(countDistinct("blk")).first().getLong(0)
     val refined = fine.select(countDistinct("blk")).first().getLong(0)

@@ -17,7 +17,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("refineBlock is a deterministic refinement of the label partition") {
     val emb = Tables.embeddings(spark, sf("sf0.01"))
-    val blk = Similarity.refineBlock(emb, col("label"), col("embedding"), bits = 3)
+    val blk = Similarity.refineBlock(col("label"), col("embedding"), bits = 3)
     val rows = emb.withColumn("blk", blk).select("label", "blk").distinct().collect()
     // every refined block lives inside exactly one label block
     assert(rows.map(_.getString(1)).distinct.length === rows.length)

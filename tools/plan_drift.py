@@ -12,7 +12,12 @@ Rules per query present in both records:
   FAIL  shuffles grew
   FAIL  broadcast joins shrank while shuffle-side joins grew
         (broadcast -> SMJ/SHJ/cartesian downgrade)
-  FAIL  pushed_filters shrank (a filter stopped reaching the scan)
+  FAIL  a relation scanned in both records lost pushed filters: the
+        fewest or the most filters on any of its scans went down
+        (per-relation counts, `pushed_by_relation`). A scan that is
+        only dropped or reused is not a loss.
+  FAIL  pushed_filters (the query total) shrank -- only when a record
+        has no per-relation counts; a warning says so
   WARN  wholestage_spans shrank (codegen coverage lost)
   info  shuffles shrank / broadcasts grew (improvements)
 New, removed, or errored queries are informational: coverage is
@@ -25,6 +30,25 @@ import sys, json
 
 SHUFFLE_JOINS = ("SortMergeJoinExec", "ShuffledHashJoinExec",
                  "CartesianProductExec")
+
+
+def pushed_filter_losses(name, o, n, warns):
+    """FAIL lines for filters that stopped reaching a scan of `name`."""
+    if "pushed_by_relation" not in o or "pushed_by_relation" not in n:
+        if n["pushed_filters"] < o["pushed_filters"]:
+            warns.append(f"  warn {name}: no per-relation pushed filters in "
+                         f"one record, using the query total")
+            return [f"  FAIL {name}: pushed_filters "
+                    f"{o['pushed_filters']} -> {n['pushed_filters']}"]
+        return []
+    old_rel, new_rel = o["pushed_by_relation"], n["pushed_by_relation"]
+    losses = []
+    for rel in sorted(set(old_rel) & set(new_rel)):
+        ov, nv = old_rel[rel], new_rel[rel]
+        if min(nv) < min(ov) or max(nv) < max(ov):
+            losses.append(f"  FAIL {name}: pushed filters on {rel} "
+                          f"{ov} -> {nv}")
+    return losses
 
 
 def main(old_path, new_path):
@@ -51,9 +75,7 @@ def main(old_path, new_path):
         if nb < ob and ns > os_:
             fails.append(f"  FAIL {name}: broadcast joins {ob} -> {nb} while "
                          f"shuffle joins {os_} -> {ns} (downgrade)")
-        if n["pushed_filters"] < o["pushed_filters"]:
-            fails.append(f"  FAIL {name}: pushed_filters "
-                         f"{o['pushed_filters']} -> {n['pushed_filters']}")
+        fails.extend(pushed_filter_losses(name, o, n, warns))
         if n["wholestage_spans"] < o["wholestage_spans"]:
             warns.append(f"  warn {name}: wholestage_spans "
                          f"{o['wholestage_spans']} -> {n['wholestage_spans']}")
