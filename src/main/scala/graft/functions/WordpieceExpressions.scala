@@ -74,7 +74,7 @@ object WordpieceKernels {
 /** `wordpiece_count(words, vocab, maxWordLen)` — native fused greedy
   * WordPiece scorer: one primitive loop per word against two hashed
   * vocab sets, replacing the interpreted 24-step × maxPiece-probe HOF
-  * fold of [[graft.llm.Wordpiece.tokenCountCol]] (the measured
+  * fold (kept in the test tree as `WordpieceReference`; the measured
   * 18.8× native-kernel lesson from the dedup family, applied to the
   * tokenizer stream scorer). Bit-equal to the HOF form on split()
   * input — proved in WordpieceNativeSpec against `wordTokenCounts`

@@ -168,7 +168,7 @@ object AnnIndex {
     * different objects (FAISS keeps the same split: the coarse
     * quantizer assigns, the index serves search): probe ranking must
     * match ivfTopK's member-means for bit-equality, while
-    * [[ivfAssign]] must reuse the training centroids or delta
+    * [[ivfAssignStream]] must reuse the training centroids or delta
     * assignments drift from the build's own cells (measured: 34/450
     * borderline flips when assigning against member-means).
     *
@@ -206,47 +206,27 @@ object AnnIndex {
   }
 
   /** Assign NEW vectors against the persisted QUANTIZER without
-    * retraining (the FAISS `add()` path — IVF delta ingest): argmin
-    * of ‖v‖² + ‖c‖² − 2·v·c over the broadcast training centroids
-    * with ties to the smallest cell — the exact assignment rule of
-    * the build, so a delta ingested this way and appended to the
-    * vectors table is indistinguishable from having been present at
-    * build time (AnnIndexSpec pins reassignment of the build corpus
-    * to zero flips). Pass the `quantizer` table from [[buildIvf]] —
-    * NOT the probe centroids (member-means move with membership;
-    * assigning against them drifts borderline vectors). Centroid
-    * drift itself is the scheduled re-train's job, as in FAISS
-    * practice.
-    */
-  def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-                centroids: DataFrame): DataFrame = {
-    val base = Similarity.withNorm(
-      df.select(col(idCol).cast("long").as("corpus_id"),
-        Similarity.toDoubleVec(col(vecCol)).as("v")), "v")
-    val scored = base.crossJoin(broadcast(
-        centroids.select(col("c_cell"), col("cv"), col("cn"))))
-      .select(col("corpus_id"), col("c_cell"), col("v"), col("__norm"),
-        (col("__norm") + col("cn") -
-          lit(2.0) * Similarity.dot(col("v"), col("cv"))).as("dist"))
-    val w = Window.partitionBy("corpus_id").orderBy(col("dist"), col("c_cell"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("corpus_id"), col("c_cell").as("cell"), col("v"),
-        col("__norm").as("nrm"))
-  }
-
-  /** [[ivfAssign]] as a STREAM-LEGAL pure projection — the streaming
-    * delta-ingest path for the persisted IVF index. The quantizer is
+    * retraining (the FAISS `add()` path — IVF delta ingest) as a
+    * STREAM-LEGAL pure projection: argmin of ‖v‖² + ‖c‖² − 2·v·c over
+    * the training centroids with ties to the smallest cell — the exact
+    * assignment rule of the build, so a delta ingested this way and
+    * appended to the vectors table is indistinguishable from having
+    * been present at build time. Pass the `quantizer` table from
+    * [[buildIvf]] — NOT the probe centroids (member-means move with
+    * membership; assigning against them drifts borderline vectors).
+    * Centroid drift itself is the scheduled re-train's job. The
+    * quantizer is
     * k·dim doubles (driver state by construction, the Lloyd-loop
-    * argument), so instead of the batch form's crossJoin + rank window
-    * (illegal on an unaggregated stream, and an n·k shuffle even in
-    * batch), the argmin runs MAP-SIDE over the quantizer as one array
+    * argument), so instead of a crossJoin + rank window (illegal on an
+    * unaggregated stream, and an n·k shuffle even in batch), the argmin
+    * runs MAP-SIDE over the quantizer as one array
     * literal: per row, `array_min` over (dist, cell) structs — struct
     * ordering is (dist asc, cell asc), exactly the batch tie rule.
     * Distances use the same [[Similarity.dot]] fold at the same IEEE
-    * accumulation order, so assignments are bit-equal to [[ivfAssign]]
-    * (AnnIndexSpec pins zero flips on the build corpus and per-row
-    * (v, nrm) equality on a streamed delta).
+    * accumulation order, so assignments are bit-equal to the batch
+    * crossJoin + rank-window form kept in the test tree
+    * (`IvfAssignReference`; AnnIndexSpec pins zero flips on the build
+    * corpus and per-row (v, nrm) equality on a streamed delta).
     *
     * Because the result is a stateless projection, the NATIVE parquet
     * streaming sink appends it exactly-once (file-sink manifest log) —
@@ -319,7 +299,7 @@ object AnnIndex {
     * quantizer, AnnIndexSpec): one row
     * `(total, flipped, churn_rate)` where `flipped` counts vectors
     * whose stored cell differs from their argmin under the CURRENT
-    * member-mean centroids. As [[ivfAssign]]/[[ivfAssignStream]]
+    * member-mean centroids. As [[ivfAssignStream]]
     * deltas accumulate, member means drift away from the frozen
     * training quantizer and churn grows — probe recall decays with it
     * because [[ivfTopK]] ranks probe cells by those member means while

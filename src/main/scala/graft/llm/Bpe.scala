@@ -156,93 +156,6 @@ object Bpe {
     BpeModel(ms, fin)
   }
 
-  /** [[train]] with a persisted merge log — the driver-loop
-    * failure-recovery path (r6 VERDICT #6: the merge loop is the one
-    * driver-sequential stage of the engine, ~250–650 ms/merge
-    * measured, so a 30k-merge production vocabulary is hours of
-    * driver wall-clock that should not restart from merge 0 on a
-    * driver loss). Every `every` merges the full merge list is
-    * written atomically (temp + rename) to `dir/merges.tsv`; on
-    * restart the log is replayed onto a fresh word count — pure
-    * projection chains, no pair-count jobs, no argmax collects — and
-    * training continues from the next merge. Replay is bit-exact
-    * because training state IS (merge list, fold-applied word table):
-    * the same applyMerge folds run in the same order on the same
-    * deterministic word count. The ever-symbol veto set is reseeded
-    * as (initial symbols of the fresh table) ∪ (products of replayed
-    * merges) — exactly the uninterrupted run's set at that point
-    * (replayed-table symbols alone would miss merged-away initial
-    * symbols and weaken the batch-exactness veto). Bit-identity of
-    * interrupted-vs-uninterrupted vocab is BpeResumeSpec's job.
-    *
-    * Symbols never contain whitespace (words() splits on it), so the
-    * TSV log needs no escaping.
-    */
-  def trainResumable(df: DataFrame, textCol: String, numMerges: Int,
-                     batch: Int = 1, dir: String,
-                     every: Int = 500): BpeModel = {
-    require(batch >= 1, s"batch must be >= 1, got $batch")
-    require(every >= 1, s"every must be >= 1, got $every")
-    val log = new java.io.File(dir, "merges.tsv")
-    new java.io.File(dir).mkdirs()
-    // take(numMerges): a log holding MORE merges than this invocation's
-    // budget (resume with a smaller numMerges) replays only the prefix,
-    // honoring the "up to numMerges TOTAL" contract — replay order is
-    // the training order, so the prefix is exactly the smaller run.
-    // onDisk keeps the FULL log; the tail beyond the budget is trained
-    // capital (~250-650 ms/merge) the final persist must not destroy.
-    val onDisk: Seq[(Int, String, String, Long)] =
-      if (!log.isFile) Seq.empty
-      else {
-        val src = scala.io.Source.fromFile(log, "UTF-8")
-        try src.getLines().map { ln =>
-          val Array(r, a, b, n) = ln.split("\t", 4)
-          (r.toInt, a, b, n.toLong)
-        }.toVector finally src.close()
-      }
-    val prior = onDisk.take(numMerges)
-    def persist(ms: Seq[(Int, String, String, Long)]): Unit = {
-      val tmp = new java.io.File(dir, "merges.tsv.tmp")
-      val w = new java.io.PrintWriter(tmp, "UTF-8")
-      try ms.foreach { case (r, a, b, n) => w.println(s"$r\t$a\t$b\t$n") }
-      finally w.close()
-      java.nio.file.Files.move(tmp.toPath, log.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    var cur = wordCounts(df, textCol)
-      .withColumn("s", spaced(col("word")))
-      .localCheckpoint()
-    val symbols = collection.mutable.Set.empty[String]
-    if (batch > 1)
-      symbols ++= cur.select(explode(symsOf(col("s"))).as("c"))
-        .distinct().collect().map(_.getString(0))
-    // replay in bounded chunks so the fold's expression tree (and the
-    // janino compile it costs) stays O(chunk), with lineage cut per
-    // chunk as in the live loop
-    prior.grouped(32).foreach { chunk =>
-      val applied = chunk.foldLeft(col("s")) { case (c, (_, a, b, _)) =>
-        applyMerge(c, a, b)
-      }
-      cur = cur.withColumn("s", applied).localCheckpoint()
-    }
-    symbols ++= prior.map(m => m._2 + m._3)
-    var sincePersist = 0
-    val (ms, fin) = mergeLoop(cur, symbols, prior, numMerges, batch, all => {
-      sincePersist += 1
-      if (sincePersist >= every) { persist(all.toSeq); sincePersist = 0 }
-    })
-    // Persist only when it GROWS the log: a smaller-budget resume trains
-    // nothing (prior == ms), and rewriting would truncate checkpointed
-    // merges beyond the budget — a later resume at the original budget
-    // would have to retrain the lost tail. (Periodic persists above are
-    // safe: the loop only runs when onDisk.size < numMerges, so every
-    // `all` it sees is strictly longer than the on-disk log.)
-    if (ms.size > onDisk.size) persist(ms)
-    else if (!log.isFile) persist(ms)
-    BpeModel(ms, fin)
-  }
-
   /** Shared merge loop: continues from `prior` merges already applied
     * to `cur`, up to `numMerges` TOTAL; `onMerge` sees the full merge
     * list after each selected merge (the resume log hook).

@@ -120,9 +120,8 @@ object Dedup {
 
   /** Incremental near-dup maintenance: the pairs a NEW ingest batch
     * (rows where `deltaCol` is true) forms against the WHOLE corpus —
-    * without ever re-pairing history against itself. The incremental
-    * > rebuild theme (Compaction/Scd.applyChanges) applied to the LSH
-    * index: band buckets containing no delta doc are skipped wholesale
+    * without ever re-pairing history against itself. Band buckets
+    * containing no delta doc are skipped wholesale
     * (semi-join on the delta's bucket keys), and surviving pairs must
     * carry ≥ 1 delta side, so per-batch work scales with the delta's
     * bucket footprint, not |history|². At production scale the banded
@@ -262,110 +261,12 @@ object Dedup {
       .select("id_a", "id_b", "sim_a", "sim_b", "hamming")
   }
 
-  /** Connected components over an undirected pair graph by iterative
-    * min-label propagation: every node's representative converges to
-    * the smallest id in its component. This is the "keep one
-    * representative per near-dup cluster" step an LLM training-data
-    * pipeline actually runs after pair generation — pair output alone
-    * is O(c²) inside a c-doc boilerplate cluster, the cluster table
-    * is O(c).
-    *
-    * The driver loop coordinates; each iteration is one distributed
-    * join+groupBy (the standard Spark shape for iterative graph
-    * algorithms — GraphX/GraphFrames CC does the same). Converges in
-    * O(component diameter) iterations — near-dup graphs are
-    * clique-ish, so typically 2-3. At extreme scale swap for the
-    * large-star/small-star alternation (Kiveris et al., "Connected
-    * Components in MapReduce"), same contract.
-    *
-    * @param edges (srcCol, dstCol) pairs, any orientation
-    * @param nodes one row per node id (singletons become their own
-    *              representative)
-    * @param strict when true (default), throw if labels are still
-    *               changing at `maxIter` — partially-converged labels
-    *               would silently split one component (e.g. a near-dup
-    *               chain longer than maxIter) into several clusters
-    *               downstream; when false, log and return the partial
-    *               labels (a caller that only needs "some grouping")
-    * @return (id, rep) — rep = min id of the component
-    */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          nodes: DataFrame, nodeCol: String,
-                          maxIter: Int = 25, strict: Boolean = true): DataFrame = {
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .persist()
-    // The loop runs ONLY over edge-endpoint nodes: in a near-dup
-    // graph the pair set is tiny relative to the corpus, so the
-    // iterative state is O(|edge nodes|), not O(|corpus|); singletons
-    // join back once at the end. At 100 TB this is the difference
-    // between iterating over megabytes and iterating over the corpus.
-    //
-    // localCheckpoint (eager) TRUNCATES LINEAGE each iteration — the
-    // load-bearing detail of iterative DataFrame algorithms: without
-    // it the logical plan doubles per iteration (self-joins on the
-    // previous result) and planning/plan-stringification goes
-    // exponential long before the data does. On a cluster with
-    // dynamic executors, swap for reliable `checkpoint()`.
-    // initialize at the ROUND-1 state directly: rep₀(v) = min(v, min
-    // neighbor of v) is what the first loop pass would compute from
-    // rep = id, but as a plain aggregate it needs no join and no
-    // convergence bookkeeping — one full iteration (join + checkpoint
-    // + count) cheaper on every graph
-    var labels = und.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
-      .select(col("src").as("id"), least(col("src"), col("__mn")).as("rep"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // propagate-union-aggregate round: each node's new rep is the
-      // min over {own rep} ∪ {neighbor reps}, computed as ONE join
-      // (reps onto edges by dst) + ONE keyed aggregate over the union
-      // — the old three-wide-op form (neighbor groupBy THEN a second
-      // join back onto labels) was measured and loses ~1 shuffle per
-      // iteration. The own-rep rows ride through the same aggregate
-      // tagged __old, so the convergence check (min < old rep) reads
-      // the SAME checkpointed result; no extra join.
-      // (broadcast(labels) was measured here and LOST 2×: the
-      // per-iteration synchronous broadcast build costs more than the
-      // shuffle it saves on a near-dup pair graph, whose edge table is
-      // itself small — unlike PageRank, where edges outnumber nodes
-      // 30:1. Pointer doubling — rep ← rep(rep) per round — also
-      // LOST: extra self-join materialization beats the O(diameter) →
-      // O(log d) savings at every tested scale.)
-      val prop = und.join(labels, und("dst") === labels("id"))
-        .select(und("src").as("id"), col("rep"), lit(0).as("__old"))
-      val step = labels.select(col("id"), col("rep"), lit(1).as("__old"))
-        .unionByName(prop)
-        .groupBy("id")
-        .agg(min(col("rep")).as("rep"),
-          min(when(col("__old") === 1, col("rep"))).as("old_rep"))
-        .localCheckpoint()
-      val changed = step.filter(col("rep") < col("old_rep")).count()
-      labels = step.select("id", "rep")
-      converged = changed == 0
-      i += 1
-    }
-    und.unpersist()
-    if (!converged) {
-      val msg = s"connectedComponents hit maxIter=$maxIter before convergence " +
-        "(component diameter exceeds the iteration budget); labels are partial " +
-        "and would split one component into several representatives"
-      if (strict) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    // singletons (no edges) never iterate: rep = own id
-    nodes.select(col(nodeCol).as("id")).distinct()
-      .join(labels.withColumnsRenamed(Map("id" -> "l_id", "rep" -> "l_rep")),
-        col("id") === col("l_id"), "left")
-      .select(col("id"), coalesce(col("l_rep"), col("id")).as("rep"))
-  }
-
   /** Connected components by large-star/small-star alternation
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the extreme-scale alternative [[connectedComponents]]'
-    * scaladoc points at, behind the SAME contract (same labels, same
-    * strict guard; equality property-tested in `DedupSpec`).
+    * SoCC'14): every node's representative is the smallest id in its
+    * component. `DedupSpec` property-tests label equality with the
+    * iterative min-label propagation kept in the test tree
+    * (`ComponentsReference`), strict guard included.
     *
     * Each round rewrites the EDGE SET instead of propagating labels:
     *  - large-star(u): every neighbor v > u re-attaches to
@@ -386,12 +287,17 @@ object Dedup {
     * pointer-doubling alternatives, which lost): near-dup components
     * converge in one star round, and a round's two phases + one
     * equality check cost less than propagation's three checkpointed
-    * rounds + counts. [[minHashClusters]] therefore defaults to it;
-    * the propagation form stays as the independently-tested reference
-    * implementation (label equality property-tested in DedupSpec).
+    * rounds + counts. [[minHashClusters]] therefore uses it; the
+    * propagation form is the independently-tested reference.
     *
-    * @return (id, rep) — rep = min id of the component, exactly as
-    *         [[connectedComponents]]
+    * @param edges (srcCol, dstCol) pairs, any orientation
+    * @param nodes one row per node id (singletons become their own
+    *              representative)
+    * @param strict when true (default), throw if the edge set is still
+    *               changing at `maxIter` — partial labels would split
+    *               one component into several clusters downstream;
+    *               when false, log and return them
+    * @return (id, rep) — rep = min id of the component
     */
   def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
                               nodes: DataFrame, nodeCol: String,
@@ -494,48 +400,6 @@ object Dedup {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
-
-  /** Incremental connected components: fold a batch of NEW edges into
-    * existing (id, rep) labels WITHOUT re-running CC over the
-    * historical edge set — the incremental-maintenance theme
-    * (Compaction / Scd.applyChanges / minHashNearDupsIncremental)
-    * applied to the cluster graph. Old components CONTRACT to their
-    * representatives (rep = component min id, so reps preserve
-    * min-label semantics); new edges map endpoints through the labels
-    * (unlabeled endpoints enter as fresh singletons); CC runs on the
-    * contracted graph ONLY — O(affected components + new edges) work
-    * per batch, never O(|history|) — and the old labels re-point
-    * through their rep's new label in one join.
-    *
-    * `incrementalComponents(labels(E₁), E₂) == labels(E₁ ∪ E₂)` —
-    * exact, because each old component's min id IS its rep, so the
-    * contracted graph's min-label equals the union graph's min over
-    * every merged component. Property-tested on random graphs in
-    * DedupSpec.
-    */
-  def incrementalComponents(labels: DataFrame, newEdges: DataFrame,
-                            srcCol: String, dstCol: String): DataFrame = {
-    val l = labels.select(col("id"), col("rep"))
-    val mapped = newEdges
-      .select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .join(l.withColumnsRenamed(Map("id" -> "s", "rep" -> "rs")), Seq("s"), "left")
-      .join(l.withColumnsRenamed(Map("id" -> "d", "rep" -> "rd")), Seq("d"), "left")
-      .select(coalesce(col("rs"), col("s")).as("src"),
-        coalesce(col("rd"), col("d")).as("dst"))
-    val contractedNodes = mapped.select(col("src").as("n"))
-      .union(mapped.select(col("dst"))).distinct()
-    val contracted = connectedComponentsStar(mapped, "src", "dst",
-        contractedNodes, "n")
-      .withColumnsRenamed(Map("id" -> "old_rep", "rep" -> "new_rep"))
-    val relabeled = l
-      .join(contracted, col("rep") === col("old_rep"), "left")
-      .select(col("id"), coalesce(col("new_rep"), col("rep")).as("rep"))
-    val fresh = contractedNodes.select(col("n").as("id"))
-      .join(l.select(col("id")), Seq("id"), "left_anti")
-      .join(contracted, col("id") === col("old_rep"), "left")
-      .select(col("id"), coalesce(col("new_rep"), col("id")).as("rep"))
-    relabeled.unionByName(fresh)
-  }
 
   /** Near-dup clusters over [[minHashNearDups]] pairs: every document
     * labeled with its cluster representative (min doc id) and the

@@ -162,7 +162,7 @@ object Dsir {
     * to [[scoreWith]] and the shuffled join (DsirSpec): same integer
     * adds in the same fold. Zero shuffle, stream-legal, and — being
     * one Literal node rather than a 2·buckets-child CreateMap — free
-    * of the [[LiteralModelMaxBuckets]] janino concern (the remaining
+    * of the map literal's janino CreateMap ceiling (the remaining
     * array ceiling is driver/task memory: 8·buckets bytes).
     */
   def scoreDense(df: DataFrame, idCol: String, textCol: String,
@@ -199,25 +199,6 @@ object Dsir {
     IndexedSeq.tabulate(buckets)(b => m.getOrElse(b.toLong, defaultMicro))
   }
 
-  /** Per-document DSIR importance weight:
-    * `(doc_id, n_feats, w_micro, avg_w)` where `w_micro` =
-    * Σ_b m_b · (ln p̂_target(b) − ln p̂_raw(b)) in integer micro-nats
-    * under add-one smoothing over `buckets` cells. Documents with no
-    * features score 0. `targetPred` selects the target slice from
-    * `df` itself (production: a separate curated corpus — identical
-    * join shape).
-    */
-  /** Bucket-count ceiling for the MAP-literal scoring path: a
-    * typedlit map is a ~2·buckets-child CreateMap expression per
-    * scoring projection, and past a few thousand children janino can
-    * fall back to interpreted eval (64 KB method limit) — exactly the
-    * regime where the broadcast-join form scales cleanly. 2048 keeps
-    * the literal comfortably inside one compiled method. (The DENSE
-    * array literal is one expression node and does not share this
-    * ceiling — see [[DenseModelMaxBuckets]].)
-    */
-  val LiteralModelMaxBuckets = 2048
-
   /** Measured CROSSOVER of the DENSE array-literal serving path
     * (r10 verdict #2 → r11 ceiling sweep → r12 extended sweep; NOTES_r11/
     * r12, SCALE_DECADES_r11/r12):
@@ -243,6 +224,14 @@ object Dsir {
     */
   val DenseModelMaxBuckets = 1 << 20
 
+  /** Per-document DSIR importance weight:
+    * `(doc_id, n_feats, w_micro, avg_w)` where `w_micro` =
+    * Σ_b m_b · (ln p̂_target(b) − ln p̂_raw(b)) in integer micro-nats
+    * under add-one smoothing over `buckets` cells. Documents with no
+    * features score 0. `targetPred` selects the target slice from
+    * `df` itself (production: a separate curated corpus — identical
+    * join shape).
+    */
   def importanceWeights(df: DataFrame, idCol: String, textCol: String,
                         targetPred: Column, buckets: Int): DataFrame =
     if (buckets > DenseModelMaxBuckets)

@@ -155,7 +155,7 @@ object Pq {
     * cell id — never the full corpus), PQ asymmetric distance scores
     * it. Per-query work drops from O(corpus) to O(corpus ·
     * nprobe/cells), and `cells` is the corpus-sized knob (k ∝ n /
-    * target-cell-occupancy, the [[ScalePolicy]] law — FAISS guidance
+    * target-cell-occupancy, the SCALE_DECADES_r6 law — FAISS guidance
     * is k ≈ √n-to-n/100 at billion scale).
     *
     * Every stage reuses an already-oracled pinned recipe: coarse

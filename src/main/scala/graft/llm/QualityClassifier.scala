@@ -44,10 +44,10 @@ object QualityClassifier {
   private def toks(textCol: Column): Column = words(lower(trim(textCol)))
 
   /** Degenerate-document contract (uniform across [[nbScore]],
-    * [[nbScoreMap]], [[nbFilter]], and therefore [[nbScoreAuto]]):
+    * [[nbScoreMap]], [[nbFilter]], and therefore [[nbServeAuto]]):
     * a NULL `text` is not a document — every serving path DROPS the
     * row (r9 ADVICE: `nbScore`'s explode silently dropped it while
-    * `nbScoreMap` emitted NULL stats and `nbScoreAuto` made the
+    * `nbScoreMap` emitted NULL stats and the size dispatch made the
     * output row set depend on model size). An EMPTY or
     * whitespace-only text tokenizes to one or more EMPTY tokens
     * (Spark and DuckDB both split `''` to `['']`; `trim` strips
@@ -148,8 +148,7 @@ object QualityClassifier {
     * of [[nbScoreMap]]: `(featureMap, oovMicro, priorMicro)`. Map keys
     * are the feature's STRING form (map literals are string-keyed so
     * word and hashed features share one serving path). Driver reads
-    * are model-sized — bounded by the [[hashedFeature]] bucket count,
-    * the same O(model) ceiling as [[Dsir.LiteralModelMaxBuckets]].
+    * are model-sized — bounded by the [[hashedFeature]] bucket count.
     */
   def serve(model: DataFrame, prior: DataFrame): (Map[String, Long], Long, Long) = {
     val m = model.select(col("f").cast("string"), col("llr_micro"))
@@ -174,51 +173,21 @@ object QualityClassifier {
     * knowledge lives in the literal, never in stream state — the
     * [[Dsir.scoreWith]] / StreamDedup index-not-state discipline).
     * Integer arithmetic ⇒ bit-equal to [[nbScore]]
-    * (QualityClassifierSpec pins it). Same janino literal ceiling as
-    * [[Dsir.LiteralModelMaxBuckets]]: past a few thousand features,
-    * serve with [[nbScore]]'s broadcast join instead.
+    * (QualityClassifierSpec pins it). Past the janino literal ceiling
+    * ([[LiteralModelMaxFeatures]]), serve with [[nbScore]]'s broadcast
+    * join instead.
     */
   /** Measured serving crossover (NOTES_r9, 200k Zipf docs / Heaps
     * vocab 4473, interleaved arms, median of 5): the map-literal
     * scorer wins below ~1k occupied features (0.56–0.91× the join's
     * time) and LOSES 1.8×/2.7×/3.5× at 1.8k/2.7k/3.9k features, while
     * the broadcast-join arm is feature-count-invariant (~0.65 s flat)
-    * — the same janino CreateMap cliff as
-    * [[Dsir.LiteralModelMaxBuckets]], now with NB's own numbers. 1024
+    * — the janino CreateMap cliff: a map literal is a ~2·n-child
+    * expression per projection, and past a few thousand children
+    * janino falls back to interpreted eval (64 KB method limit). 1024
     * keeps the literal strictly inside its winning regime.
     */
   val LiteralModelMaxFeatures = 1024
-
-  /** Serving dispatch by the measured law: a model at or under
-    * [[LiteralModelMaxFeatures]] occupied features serves as the
-    * zero-shuffle map literal, a larger one as the broadcast join.
-    * The two paths are bit-equal (QualityClassifierSpec), so the
-    * switch is invisible to results. The size probe is one count of
-    * the vocabulary-bounded model table. This dispatch is for
-    * WORD-feature models (unbounded key space); a [[hashedFeature]]
-    * model should skip it and serve through [[serveDense]] /
-    * [[nbScoreDense]], the measured winner at every bucket count.
-    *
-    * The model is `persist`ed first (r9 ADVICE, reworked per the r10
-    * one): the size probe, [[serve]]'s map + OOV collects, and the
-    * serving plan itself would otherwise each replay the full train
-    * explode+groupBy — up to 3× — against the un-materialized model
-    * DAG. A lazy cache of the vocabulary-bounded table amortizes all
-    * of them (r9 used `localCheckpoint`, which turned plan
-    * CONSTRUCTION into eager Spark jobs, truncated lineage — no
-    * recovery on executor loss — and leaked untracked blocks across
-    * calls; `persist` has none of those and the first collect still
-    * materializes once). CACHE LIFETIME: the literal route drops its
-    * own cache before returning (the model lives in the returned
-    * plan's map literal); the join route's returned plan READS the
-    * cached table, so it stays cached while the result lives — pass
-    * an already-persisted `model` to manage the lifetime yourself
-    * (detected; never re-persisted or dropped by this call).
-    */
-  def nbScoreAuto(docs: DataFrame, idCol: String, textCol: String,
-                  model: DataFrame, prior: DataFrame,
-                  feature: Column => Column = wordFeature): DataFrame =
-    nbServeAuto(docs, idCol, textCol, model, prior, feature)
 
   /** ONE serving entry point that picks the measured winner (r10
     * verdict #1 — the serving law is complete but callers had to know
@@ -253,9 +222,11 @@ object QualityClassifier {
     * All four routes are bit-equal under the shared degenerate-doc
     * contract (null text dropped, blank text all-OOV) —
     * QualityClassifierSpec pins every route against the same
-    * reference. Materialization discipline (see [[nbScoreAuto]]'s
-    * doc): an un-cached `model` is lazily `persist`ed for the probe +
-    * collects and the cache is dropped before returning on the
+    * reference. Materialization discipline: an un-cached `model` is
+    * lazily `persist`ed for the size probe + collects, which would
+    * otherwise each replay the training explode+groupBy (a
+    * `localCheckpoint` would instead run jobs at plan construction and
+    * cut lineage), and the cache is dropped before returning on the
     * literal/dense routes (the returned plan carries the model as
     * literals); on the join routes the cached table IS the serving
     * relation and stays cached while the result lives — the

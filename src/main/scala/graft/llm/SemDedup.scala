@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * `dedup_embedding`'s scaladoc promises: the pair space is
   * Σ cell² instead of n², and the cluster count is a CORPUS-SIZED
   * knob — k ∝ n/occupancy holds per-cell work constant as the corpus
-  * grows (the same law ScalePolicy packages for LSH bits and block
-  * bits; SemDeDup itself runs k = 50k on LAION-440M for exactly this
+  * grows (the occupancy law SCALE_DECADES_r6 measured for LSH bits and
+  * block bits; SemDeDup itself runs k = 50k on LAION-440M for exactly this
   * reason). Centroids are k·dim doubles of driver state broadcast to
   * every executor (Similarity.kmeansCells), assignment is one
   * broadcast-join pass over the vectors, and the within-cell

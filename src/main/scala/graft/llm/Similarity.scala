@@ -257,16 +257,6 @@ object Similarity {
   def bucketsAll(vecCol: Column, planes: Seq[Seq[Seq[Double]]]): Column =
     call_function("plane_buckets", vecCol, typedLit(planes))
 
-  /** Deterministic hyperplanes: seeded JVM RNG, `groups` independent
-    * tables of `bitsPerGroup` planes each (multi-probe via OR of
-    * groups raises recall like LSH band amplification). NOT
-    * oracle-expressible (JVM RNG) — prefer [[md5Planes]].
-    */
-  def randomPlanes(dim: Int, groups: Int, bitsPerGroup: Int, seed: Long): Seq[Seq[Seq[Double]]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(groups)(Seq.fill(bitsPerGroup)(Seq.fill(dim)(rng.nextGaussian())))
-  }
-
   /** Oracle-expressible deterministic hyperplanes: component (g, p, d)
     * = md5("g:p:d") first-8-hex-digits / 2³² − 0.5 ∈ [−0.5, 0.5) — the
     * repo's TextHash trick lifted to plane generation, so DuckDB can
@@ -719,9 +709,8 @@ object Similarity {
     * bit positions QUERY-side (the [[lshTopK]] multi-probe shape,
     * Lv et al. VLDB'07): the recall the occupancy-constant bits lose
     * at scale comes back at (1+probes)× candidate cost with the index
-    * unchanged — the other half of the measured scale recipe, wired
-    * here so [[ScalePolicy.hammingRerankAuto]] can derive the full
-    * parameter set from the corpus size.
+    * unchanged — the other half of the measured scale recipe
+    * (SCALE_DECADES_r6, probes and shortlist per the NOTES_r8 sweep).
     */
   def hammingRerankBucketedTopK(df: DataFrame, idCol: String, vecCol: String,
                                 queryPred: Column, k: Int,

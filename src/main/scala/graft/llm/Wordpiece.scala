@@ -71,41 +71,23 @@ object Wordpiece {
     })
   }
 
-  /** Per-document wordpiece token count as ONE pure projection — the
-    * streaming/scoring form (no distinct-word table, no joins, no
-    * state): every word of the doc runs the greedy fold inside a
-    * `transform` lambda, UNK words count 1. Batch-equal to
-    * [[encodeCounts]]' join-based `wp_tokens` (WordpieceSpec); on a
-    * stream this is a STATELESS per-micro-batch scorer, the
-    * index-not-state discipline of Dsir.scoreWith.
-    */
-  def tokenCountCol(text: Column, vs: Seq[(String, Boolean)],
-                    initAttr: Column, contAttr: Column,
-                    maxWordLen: Int = 24): Column = {
-    require(vs.nonEmpty, "empty wordpiece vocabulary")
-    val maxPiece = vs.map(_._1.length).max
-    aggregate(
-      transform(words(lower(trim(text))), w => {
-        val st = greedyFold(w, initAttr, contAttr, maxPiece, maxWordLen)
-        when(st("unk"), lit(1)).otherwise(st("toks"))
-      }),
-      lit(0), (acc, t) => acc + t)
-  }
-
-  /** The two vocab map literals (word-initial, continuation) to bind
-    * as columns before using [[tokenCountCol]].
+  /** The two vocab map literals (word-initial, continuation) that
+    * [[greedyFold]] probes, to bind as columns first.
     */
   def vocabMaps(vs: Seq[(String, Boolean)]): (Column, Column) =
     (literalSet(vs.collect { case (p, false) => p }),
       literalSet(vs.collect { case (p, true) => p }))
 
-  /** Native-kernel form of [[tokenCountCol]] — the fused greedy
-    * matcher ([[graft.functions.WordpieceTokenCount]], registered as
-    * `wordpiece_count` by GraftExtensions): one primitive loop per
-    * word against two hashed vocab sets instead of the interpreted
-    * 24-step × maxPiece-probe HOF fold. Bit-equal on split() input
-    * (WordpieceNativeSpec); like every kernel call it needs a session
-    * carrying GraftExtensions ([[graft.Session]]).
+  /** Per-document wordpiece token count as ONE pure projection — the
+    * streaming/scoring form (no distinct-word table, no joins, no
+    * state), UNK words count 1: the fused greedy matcher
+    * ([[graft.functions.WordpieceTokenCount]], registered as
+    * `wordpiece_count` by GraftExtensions), one primitive loop per
+    * word against two hashed vocab sets. Bit-equal on split() input
+    * to the per-word [[greedyFold]] (WordpieceNativeSpec, against the
+    * HOF form kept in the test tree as `WordpieceReference`); like
+    * every kernel call it needs a session carrying GraftExtensions
+    * ([[graft.Session]]).
     */
   def tokenCountNative(text: Column, vs: Seq[(String, Boolean)],
                        maxWordLen: Int = 24): Column = {

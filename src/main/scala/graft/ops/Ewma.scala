@@ -55,13 +55,13 @@ object Ewma {
     *                exactly.
     */
   class EwmaAgg(alpha: Double, adjust: Boolean = false) extends Aggregator[TsVal, Buf, Double] {
-    def zero: Buf = Buf(Array.empty, Array.empty)
-    def reduce(b: Buf, a: TsVal): Buf = Buf(b.ts :+ a.ts, b.vs :+ a.v)
-    def merge(b1: Buf, b2: Buf): Buf =
+    override def zero: Buf = Buf(Array.empty, Array.empty)
+    override def reduce(b: Buf, a: TsVal): Buf = Buf(b.ts :+ a.ts, b.vs :+ a.v)
+    override def merge(b1: Buf, b2: Buf): Buf =
       Buf(b1.ts ++ b2.ts, b1.vs ++ b2.vs)
     // Groups always hold ≥1 row under groupBy; NaN marks the
     // unreachable empty-buffer case rather than inventing a value.
-    def finish(b: Buf): Double = {
+    override def finish(b: Buf): Double = {
       if (b.ts.isEmpty) Double.NaN
       else {
         val order = b.ts.zipWithIndex.sortBy(_._1).map(_._2)
@@ -87,8 +87,8 @@ object Ewma {
         }
       }
     }
-    def bufferEncoder: org.apache.spark.sql.Encoder[Buf] = Encoders.product[Buf]
-    def outputEncoder: org.apache.spark.sql.Encoder[Double] = Encoders.scalaDouble
+    override def bufferEncoder: org.apache.spark.sql.Encoder[Buf] = Encoders.product[Buf]
+    override def outputEncoder: org.apache.spark.sql.Encoder[Double] = Encoders.scalaDouble
   }
 
   /** Column-API aggregate: `ewmaUdaf(alpha)(col(tsMicros), col(value))`. */

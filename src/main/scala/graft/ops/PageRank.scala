@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank over a directed edge list — the second
-  * iterative graph operator next to `Dedup.connectedComponents`
-  * (min-label propagation); ranks entities by mass flow (e.g.
+  * iterative graph operator next to `Dedup.connectedComponentsStar`;
+  * ranks entities by mass flow (e.g.
   * customers → the suppliers their order lines touch).
   *
   * All arithmetic is INTEGER fixed-point at scale 10¹² — the float
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * state is O(|nodes|). The node count enters as a driver literal
   * (one count job on the persisted node table, one row back).
   * `localCheckpoint` truncates lineage every second iteration (the
-  * same load-bearing detail as connectedComponents — plan size, not
+  * same load-bearing detail as connectedComponentsStar — plan size, not
   * data, is what explodes). An empty edge list gives 0 rows.
   */
 object PageRank {
@@ -74,7 +74,7 @@ object PageRank {
       // Shuffle join on src each iteration. broadcast(r) was measured
       // here and was a wash at 30:1 edges:nodes (the per-iteration
       // synchronous broadcast build eats what the saved exchange
-      // gains — same finding as connectedComponents, where it LOST
+      // gains — same finding as label-propagation CC, where it LOST
       // 2×), so the scale-robust default wins: no driver-size
       // assumption on the rank table. The contrib groupBy collapses
       // map-side to |dst nodes| rows per partition either way.

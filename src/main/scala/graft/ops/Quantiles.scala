@@ -133,20 +133,20 @@ object Quantiles {
       QSkBuf(b.n, kept.size, kept.map(_._1), kept.map(_._2))
     }
 
-    def zero: QSkBuf = QSkBuf(0L, 0, Nil, Nil)
-    def reduce(b: QSkBuf, a: QHV): QSkBuf = {
+    override def zero: QSkBuf = QSkBuf(0L, 0, Nil, Nil)
+    override def reduce(b: QSkBuf, a: QHV): QSkBuf = {
       val nb = QSkBuf(b.n + 1, b.size + 1, a.h :: b.hs, a.v :: b.vs)
       if (nb.size > 2 * k) compact(nb) else nb
     }
-    def merge(b1: QSkBuf, b2: QSkBuf): QSkBuf =
+    override def merge(b1: QSkBuf, b2: QSkBuf): QSkBuf =
       compact(QSkBuf(b1.n + b2.n, b1.size + b2.size,
         b1.hs ::: b2.hs, b1.vs ::: b2.vs))
-    def finish(b: QSkBuf): QSkOut = {
+    override def finish(b: QSkBuf): QSkOut = {
       val kept = compact(b)
       QSkOut(kept.n, kept.size, kept.vs.sorted.toArray)
     }
-    def bufferEncoder: org.apache.spark.sql.Encoder[QSkBuf] = Encoders.product[QSkBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[QSkOut] = Encoders.product[QSkOut]
+    override def bufferEncoder: org.apache.spark.sql.Encoder[QSkBuf] = Encoders.product[QSkBuf]
+    override def outputEncoder: org.apache.spark.sql.Encoder[QSkOut] = Encoders.product[QSkOut]
   }
 
   /** Per-group approximate quantiles from a [[BottomKAgg]] sketch:

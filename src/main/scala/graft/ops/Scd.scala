@@ -47,44 +47,4 @@ object Scd {
       row_number().over(byTime).as("version"),
       nextFrom.isNull.as("is_current"))
   }
-
-  /** Incrementally merge a batch of NEW changes into an existing
-    * type-2 history (the CDC micro-batch path): closed intervals pass
-    * through untouched — only each key's open row and the new changes
-    * are re-derived, so the work per batch is O(changed keys), never a
-    * full-dimension rewrite. Version numbers continue each key's
-    * sequence.
-    *
-    * In-order contract: per key, every change must carry `tsCol`
-    * STRICTLY greater than the open row's `valid_from` (the standard
-    * CDC ordering guarantee). Late rows need a rebuild via [[history]]
-    * — silently interleaving them here would corrupt closed intervals.
-    * Equivalence `applyChanges(history(b1), b2) == history(b1 ∪ b2)`
-    * under that contract is property-tested in `ScdSpec`.
-    */
-  def applyChanges(hist: DataFrame, changes: DataFrame, keyCol: String,
-                   trackCol: String, tsCol: String, tieCol: String): DataFrame = {
-    val closed = hist.where(!col("is_current"))
-    val closedCnt = closed.groupBy(col(keyCol)).agg(count(lit(1)).as("__closed"))
-
-    // the open row re-enters as a synthetic change; its original tie
-    // value is gone, but the in-order contract (strictly newer ts)
-    // makes the null tie sort first only among EQUAL timestamps, which
-    // the contract rules out across the boundary
-    val tieType = changes.schema(tieCol).dataType
-    val openAsChange = hist.where(col("is_current")).select(
-      col(keyCol), col(trackCol), col("valid_from").as(tsCol),
-      lit(null).cast(tieType).as(tieCol))
-
-    val redone = history(
-      openAsChange.unionByName(
-        changes.select(col(keyCol), col(trackCol), col(tsCol), col(tieCol))),
-      keyCol, trackCol, tsCol, tieCol)
-      .join(closedCnt, Seq(keyCol), "left")
-      .withColumn("version",
-        (col("version") + coalesce(col("__closed"), lit(0L))).cast("int"))
-      .drop("__closed")
-
-    closed.unionByName(redone)
-  }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.llm.{AnnIndex, Dedup, EmbeddingStats, Multimodal, Pq, Redact, Retrieval, Similarity, Sparse, TextStats}
+import graft.llm.{AnnIndex, Dedup, EmbeddingStats, Pq, Redact, Retrieval, Similarity, Sparse, TextStats}
 
 /** Training-data pipeline operators over `documents`/`embeddings`:
   * dedup family, similarity search, text analysis, multimodal
@@ -552,12 +552,12 @@ object LlmQueries {
     """)
   )
 
-  /** The corpus-sized-cells IVF-EXACT arm (ScalePolicy.ivfTopKAuto's
-    * pinned-parameter twin — cells=64 via deterministic Lloyd,
-    * nprobe=4): ann_ivf_topk/_multiprobe keep the label cells (10
-    * FIXED cells, occupancy ∝ corpus — the labeled fixed-cell
-    * baseline, 3.9× at sf1), while this arm derives cells from the
-    * corpus per the ivfCellsFor occupancy law, the same knob the
+  /** The corpus-sized-cells IVF-EXACT arm (cells=64 via
+    * deterministic Lloyd, nprobe=4): ann_ivf_topk/_multiprobe keep the
+    * label cells (10 FIXED cells, occupancy ∝ corpus — the labeled
+    * fixed-cell baseline, 3.9× at sf1), while this arm derives cells
+    * from the corpus per the SCALE_DECADES_r6 occupancy law
+    * (cells = 2^round(log₂(corpus/320))), the same knob the
     * IVF-PQ family measured (fixed 8 cells: 8-key skew LOSES at 60k;
     * 64 cells restore parallelism AND shrink candidates). Oracle
     * replays the full Lloyd training, both assignments, member-mean
@@ -930,9 +930,8 @@ object LlmQueries {
     """)
   )
 
-  /** Multimodal metadata path: opaque bytes + typed metadata columns.
-    * (The mapPartitions decode stub is exercised in MultimodalSpec;
-    * this query verifies the expression-level byte plumbing.)
+  /** Multimodal metadata path: opaque bytes + typed metadata columns,
+    * verified at the expression level (byte length and digest).
     */
   val multimodalFeatures: Q = Q(
     "multimodal_features",
@@ -1001,7 +1000,7 @@ object LlmQueries {
   /** IVF-PQ composition (FAISS IVF8,PQ4x4 shape): coarse cells gate
     * candidates via an equi-join on the probed cell ids (nprobe=2 of
     * 8 — per-query work is corpus·nprobe/cells, and `cells` is the
-    * corpus-sized knob per ScalePolicy), PQ asymmetric distance
+    * corpus-sized knob, SCALE_DECADES_r6), PQ asymmetric distance
     * scores them. The oracle replays all five Lloyd trainings, both
     * assignments, the probe ranking, and the ADC scan.
     */
@@ -1104,7 +1103,7 @@ object LlmQueries {
     * cell count the candidate equi-join has only `cells` distinct
     * keys — gating saved arithmetic at 20k vectors (9.5 vs 27 s brute)
     * but 8-key SKEW made it LOSE at 60k (58 vs 27 s). Growing cells
-    * with the corpus (the ScalePolicy occupancy law, FAISS practice)
+    * with the corpus (the SCALE_DECADES_r6 occupancy law, FAISS practice)
     * restores parallelism AND shrinks candidates; measured in
     * SCALE_DECADES session4_family.
     */
@@ -1165,7 +1164,7 @@ object LlmQueries {
     * k = 8 is pinned for the oracle and measured QUADRATIC at 10×
     * data (1.4 → 5.9 s sf0.1 → sf1, BENCH_SF1_r6) — kept as the
     * labeled fixed-parameter baseline next to `semantic_dedup_scaled`
-    * (k = 32, the ScalePolicy k ∝ n knob), the same baseline/scale-arm
+    * (k = 32, the k ∝ n knob, NOTES_r6), the same baseline/scale-arm
     * pairing as knn_graph / knn_graph_bucketed.
     */
   val semanticDedupQ: Q = Q(

@@ -302,8 +302,8 @@ object ScaleQueries {
   )
 
   /** Morton (Z-order) index over (value-bucket, time-bucket): the
-    * multi-dimensional clustering key `Layout.writeZOrdered` sorts
-    * files by. Pure bit arithmetic — scan speed; oracle restates the
+    * multi-dimensional clustering key a z-ordered write sorts files
+    * by. Pure bit arithmetic — scan speed; oracle restates the
     * identical interleave (Layout.zValueSql).
     */
   val zorderIndex: Q = {

@@ -1,33 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Data-layout writer: Hive-style partition directories for coarse
-  * predicate pruning + within-partition sort for parquet row-group
-  * clustering (min/max stats become selective when values are
-  * clustered, so predicate pushdown skips row groups, not just
-  * directories).
-  *
-  * At 100 TB, layout is the cheapest query accelerator there is: a
-  * `lang='en'` filter over lang-partitioned data never lists, opens,
-  * or reads the other partitions (LayoutSpec asserts the scan's
-  * partition count and file count drop), and a time-range filter over
-  * ts-sorted row groups reads only matching stripes.
-  *
-  * The repartition-by-partition-columns before write bounds the file
-  * count to one file per (partition, shuffle task) instead of
-  * (input partition × partition value) small-file blowup.
+/** Z-order (Morton) layout key: one long that interleaves several
+  * integer dimensions, so that clustering rows by it gives parquet
+  * row-group min/max stats locality in every dimension at once
+  * (`zorder_index` computes it and restates it for the oracle).
   */
 object Layout {
-
-  def writePartitioned(df: DataFrame, path: String,
-                       partCols: Seq[String], sortCols: Seq[String]): Unit =
-    df.repartition(partCols.map(col): _*)
-      .sortWithinPartitions((partCols ++ sortCols).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partCols: _*)
-      .parquet(path)
 
   /** Morton (Z-order) interleave of `dims.size` non-negative integer
     * dimensions, `bits` bits each: bit i of dim j lands at position
@@ -66,18 +47,5 @@ object Layout {
       i <- 0 until bits
       (e, j) <- dims.zipWithIndex
     } yield s"((($e >> $i) & 1) << ${i * d + (d - 1 - j)})").mkString(" + ")
-  }
-
-  /** Z-ordered write: range-partition and sort by the z-value so both
-    * file boundaries and row groups cluster in all `dims` at once.
-    */
-  def writeZOrdered(df: DataFrame, path: String, dims: Seq[Column],
-                    bits: Int, numFiles: Int): Unit = {
-    val z = zValue(dims, bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
   }
 }

@@ -29,9 +29,9 @@ import graft.llm.Similarity
   * micro-batch would silently change meaning as trigger boundaries
   * move; a threshold is trigger-invariant. Cross-group multiplicity
   * follows [[StreamDedup.nearDupMatches]]'s convention: a pair hit in
-  * g groups emits g rows with bit-identical cosine — dedupe with
-  * [[matchesDistinct]] under a watermark, or treat any-row-exists as
-  * the flag.
+  * g groups emits g rows with bit-identical cosine — dedupe
+  * downstream (`dropDuplicatesWithinWatermark` on (id, corpus_id)),
+  * or treat any-row-exists as the flag.
   */
 object StreamAnn {
 
@@ -54,37 +54,20 @@ object StreamAnn {
     */
   def matches(stream: DataFrame, buckets: DataFrame, vectors: DataFrame,
               idCol: String, vecCol: String,
-              planes: Seq[Seq[Seq[Double]]], minCosine: Double,
-              passThrough: Seq[String] = Nil): DataFrame = {
+              planes: Seq[Seq[Seq[Double]]], minCosine: Double): DataFrame = {
     val probe = Similarity.withNorm(
-        stream.select((col(idCol).cast("long").as("id") +:
-          passThrough.map(col)) :+
-          Similarity.toDoubleVec(col(vecCol)).as("qv"): _*), "qv")
+        stream.select(col(idCol).cast("long").as("id"),
+          Similarity.toDoubleVec(col(vecCol)).as("qv")), "qv")
       .withColumnRenamed("__norm", "qn")
       .withColumn("__buckets", Similarity.bucketsAll(col("qv"), planes))
-      .select((col("id") +: passThrough.map(col)) ++ Seq(col("qv"), col("qn"),
-        posexplode(col("__buckets")).as(Seq("grp", "bucket"))): _*)
+      .select(col("id"), col("qv"), col("qn"),
+        posexplode(col("__buckets")).as(Seq("grp", "bucket")))
     probe.join(buckets, Seq("grp", "bucket"))
       .filter(col("corpus_id") =!= col("id"))
       .join(vectors, "corpus_id")
-      .select((col("id") +: passThrough.map(col)) ++ Seq(col("corpus_id"),
-        col("grp"),
+      .select(col("id"), col("corpus_id"), col("grp"),
         (Similarity.dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("nrm"))))
-          .as("cosine")): _*)
+          .as("cosine"))
       .filter(col("cosine") >= minCosine)
   }
-
-  /** [[matches]] with cross-group multiplicity removed under a
-    * watermark — one row per (vector, corpus vector), state bounded
-    * by the watermark delay. Requires an event-time column `tsCol`.
-    */
-  def matchesDistinct(stream: DataFrame, buckets: DataFrame, vectors: DataFrame,
-                      idCol: String, vecCol: String, tsCol: String,
-                      delay: String, planes: Seq[Seq[Seq[Double]]],
-                      minCosine: Double): DataFrame =
-    matches(stream, buckets, vectors, idCol, vecCol, planes, minCosine,
-      passThrough = Seq(tsCol))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(Seq("id", "corpus_id"))
-      .drop("grp")
 }

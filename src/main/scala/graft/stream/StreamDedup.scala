@@ -37,51 +37,33 @@ object StreamDedup {
     * per (doc, corpus doc, band) bucket hit that survives the exact
     * Jaccard verify at `tau`. STATELESS (no watermark required, append
     * mode) — a doc matching a corpus doc in g bands emits g rows with
-    * bit-identical jaccard; deduplicate with [[nearDupMatchesDistinct]]
-    * when multiplicity matters, or treat any-row-exists as the flag.
+    * bit-identical jaccard; deduplicate downstream
+    * (`dropDuplicatesWithinWatermark` on (id, corpus_id)) when
+    * multiplicity matters, or treat any-row-exists as the flag.
     *
     * `numPerm`/`bands` MUST match the index build — the signature
     * permutations are positional.
     */
   def nearDupMatches(docs: DataFrame, index: DataFrame,
                      idCol: String, textCol: String,
-                     numPerm: Int, bands: Int, tau: Double,
-                     passThrough: Seq[String] = Nil): DataFrame = {
+                     numPerm: Int, bands: Int, tau: Double): DataFrame = {
     require(numPerm % bands == 0, s"bands ($bands) must divide numPerm ($numPerm)")
     val rows = numPerm / bands
     val probe = docs
-      .select((col(idCol).as("id") +: passThrough.map(col)) :+
-        Dedup.wordHashSet(wordSet(col(textCol))).as("hs"): _*)
+      .select(col(idCol).as("id"), Dedup.wordHashSet(wordSet(col(textCol))).as("hs"))
       .withColumn("sig", Dedup.minhashSignature(col("hs"), numPerm))
       .withColumn("bands", Dedup.bandHashes(col("sig"), bands, rows))
-      .select((col("id") +: passThrough.map(col)) ++ Seq(col("hs"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_hash"))): _*)
+      .select(col("id"), col("hs"),
+        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
     val corpus = index.select(col("id").as("corpus_id"),
       col("hs").as("corpus_hs"), col("band_idx"), col("band_hash"))
     val inter = Dedup.intersectCard(col("hs"), col("corpus_hs"))
     probe.join(corpus, Seq("band_idx", "band_hash"))
       .filter(col("id") =!= col("corpus_id"))
-      .select((col("id") +: passThrough.map(col)) ++ Seq(col("corpus_id"),
-        col("band_idx"),
+      .select(col("id"), col("corpus_id"), col("band_idx"),
         (inter.cast("double") /
           (size(col("hs")) + size(col("corpus_hs")) - inter).cast("double"))
-          .as("jaccard")): _*)
+          .as("jaccard"))
       .filter(col("jaccard") >= tau)
   }
-
-  /** [[nearDupMatches]] with cross-band multiplicity removed under a
-    * watermark: one row per (doc, corpus doc) with state bounded by
-    * the watermark delay (`dropDuplicatesWithinWatermark` — the same
-    * bounded-state distinct as `Streams.dedupWithinWatermark`).
-    * Requires the stream to carry an event-time column `tsCol`.
-    */
-  def nearDupMatchesDistinct(docs: DataFrame, index: DataFrame,
-                             idCol: String, textCol: String,
-                             tsCol: String, delay: String,
-                             numPerm: Int, bands: Int, tau: Double): DataFrame =
-    nearDupMatches(docs, index, idCol, textCol, numPerm, bands, tau,
-      passThrough = Seq(tsCol))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(Seq("id", "corpus_id"))
-      .drop("band_idx")
 }

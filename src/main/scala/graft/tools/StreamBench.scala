@@ -345,22 +345,12 @@ object StreamBench {
         source().select(col("key"), col("ts"), col("level_price"),
           col("level_size")),
         "key", "ts", "ts", bandSec = 5)),
-      // native fused greedy matcher (wordpiece_count Expression) vs
-      // the interpreted HOF fold — the dedup family's native-kernel
-      // lesson applied to tokenizer stream scoring; bit-equality is
-      // WordpieceNativeSpec's job, the A/B here is throughput only
+      // native fused greedy matcher (wordpiece_count Expression) as a
+      // stateless stream scorer
       "wordpiece_score" -> (() => docSource()
         .select(col("id"),
           graft.llm.Wordpiece.tokenCountNative(col("text"), wpVocab)
             .as("wp_tokens"))),
-      "wordpiece_score_hof" -> (() => {
-        val (im, cm) = graft.llm.Wordpiece.vocabMaps(wpVocab)
-        docSource()
-          .withColumn("__im", im).withColumn("__cm", cm)
-          .select(col("id"),
-            graft.llm.Wordpiece.tokenCountCol(col("text"), wpVocab,
-              col("__im"), col("__cm")).as("wp_tokens"))
-      }),
       // tail canaries: the same frozen shapes again at capture end —
       // the head/tail delta is the capture's own ambience reading
       "canary_project_tail" -> canaryProject,

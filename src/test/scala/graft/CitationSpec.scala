@@ -1,23 +1,16 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A scaladoc or comment in `src/main` that cites a spec or a
-  * `graft.…` type must cite one that exists: a deleted spec or main
-  * leaves a citation nobody can follow.
+import ReachSpec.sources
+
+/** A scaladoc or comment in `src/main` that cites a spec, a
+  * `graft.…` type or a `[[link]]` must cite one that exists: a deleted
+  * spec, main or member leaves a citation nobody can follow.
   */
 class CitationSpec extends AnyFunSuite {
-
-  private def sources(root: String): Seq[(Path, String)] = {
-    val walk = Files.walk(Paths.get(root))
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
-    finally walk.close()
-  }
 
   private val Definition =
     """(?m)^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|abstract\s+|case\s+|implicit\s+)*(?:object|class|trait)\s+(\w+)""".r
@@ -61,6 +54,27 @@ class CitationSpec extends AnyFunSuite {
       if (k < 0) None else Some(segs.take(k + 1).mkString("."))
     }
     val bad = dangling("""\bgraft(?:\.\w+)+""".r, typeOf, definitions(main))
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("every [[link]] in src/main starts at a type, a member of its file or an import") {
+    // the head of `[[Similarity.lshTopK]]` is `Similarity`, of
+    // `[[lshTopK]]` is `lshTopK`; `graft.…` paths are checked above
+    val types = definitions(main).map(_.split('.').last)
+    val Member = """\b(?:def|val|var|object|class|trait|type)\s+(\w+)""".r
+    val Import = """(?m)^\s*import\s+([\w.]+?)(?:\.\{([^}]*)\})?\s*$""".r
+    val Link = """\[\[(\w+)[^\]]*\]\]""".r
+    val bad = main.flatMap { case (path, text) =>
+      val imported = Import.findAllMatchIn(text).flatMap { m =>
+        Option(m.group(2)).fold(Seq(m.group(1).split('.').last))(
+          _.split(',').toSeq.map(_.split("=>").last.trim))
+      }.toSet
+      val known = types ++ Member.findAllMatchIn(text).map(_.group(1)) ++ imported
+      text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
+        Link.findAllMatchIn(line).filter(m => m.group(1) != "graft" && !known(m.group(1)))
+          .map(m => s"$path:${i + 1}: ${m.matched}")
+      }
+    }
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }

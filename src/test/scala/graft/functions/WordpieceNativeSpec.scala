@@ -3,10 +3,10 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.llm.{Bpe, Wordpiece}
+import graft.llm.{Bpe, Wordpiece, WordpieceReference}
 
 /** The native `wordpiece_count` kernel must be bit-equal to the HOF
-  * fold it replaces ([[graft.llm.Wordpiece.tokenCountCol]]) — same
+  * fold it replaces (`WordpieceReference.tokenCountCol`) — same
   * greedy longest-match, same UNK collapse, same truncated-tail
   * probes — on real corpus vocabularies and on the adversarial hand
   * cases WordpieceSpec pins for the HOF form.
@@ -21,7 +21,7 @@ class WordpieceNativeSpec extends SparkSpec {
     val (im, cm) = Wordpiece.vocabMaps(vs)
     df.withColumn("__im", im).withColumn("__cm", cm)
       .select(col("text"),
-        Wordpiece.tokenCountCol(col("text"), vs, col("__im"), col("__cm"),
+        WordpieceReference.tokenCountCol(col("text"), vs, col("__im"), col("__cm"),
           maxLen).as("hof"),
         Wordpiece.tokenCountNative(col("text"), vs, maxLen).as("nat"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSeq
@@ -58,7 +58,7 @@ class WordpieceNativeSpec extends SparkSpec {
     val mismatches = docs
       .withColumn("__im", im).withColumn("__cm", cm)
       .select(col("doc_id"),
-        Wordpiece.tokenCountCol(col("text"), vs, col("__im"), col("__cm")).as("hof"),
+        WordpieceReference.tokenCountCol(col("text"), vs, col("__im"), col("__cm")).as("hof"),
         Wordpiece.tokenCountNative(col("text"), vs).as("nat"))
       .filter(col("hof") =!= col("nat"))
       .count()

@@ -40,9 +40,12 @@ class AnnIndexSpec extends SparkSpec {
 
   test("hammingTopK probe equals the monolithic funnel, including the policy/probe parameters") {
     val emb = graft.Tables.embeddings(spark, sf())
-    val n = emb.count()
-    val bits = ScalePolicy.lshBitsFor(n)
-    val planes = Similarity.md5Planes(64, ScalePolicy.lshGroupsFor(bits), bits)
+    // the bits/groups the SCALE_DECADES_r6 occupancy policy gives for
+    // this fixture: round(log2(500 / 20)) = 5 bits, and 16 groups below
+    // the 10-bit anchor
+    assert(emb.count() === 500)
+    val bits = 5
+    val planes = Similarity.md5Planes(64, 16, bits)
     val qp = col("id") % 40 === 0
     val queries = emb.filter(col("vec_id") % 40 === 0)
     val (buckets, vectors) = AnnIndex.buildHamming(emb, "vec_id", "embedding", planes)
@@ -105,13 +108,13 @@ class AnnIndexSpec extends SparkSpec {
     val fresh = split.filter(col("split") === "new")
     val (vectors, cents, quant) = AnnIndex.buildIvf(old, "vec_id", "embedding",
       cells = 8, iters = 1)
-    val delta = AnnIndex.ivfAssign(fresh, "vec_id", "embedding", quant)
+    val delta = IvfAssignReference.ivfAssign(fresh, "vec_id", "embedding", quant)
     assert(delta.columns.toSeq === vectors.columns.toSeq)
     // rule equality: assigning the OLD corpus against the QUANTIZER
     // reproduces the index's own cell column exactly (against the
     // member-mean probe centroids it would NOT — that mismatch is the
     // reason buildIvf persists both tables)
-    val reassigned = AnnIndex.ivfAssign(old, "vec_id", "embedding", quant)
+    val reassigned = IvfAssignReference.ivfAssign(old, "vec_id", "embedding", quant)
       .select(col("corpus_id"), col("cell").as("re_cell"))
     val diff = vectors.join(reassigned, "corpus_id")
       .filter(col("cell") =!= col("re_cell")).count()
@@ -145,8 +148,8 @@ class AnnIndexSpec extends SparkSpec {
       // force the shuffle-join path so bucket co-location (not a
       // broadcast) is what eliminates the index-side exchange
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      graft.sources.Bucketing.writeBucketed(buckets, "aidx_buckets", 8,
-        Seq("grp", "bucket"), Seq("grp", "bucket"))
+      buckets.write.mode("overwrite").format("parquet")
+        .bucketBy(8, "grp", "bucket").sortBy("grp", "bucket").saveAsTable("aidx_buckets")
       val probe = AnnIndex.topK(spark.table("aidx_buckets"), vectors,
         queries, "vec_id", "embedding", planes, k = 5)
       probe.collect()
@@ -169,7 +172,7 @@ class AnnIndexSpec extends SparkSpec {
       assert(rows(probe) === rows(plain))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.sources.Bucketing.drop(spark, "aidx_buckets")
+      spark.sql("DROP TABLE IF EXISTS aidx_buckets")
     }
   }
 
@@ -179,7 +182,7 @@ class AnnIndexSpec extends SparkSpec {
       cells = 8, iters = 1)
     // the stream-legal literal-argmin form must reproduce the batch
     // crossJoin+window form exactly: same dist fold, same tie rule
-    val win = AnnIndex.ivfAssign(emb, "vec_id", "embedding", quant)
+    val win = IvfAssignReference.ivfAssign(emb, "vec_id", "embedding", quant)
     val lit = AnnIndex.ivfAssignStream(emb, "vec_id", "embedding", quant)
     assert(lit.columns.toSeq === win.columns.toSeq)
     assert(rows(lit) === rows(win))
@@ -207,8 +210,8 @@ class AnnIndexSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      graft.sources.Bucketing.writeBucketed(vectors, "aidx_vectors", 8,
-        Seq("corpus_id"), Seq("corpus_id"))
+      vectors.write.mode("overwrite").format("parquet")
+        .bucketBy(8, "corpus_id").sortBy("corpus_id").saveAsTable("aidx_vectors")
       val probe = AnnIndex.topK(buckets, spark.table("aidx_vectors"),
         queries, "vec_id", "embedding", planes, k = 5)
       probe.collect()
@@ -236,7 +239,7 @@ class AnnIndexSpec extends SparkSpec {
       assert(rows(carried) === rows(plain))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.sources.Bucketing.drop(spark, "aidx_vectors")
+      spark.sql("DROP TABLE IF EXISTS aidx_vectors")
     }
   }
 

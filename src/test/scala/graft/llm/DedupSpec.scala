@@ -49,7 +49,7 @@ class DedupSpec extends SparkSpec {
     // components: {1,2,3} (chain), {10,11}, {20} isolated
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val nodes = Seq(1L, 2L, 3L, 10L, 11L, 20L).toDF("id")
-    val out = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id")
+    val out = ComponentsReference.connectedComponents(edges, "id_a", "id_b", nodes, "id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
@@ -60,11 +60,11 @@ class DedupSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
     val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id", maxIter = 1)
+      ComponentsReference.connectedComponents(edges, "id_a", "id_b", nodes, "id", maxIter = 1)
     }
     assert(e.getMessage.contains("maxIter"))
     // non-strict returns the partial labels instead of throwing
-    val partial = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id",
+    val partial = ComponentsReference.connectedComponents(edges, "id_a", "id_b", nodes, "id",
       maxIter = 1, strict = false)
     assert(partial.count() === 5)
   }
@@ -84,7 +84,7 @@ class DedupSpec extends SparkSpec {
       chainNodes, "id", maxIter = 8).collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(starLabels.forall(_._2 === 1L))
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, "id_a", "id_b", chainNodes, "id", maxIter = 8)
+      ComponentsReference.connectedComponents(chain, "id_a", "id_b", chainNodes, "id", maxIter = 8)
     }
   }
 
@@ -100,7 +100,7 @@ class DedupSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
       val nodesDf = (0L until n.toLong).toDF("id")
       val edgesDf = edges.toDF("id_a", "id_b")
-      val prop = Dedup.connectedComponents(edgesDf, "id_a", "id_b", nodesDf, "id")
+      val prop = ComponentsReference.connectedComponents(edgesDf, "id_a", "id_b", nodesDf, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val star = Dedup.connectedComponentsStar(edgesDf, "id_a", "id_b", nodesDf, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -144,67 +144,6 @@ class DedupSpec extends SparkSpec {
       assert(inc === expected, s"delta fraction $frac")
       assert(inc.size < full.size)
     }
-  }
-
-  test("incrementalComponents(labels(E1), E2) == labels(E1 ∪ E2) on random graphs (5 seeds)") {
-    import spark.implicits._
-    for (seed <- 1 to 5) {
-      val rnd = new scala.util.Random(seed)
-      def edges(n: Int) = Seq.fill(n)(
-        (1L + rnd.nextInt(60), 1L + rnd.nextInt(60)))
-        .filter(e => e._1 != e._2)
-      val e1 = edges(40)
-      // delta edges also touch BRAND-NEW node ids (61-70): the
-      // fresh-singleton path must label them too
-      val e2 = edges(15) ++ Seq.fill(5)(
-        (1L + rnd.nextInt(60), 61L + rnd.nextInt(10)))
-      val universe = (1L to 60L).toDF("id")
-      val l1 = Dedup.connectedComponentsStar(e1.toDF("a", "b"), "a", "b",
-        universe, "id")
-      val inc = Dedup.incrementalComponents(l1, e2.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val fullUniverse = (1L to 70L).toDF("id")
-      val full = Dedup.connectedComponentsStar((e1 ++ e2).toDF("a", "b"), "a", "b",
-          fullUniverse, "id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // inc covers labeled history + delta endpoints; full additionally
-      // lists never-seen singletons 61-70 that no delta edge touched
-      assert(inc === full.filter { case (id, _) => inc.contains(id) }, s"seed $seed")
-      assert(inc.keySet.count(_ > 60L) > 0, s"seed $seed touched no fresh nodes")
-      (1L to 60L).foreach(id => assert(inc.contains(id)))
-    }
-  }
-
-  test("end-to-end incremental clustering == full rebuild (cap-free pipeline composition)") {
-    import org.apache.spark.sql.functions._
-    // uncapped buckets: capping counts bucket membership at index-build
-    // time, so a delta that pushes a bucket over the cap is the one
-    // place incremental and rebuild legitimately diverge — removed
-    // here to prove the composition exact everywhere else
-    val cap = Int.MaxValue
-    val docs = graft.Tables.documents(spark, sf())
-    val marked = docs.withColumn("is_delta",
-      graft.llm.Sampling.u01(col("doc_id"), "split") >= 0.9)
-    val old = marked.filter(!col("is_delta"))
-    // "yesterday's" state: history pairs + labels
-    val oldPairs = Dedup.minHashNearDups(old, "doc_id", "text", 16, 4, 0.85, cap)
-    val oldLabels = Dedup.connectedComponentsStar(oldPairs, "id_a", "id_b",
-      old.select(col("doc_id")), "doc_id")
-    // today: delta-touching pairs only, folded into the old labels
-    val deltaPairs = Dedup.minHashNearDupsIncremental(marked, "doc_id", "text",
-      "is_delta", 16, 4, 0.85, cap)
-    val incAll = Dedup.incrementalComponents(oldLabels, deltaPairs, "id_a", "id_b")
-    // delta docs with no pair at all still need their singleton label
-    val inc = incAll.unionByName(
-        marked.filter(col("is_delta")).select(col("doc_id").as("id"),
-          col("doc_id").as("rep")))
-      .groupBy("id").agg(min("rep").as("rep"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = Dedup.connectedComponentsStar(
-        Dedup.minHashNearDups(marked, "doc_id", "text", 16, 4, 0.85, cap),
-        "id_a", "id_b", marked.select(col("doc_id")), "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(inc === full)
   }
 
   test("simhash near-identical token sets have small hamming distance") {

@@ -129,7 +129,7 @@ class QualityClassifierSpec extends SparkSpec {
     }
   }
 
-  test("nbScoreAuto dispatches by model size and stays bit-equal on both sides") {
+  test("nbServeAuto: small word model == nbScore") {
     val docs = Tables.documents(spark, sf())
     val trn = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val tst = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -138,7 +138,7 @@ class QualityClassifierSpec extends SparkSpec {
     val mSmall = QualityClassifier.nbModel(trn, "text", pos)
     val prior = QualityClassifier.nbPrior(trn, pos)
     assert(mSmall.count() <= QualityClassifier.LiteralModelMaxFeatures)
-    val autoSmall = QualityClassifier.nbScoreAuto(tst, "doc_id", "text", mSmall, prior)
+    val autoSmall = QualityClassifier.nbServeAuto(tst, "doc_id", "text", mSmall, prior)
     assert(!autoSmall.queryExecution.executedPlan.toString().contains("Exchange"))
     // the two serving paths are bit-equal (pinned by the nbScoreMap
     // test above), so dispatch only has to pick one; the join side of
@@ -489,7 +489,7 @@ class QualityClassifierSpec extends SparkSpec {
     assert(kept === want)
     assert(!kept.contains(20L) && kept.contains(21L) && kept.contains(22L))
     // auto-dispatch output row set is independent of which path it picks
-    val auto = QualityClassifier.nbScoreAuto(degenerate, "doc_id", "text", model, prior)
+    val auto = QualityClassifier.nbServeAuto(degenerate, "doc_id", "text", model, prior)
       .orderBy("doc_id").collect().toSeq
     assert(auto === a)
   }

@@ -91,7 +91,7 @@ class WordpieceSpec extends SparkSpec {
     val direct = docs
       .withColumn("__im", im).withColumn("__cm", cm)
       .select(col("doc_id"),
-        Wordpiece.tokenCountCol(col("text"), vs, col("__im"), col("__cm")).as("t"))
+        WordpieceReference.tokenCountCol(col("text"), vs, col("__im"), col("__cm")).as("t"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val joined = Wordpiece.encodeCounts(docs, "doc_id", "text", model)
       .collect().map(r => r.getLong(0) -> r.getLong(2).toInt).toMap

@@ -45,51 +45,6 @@ class ScdSpec extends SparkSpec {
     assert(out.map(_.getAs[Boolean]("is_current")).toSeq === Seq(false, true))
   }
 
-  test("applyChanges over in-order batches equals full-rebuild history (5 seeds)") {
-    import spark.implicits._
-    for (seed <- 1 to 5) {
-      val rnd = new scala.util.Random(seed)
-      val rows = (1 to 200).map { i =>
-        (rnd.nextInt(5).toLong, Seq("A", "B", "C")(rnd.nextInt(3)), ts(i.toLong), i.toLong)
-      }
-      val (b1, b2) = rows.splitAt(120) // globally increasing ts ⇒ in-order per key
-      val df1 = b1.toDF("user_id", "event_type", "ts", "event_id")
-      val df2 = b2.toDF("user_id", "event_type", "ts", "event_id")
-
-      def norm(df: org.apache.spark.sql.DataFrame) = df
-        .collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("event_type"),
-          r.getAs[Timestamp]("valid_from"), r.getAs[Timestamp]("valid_to"),
-          r.getAs[Int]("version"), r.getAs[Boolean]("is_current")))
-        .sortBy(t => (t._1, t._5))
-        .toSeq
-
-      val full = Scd.history(df1.unionByName(df2), "user_id", "event_type", "ts", "event_id")
-      val inc = Scd.applyChanges(
-        Scd.history(df1, "user_id", "event_type", "ts", "event_id"),
-        df2, "user_id", "event_type", "ts", "event_id")
-      assert(norm(inc) === norm(full), s"seed=$seed")
-    }
-  }
-
-  test("applyChanges: untouched keys pass through; new keys start at version 1") {
-    import spark.implicits._
-    val base = Seq((1L, "A", ts(1), 1L), (1L, "B", ts(2), 2L), (2L, "X", ts(3), 3L))
-      .toDF("user_id", "event_type", "ts", "event_id")
-    val hist = Scd.history(base, "user_id", "event_type", "ts", "event_id")
-    val changes = Seq((3L, "Z", ts(10), 4L)) // only a brand-new key
-      .toDF("user_id", "event_type", "ts", "event_id")
-    val out = Scd.applyChanges(hist, changes, "user_id", "event_type", "ts", "event_id")
-    assert(out.count() === 4)
-    val k3 = out.where(col("user_id") === 3L).collect()
-    assert(k3.length === 1 && k3.head.getAs[Int]("version") === 1 &&
-      k3.head.getAs[Boolean]("is_current"))
-    // key 1's closed A-row and re-derived open B-row both intact
-    val k1 = out.where(col("user_id") === 1L).orderBy("version").collect()
-    assert(k1.map(_.getAs[String]("event_type")).toSeq === Seq("A", "B"))
-    assert(k1.map(_.getAs[Int]("version")).toSeq === Seq(1, 2))
-  }
-
   test("intervals tile each key's timeline: valid_to == next valid_from, one current") {
     val ev = graft.Tables.events(spark, sf())
     val out = Scd.history(ev, "user_id", "event_type", "ts", "event_id").cache()

@@ -1,46 +1,13 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 
-/** Partitioned layout: a partition-column filter must prune at the
-  * directory level — the scan lists/opens ONLY the matching
-  * partition, visible in both the plan's PartitionFilters and the
-  * scan's numFiles metric.
+/** Z-order layout key: `Layout.zValue` is the Morton interleave, and
+  * clustering by it keeps a 2-d box inside few range partitions.
   */
 class LayoutSpec extends SparkSpec {
-
-  test("partition-column filter prunes directories (numFiles drops)") {
-    val dir = Files.createTempDirectory("graft_layout").toString
-    val docs = Tables.documents(spark, sf("sf0.001"))
-    Layout.writePartitioned(docs, dir, Seq("lang"), Seq("n_chars"))
-
-    def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves()
-        .collect { case s: FileSourceScanExec => s }.head
-    }
-
-    val all = spark.read.parquet(dir)
-    val full = scanOf(all.select("doc_id"))
-    val pruned = scanOf(all.filter(col("lang") === "en").select("doc_id"))
-    val fullFiles = full.metrics("numFiles").value
-    val prunedFiles = pruned.metrics("numFiles").value
-    assert(pruned.toString.contains("PartitionFilters: [isnotnull(lang"),
-      pruned.toString)
-    assert(prunedFiles < fullFiles,
-      s"expected pruning: $prunedFiles vs $fullFiles files")
-    // value correctness: pruned read == filtered unpartitioned read
-    val a = all.filter(col("lang") === "en").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val b = docs.filter(col("lang") === "en").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(a === b && a.nonEmpty)
-  }
 
   test("zValue: known Morton answers and bijectivity on the grid") {
     import spark.implicits._
@@ -79,43 +46,5 @@ class LayoutSpec extends SparkSpec {
     // the box is one contiguous z-range but spreads across the x-range
     assert(zTouched < xTouched)
     assert(zTouched <= 2)
-  }
-
-  test("writeZOrdered: files cover disjoint z-ranges and rows are z-sorted within files") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_zorder").toString
-    val grid = (for (x <- 0 until 32; y <- 0 until 32) yield (x, y)).toDF("x", "y")
-    Layout.writeZOrdered(grid, dir, Seq(col("x"), col("y")), bits = 5, numFiles = 8)
-    val back = spark.read.parquet(dir)
-      .select(input_file_name().as("f"), col("x"), col("y"))
-      .withColumn("z", Layout.zValue(Seq(col("x"), col("y")), 5))
-    val ranges = back.groupBy("f")
-      .agg(min("z").as("lo"), max("z").as("hi"), collect_list("z").as("zs"))
-      .collect()
-    // within-file z order is non-decreasing
-    ranges.foreach { r =>
-      val zs = r.getSeq[Long](3)
-      assert(zs.zip(zs.tail).forall { case (a, b) => a <= b }, s"unsorted file ${r.getString(0)}")
-    }
-    // file z-ranges do not overlap (range partitioning by z)
-    val sorted = ranges.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    sorted.zip(sorted.tail).foreach { case ((_, hi), (lo2, _)) => assert(hi <= lo2) }
-    assert(back.count() === 1024)
-  }
-
-  test("within-partition sort clusters row groups (files are sorted by the sort key)") {
-    val dir = Files.createTempDirectory("graft_layout2").toString
-    val docs = Tables.documents(spark, sf("sf0.001"))
-    Layout.writePartitioned(docs, dir, Seq("lang"), Seq("n_chars"))
-    import spark.implicits._
-    // per input file, the n_chars sequence must be non-decreasing
-    val violations = spark.read.parquet(dir)
-      .select(input_file_name().as("f"), col("n_chars"))
-      .groupBy("f")
-      .agg(collect_list("n_chars").as("xs"))
-      .as[(String, Seq[Long])]
-      .collect()
-      .count { case (_, xs) => xs.zip(xs.tail).exists { case (a, b) => a > b } }
-    assert(violations === 0)
   }
 }

@@ -1,12 +1,10 @@
 package graft.stream
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.llm.Similarity
+import graft.llm.{IvfAssignReference, Similarity}
 
 /** Streaming ANN probe vs the persisted LSH index: streamed matches
   * must equal the batch run of the same operator on the same delta
@@ -108,7 +106,7 @@ class StreamAnnSpec extends SparkSpec {
     def sig(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(x => (x.getLong(0), x.getInt(1), x.getSeq[Double](2), x.getDouble(3)))
       .sortBy(_._1).toSeq
-    val batch = AnnIndex.ivfAssign(delta.toDF("id", "embedding"),
+    val batch = IvfAssignReference.ivfAssign(delta.toDF("id", "embedding"),
       "id", "embedding", quantM)
     assert(sig(appended) === sig(batch),
       "stream-appended rows must be bit-equal to the batch assignment")
@@ -122,29 +120,5 @@ class StreamAnnSpec extends SparkSpec {
     assert(ids.contains(910000L) && ids.contains(base(0)._1),
       s"probe must see both the streamed copy and its source, got $ids")
     assert(hit.forall(h => math.abs(h.getDouble(2) - 1.0) < 1e-12))
-  }
-
-  test("matchesDistinct collapses cross-group multiplicity to one row per pair") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = corpus()
-    val (buckets, vectors) = StreamAnn.bucketIndex(emb, "vec_id", "embedding", planes)
-    val bucketsM = buckets.localCheckpoint()
-    val vectorsM = vectors.localCheckpoint()
-    val src = emb.orderBy("vec_id").limit(1).collect()(0)
-    val mem = MemoryStream[(Long, Seq[Float], Timestamp)]
-    val sdf = mem.toDF().toDF("id", "embedding", "ts")
-    val out = StreamAnn.matchesDistinct(sdf, bucketsM, vectorsM, "id",
-      "embedding", "ts", "10 minutes", planes, minCosine = 0.5)
-    val q = out.writeStream.format("memory").queryName("ann_stream_d")
-      .outputMode("append").start()
-    try {
-      mem.addData((900100L, src.getSeq[Float](1), Timestamp.valueOf("2024-01-01 00:00:00")))
-      q.processAllAvailable()
-      val rows = spark.table("ann_stream_d")
-        .filter(col("corpus_id") === src.getLong(0) && col("id") === 900100L)
-        .collect()
-      assert(rows.length == 1, s"expected one deduped row, got ${rows.length}")
-    } finally q.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -84,28 +82,5 @@ class StreamDedupSpec extends SparkSpec {
     val a = ws(edited); val b = ws(doc.getString(1))
     val expected = (a & b).size.toDouble / (a | b).size
     assert(math.abs(out(0).getDouble(0) - expected) < 1e-12)
-  }
-
-  test("distinct variant emits one row per (doc, corpus doc) with bounded state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val index = corpus()
-    val src = graft.Tables.documents(spark, sf("sf0.001"))
-      .select(col("doc_id").cast("long").as("id"), col("text"))
-      .orderBy("id").limit(1).collect()(0)
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val sdf = mem.toDF().toDF("id", "ts", "text")
-    val out = StreamDedup.nearDupMatchesDistinct(sdf, index, "id", "text",
-      "ts", "10 seconds", numPerm, bands, tau)
-    val q = out.writeStream.format("memory").queryName("neardup_distinct")
-      .outputMode("append").start()
-    try {
-      mem.addData(Seq((300000L, Timestamp.valueOf("2024-01-01 00:00:00"), src.getString(1))))
-      q.processAllAvailable()
-      val rows = spark.table("neardup_distinct")
-        .filter(col("corpus_id") === src.getLong(0)).collect()
-      assert(rows.length == 1)   // bands-many hits collapsed to one
-      assert(rows(0).getAs[Double]("jaccard") == 1.0)
-    } finally q.stop()
   }
 }

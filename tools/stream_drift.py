@@ -39,7 +39,6 @@ GE_CLAIMS = [
     ("nb_quality_score_hashed_dense", "nb_quality_score_hashed"),
     ("nb_quality_score_hashed_dense", "nb_quality_score_hashed_lit"),
     ("dsir_score_dense", "dsir_score"),
-    ("wordpiece_score", "wordpiece_score_hof"),
 ]
 # (wide, narrow): "flat in B" — the wider dense arm must not trend down
 FLAT_CLAIMS = [
@@ -52,7 +51,7 @@ STATELESS = [
     "nb_quality_score_hashed_lit", "nb_quality_score_hashed_dense",
     "nb_quality_score_hashed_dense_64k", "nb_quality_score_hashed_dense_1m",
     "dsir_score", "dsir_score_dense", "wordpiece_score",
-    "wordpiece_score_hof", "ann_probe", "neardup_vs_index",
+    "ann_probe", "neardup_vs_index",
     "canary_project", "canary_project_tail",
 ]
 # stateful operators: state_rows.max must stay under its measured bound
