@@ -32,9 +32,11 @@ import TextHash.words
   * trick of weighting by word frequency). Each merge is one
   * pair-count aggregation (map-side partial) + a 1-row argmax to the
   * driver + a map-side fold; the word table is localCheckpointed per
-  * iteration so lineage stays O(1) (the CC-loop pattern). Encoding
-  * joins the corpus against the trained word→token-count dictionary —
-  * per-word work happens once per DISTINCT word, not per occurrence.
+  * iteration so lineage stays O(1) (the CC-loop pattern) — lazily, so
+  * the next pair count materialises it instead of a job of its own.
+  * Encoding joins the corpus against the trained word→token-count
+  * dictionary — per-word work happens once per DISTINCT word, not per
+  * occurrence.
   */
 object Bpe {
 
@@ -85,9 +87,10 @@ object Bpe {
     * selection is bit-identical to sequential by the kept-prefix proof
     * in [[train]] (BpeSpec property-checks it, incl. adversarial
     * corpora); the win is driver round-trips: each round is one
-    * pair-count job + one argmax collect + one checkpoint job
-    * regardless of how many merges it selects, so a batch that keeps
-    * m merges divides the loop's fixed per-round cost by m.
+    * pair-count + argmax collect (which also materialises the word
+    * table's lazy checkpoint) regardless of how many merges it
+    * selects, so a batch that keeps m merges divides the loop's fixed
+    * per-round cost by m.
     *
     * r13 set it to 8 (interleaved A/B, local[32], sf0.1, median of 5,
     * against width 1): bpe_vocab 0.96→0.77, bpe_encode 1.25→0.90,
@@ -127,11 +130,12 @@ object Bpe {
     * count after the trim. Rule (ii) closes the one growth channel:
     * if a+b pre-existed as a symbol, an EXISTING (x, a+b) pair would
     * gain the created adjacencies on top of its old count and could
-    * overtake a later kept pair — the symbol vocabulary is tracked
-    * driver-side (initial code points + every applied product; one
-    * extra distinct-collect at train start) precisely to veto those.
-    * Sequential's argmax at step k is therefore exactly kept pair k,
-    * ties included (tied kept pairs are disjoint, so their
+    * overtake a later kept pair — the products applied so far are
+    * tracked driver-side precisely to veto those. The initial symbols
+    * never need tracking: [[spaced]] splits a word into single code
+    * points, and a product a+b has at least two, so no product can
+    * equal one. Sequential's argmax at step k is therefore exactly
+    * kept pair k, ties included (tied kept pairs are disjoint, so their
     * lexicographic order is preserved). If trimming empties the batch
     * (top two tied and conflicting), one plain sequential step runs
     * instead — a single argmax is always exact. Equivalence is
@@ -142,39 +146,19 @@ object Bpe {
   def train(df: DataFrame, textCol: String, numMerges: Int,
             batch: Int = defaultBatch): BpeModel = {
     require(batch >= 1, s"batch must be >= 1, got $batch")
+    // lazy checkpoints: each round's pair count is the job that
+    // materialises the word table it reads, and still cuts its lineage
     var cur = wordCounts(df, textCol)
       .withColumn("s", spaced(col("word")))
-      .localCheckpoint()
-    // ever-existing symbol vocabulary (grows by one product per merge;
-    // removals are ignored — a stale entry only shortens a batch,
-    // never breaks exactness). batch == 1 never consults it.
-    val symbols = collection.mutable.Set.empty[String]
-    if (batch > 1)
-      symbols ++= cur.select(explode(symsOf(col("s"))).as("c"))
-        .distinct().collect().map(_.getString(0))
-    val (ms, fin) = mergeLoop(cur, symbols, Seq.empty, numMerges, batch, _ => ())
-    BpeModel(ms, fin)
-  }
-
-  /** Shared merge loop: continues from `prior` merges already applied
-    * to `cur`, up to `numMerges` TOTAL; `onMerge` sees the full merge
-    * list after each selected merge (the resume log hook).
-    */
-  private def mergeLoop(cur0: DataFrame,
-                        symbols: collection.mutable.Set[String],
-                        prior: Seq[(Int, String, String, Long)],
-                        numMerges: Int, batch: Int,
-                        onMerge: collection.Seq[(Int, String, String, Long)] => Unit)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var cur = cur0
+      .localCheckpoint(eager = false)
+    // every applied product (removals are ignored — a stale entry only
+    // shortens a batch, never breaks exactness); batch == 1 never
+    // consults it
+    val products = collection.mutable.Set.empty[String]
     val merges = collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    merges ++= prior
-    var i = prior.size
-    var rounds = 0
     var exhausted = false
-    while (i < numMerges && !exhausted) {
-      rounds += 1
-      val want = math.min(batch, numMerges - i)
+    while (merges.size < numMerges && !exhausted) {
+      val want = math.min(batch, numMerges - merges.size)
       val k = if (want == 1) 1 else want * 3
       val top = cur
         .select(col("cnt"), explode(pairCol(col("s"))).as("p"))
@@ -196,7 +180,7 @@ object Bpe {
             while (!stop && j < top.length && nKept < want) {
               val (a, b, _) = top(j)
               val prod = a + b
-              if (used(a) || used(b) || used(prod) || symbols(prod)) stop = true
+              if (used(a) || used(b) || used(prod) || products(prod)) stop = true
               else {
                 kept += top(j); nKept += 1
                 used += a; used += b; used += prod
@@ -219,27 +203,17 @@ object Bpe {
             if (trimmed.nonEmpty) trimmed else top.take(1).toSeq
           }
         selected.foreach { case (a, b, n) =>
-          merges += ((i + 1, a, b, n)); i += 1
-          symbols += (a + b)
-          onMerge(merges)
+          merges += ((merges.size + 1, a, b, n))
+          products += (a + b)
         }
         val applied = selected.foldLeft(col("s")) { case (c, (a, b, _)) =>
           applyMerge(c, a, b)
         }
-        cur = cur.withColumn("s", applied).localCheckpoint()
+        cur = cur.withColumn("s", applied).localCheckpoint(eager = false)
       }
     }
-    lastTrainRounds = rounds
-    (merges.toSeq, cur)
+    BpeModel(merges.toSeq, cur)
   }
-
-  /** Diagnostic only (dev measurement, as in the NOTES_r6 loop profile):
-    * number of pair-count rounds the last [[train]] call ran. merges ÷
-    * rounds is the realized batch length — how far conflict stops cut
-    * the requested `batch` (the exactness rules keep only a pairwise-
-    * disjoint, strictly-count-separated prefix per round).
-    */
-  @volatile var lastTrainRounds: Int = 0
 
   /** (word, toks) dictionary from the trained word table. */
   def wordTokenCounts(model: BpeModel): DataFrame =

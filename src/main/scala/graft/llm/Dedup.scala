@@ -149,10 +149,6 @@ object Dedup {
       bucketPairs(restricted, col(s"a.$deltaCol") || col(s"b.$deltaCol")), tau)
   }
 
-  /** Shared LSH candidate generation: banded minhash buckets (skew-
-    * capped), deduplicated (id_a < id_b) pairs carrying both hashed
-    * token sets for the exact verify stage.
-    */
   /** The banded signature table behind every minhash variant —
     * (id, hs, band_idx, band_hash) + `extraCols` carried through,
     * skew-capped and persisted (self-joins would otherwise recompute

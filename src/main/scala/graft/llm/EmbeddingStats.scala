@@ -36,14 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object EmbeddingStats {
 
-  /** Upper-triangle Gram entries `(i, j, s, n)`, i ≤ j, with
-    * `s = Σ_rows v[i]·v[j]` at 10⁻¹² resolution (exact integer
-    * summation, emitted as DOUBLE). `dim` must match the embedding
-    * length. Headroom: |v[i]·v[j]| ≤ 10⁴ keeps 10¹⁶ rows inside the
-    * long range. Driver state: one (dim·(dim+1)/2)-long vector per
-    * partition — O(partitions) metadata, the PrefixSum/k-means
-    * precedent.
-    */
   /** The fused accumulator behind [[gram]]: upper-triangle cell sums
     * in 10⁻¹² integer units plus the row count.
     */
@@ -85,6 +77,14 @@ object EmbeddingStats {
     (total, rows)
   }
 
+  /** Upper-triangle Gram entries `(i, j, s, n)`, i ≤ j, with
+    * `s = Σ_rows v[i]·v[j]` at 10⁻¹² resolution (exact integer
+    * summation, emitted as DOUBLE). `dim` must match the embedding
+    * length. Headroom: |v[i]·v[j]| ≤ 10⁴ keeps 10¹⁶ rows inside the
+    * long range. Driver state: one (dim·(dim+1)/2)-long vector per
+    * partition — O(partitions) metadata, the PrefixSum/k-means
+    * precedent.
+    */
   def gram(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
     val spark = df.sparkSession
     val (total, rows) = gramTotals(df, vecCol, dim)

@@ -34,9 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** `(query_id, neighbor_id, adist, rank)` — top-k by asymmetric PQ
-    * distance, ties broken by neighbor id, self excluded.
-    */
   /** Codebook training + corpus encoding, shared by the brute ADC
     * scan and the IVF-PQ composition: returns the per-subspace
     * codebooks (driver metadata, m × codes × dim/m doubles) and the
@@ -109,6 +106,9 @@ object Pq {
       acc + element_at(element_at(dt, s + 1),
         element_at(codesCol, s + 1).cast("int") + 1))
 
+  /** `(query_id, neighbor_id, adist, rank)` — top-k by asymmetric PQ
+    * distance, ties broken by neighbor id, self excluded.
+    */
   def pqTopK(df: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int,
              dim: Int = 64, m: Int = 4, codes: Int = 16,

@@ -131,19 +131,6 @@ object QualityClassifier {
       log((cNeg + 1).cast("double") / (totNeg + vv).cast("double")))
       * lit(1e6) + lit(0.5)).cast("long")
 
-  /** Score documents under a trained model:
-    * `(doc_id, n_tokens, oov_tokens, score_micro, pred_pos)` with
-    * `score = prior + Σ_occurrences llr(f)`; features absent from the
-    * model contribute the OOV llr (Laplace mass `1/(tot_c + V)`).
-    * `pred_pos = 1 ⇔ score_micro > 0` — the MAP decision; production
-    * keeps `score_micro` and thresholds it (or Pareto-samples it,
-    * Brown et al. §A) downstream.
-    *
-    * Plan: explode → broadcast-join model → map-side OOV coalesce →
-    * single `groupBy(doc)` of integer partials. The OOV constant and
-    * the prior are 1-row broadcasts derived from the model itself, so
-    * a persisted model table is the only serving state.
-    */
   /** Collapse a trained model + prior into the three serving scalars
     * of [[nbScoreMap]]: `(featureMap, oovMicro, priorMicro)`. Map keys
     * are the feature's STRING form (map literals are string-keyed so
@@ -167,16 +154,6 @@ object QualityClassifier {
     (m, oov, pr.getLong(0))
   }
 
-  /** Serving-side scorer: the model re-enters as a MAP LITERAL folded
-    * per row with `aggregate` — ZERO shuffle over the scored corpus
-    * and stream-legal (each arrival scores itself map-side; corpus
-    * knowledge lives in the literal, never in stream state — the
-    * [[Dsir.scoreWith]] / StreamDedup index-not-state discipline).
-    * Integer arithmetic ⇒ bit-equal to [[nbScore]]
-    * (QualityClassifierSpec pins it). Past the janino literal ceiling
-    * ([[LiteralModelMaxFeatures]]), serve with [[nbScore]]'s broadcast
-    * join instead.
-    */
   /** Measured serving crossover (NOTES_r9, 200k Zipf docs / Heaps
     * vocab 4473, interleaved arms, median of 5): the map-literal
     * scorer wins below ~1k occupied features (0.56–0.91× the join's
@@ -455,6 +432,16 @@ object QualityClassifier {
       .filter(lit(priorMicro) + tokMicro > lit(minScoreMicro))
   }
 
+  /** Serving-side scorer: the model re-enters as a MAP LITERAL folded
+    * per row with `aggregate` — ZERO shuffle over the scored corpus
+    * and stream-legal (each arrival scores itself map-side; corpus
+    * knowledge lives in the literal, never in stream state — the
+    * [[Dsir.scoreWith]] / StreamDedup index-not-state discipline).
+    * Integer arithmetic ⇒ bit-equal to [[nbScore]]
+    * (QualityClassifierSpec pins it). Past the janino literal ceiling
+    * ([[LiteralModelMaxFeatures]]), serve with [[nbScore]]'s broadcast
+    * join instead.
+    */
   def nbScoreMap(docs: DataFrame, idCol: String, textCol: String,
                  model: Map[String, Long], oovMicro: Long, priorMicro: Long,
                  feature: Column => Column = wordFeature): DataFrame = {
@@ -506,6 +493,19 @@ object QualityClassifier {
       .drop("__p")
   }
 
+  /** Score documents under a trained model:
+    * `(doc_id, n_tokens, oov_tokens, score_micro, pred_pos)` with
+    * `score = prior + Σ_occurrences llr(f)`; features absent from the
+    * model contribute the OOV llr (Laplace mass `1/(tot_c + V)`).
+    * `pred_pos = 1 ⇔ score_micro > 0` — the MAP decision; production
+    * keeps `score_micro` and thresholds it (or Pareto-samples it,
+    * Brown et al. §A) downstream.
+    *
+    * Plan: explode → broadcast-join model → map-side OOV coalesce →
+    * single `groupBy(doc)` of integer partials. The OOV constant and
+    * the prior are 1-row broadcasts derived from the model itself, so
+    * a persisted model table is the only serving state.
+    */
   def nbScore(docs: DataFrame, idCol: String, textCol: String,
               model: DataFrame, prior: DataFrame,
               feature: Column => Column = wordFeature): DataFrame = {

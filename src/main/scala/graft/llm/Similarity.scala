@@ -277,16 +277,6 @@ object Similarity {
     Seq.tabulate(groups, bitsPerGroup, dim)(comp)
   }
 
-  /** IVF-style approximate top-k with predefined cells: the corpus is
-    * indexed by `cellCol` (here a given coarse partition — a k-means
-    * assignment in a full pipeline), per-cell centroids are computed
-    * with order-pinned element-wise folds (deterministic ⇒
-    * oracle-expressible), each query probes its `nprobe` nearest
-    * centroids and searches only those cells. The centroid table is
-    * tiny (≤ #cells rows) and broadcasts; per-query work is
-    * O(nprobe · |C| / #cells) — nprobe is the recall/cost knob (cells
-    * are disjoint, so multi-probe candidates need no dedup).
-    */
   /** Order-pinned member-mean centroids of a celled base table
     * ((id, cell, v) → (c_cell, cv, cn)) — the probe centroids of
     * [[ivfTopK]], factored out so [[AnnIndex.buildIvf]] persists the
@@ -303,6 +293,16 @@ object Similarity {
             / col("n")).as("cv"))
       .withColumn("cn", dot(col("cv"), col("cv")))
 
+  /** IVF-style approximate top-k with predefined cells: the corpus is
+    * indexed by `cellCol` (here a given coarse partition — a k-means
+    * assignment in a full pipeline), per-cell centroids are computed
+    * with order-pinned element-wise folds (deterministic ⇒
+    * oracle-expressible), each query probes its `nprobe` nearest
+    * centroids and searches only those cells. The centroid table is
+    * tiny (≤ #cells rows) and broadcasts; per-query work is
+    * O(nprobe · |C| / #cells) — nprobe is the recall/cost knob (cells
+    * are disjoint, so multi-probe candidates need no dedup).
+    */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, cellCol: String,
               queryPred: Column, k: Int, dim: Int, nprobe: Int = 1): DataFrame = {
     val base = withNorm(df.select(col(idCol).as("id"), col(cellCol).as("cell"),

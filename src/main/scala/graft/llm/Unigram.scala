@@ -162,11 +162,6 @@ object Unigram {
     model.pieces.toDF("piece", "cnt", "cost_micro")
   }
 
-  /** Per-document Viterbi token statistics under `model`:
-    * (doc_id, n_words, unigram_tokens, unk_words, sum_cost_micro).
-    * A word the model cannot segment (or longer than `maxWord`)
-    * counts as UNK: zero tokens, zero cost.
-    */
   /** (word, toks, cost, unk, ps) per distinct corpus word under
     * `model` — the word-level Viterbi surface `encodeCounts`
     * aggregates (public for specs).
@@ -189,6 +184,11 @@ object Unigram {
         col("__unk").as("unk"), col("ps"))
   }
 
+  /** Per-document Viterbi token statistics under `model`:
+    * (doc_id, n_words, unigram_tokens, unk_words, sum_cost_micro).
+    * A word the model cannot segment (or longer than `maxWord`)
+    * counts as UNK: zero tokens, zero cost.
+    */
   def encodeCounts(df: DataFrame, idCol: String, textCol: String,
                    model: UnigramModel, maxPiece: Int = 6,
                    maxWord: Int = 16): DataFrame = {

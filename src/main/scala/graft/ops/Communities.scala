@@ -12,20 +12,26 @@ import org.apache.spark.sql.functions._
   * large-star/small-star (connectivity), triangles (cohesion) — LPA
   * gives the mesoscale grouping none of those produce.
   *
-  * Scale shape: per iteration one degree-sized shuffle (neighbor
-  * label counts grouped by (node, label)) and two node-sized
-  * aggregates — the same O(|E|)-per-round profile as PageRank.ranks;
-  * labels are localCheckpoint'ed each round so the plan does not
-  * re-expand across iterations. Synchronous updates (all nodes read
-  * the PREVIOUS round's labels) avoid the asynchronous variant's
-  * partition-order dependence — the property that makes the result
-  * reproducible on a 1000-executor cluster.
+  * Scale shape: round 1 is a closed form. The undirected edge list
+  * is distinct and symmetric, so in round 1 every neighbour's own
+  * label counts exactly once and the rule picks the smallest
+  * neighbour id: one node-sized aggregate over the edges, no join.
+  * Every later round joins the edges to the previous labels (a
+  * degree-sized shuffle) and runs two aggregates, (node, label)
+  * counts and the per-node pick — the same O(|E|)-per-round profile
+  * as PageRank.ranks. Labels are localCheckpoint'ed each round so the
+  * plan does not re-expand across iterations. Synchronous updates
+  * (all nodes read the PREVIOUS round's labels) avoid the
+  * asynchronous variant's partition-order dependence — the property
+  * that makes the result reproducible on a 1000-executor cluster.
   */
 object Communities {
 
   /** @param edges undirected edge list (each row one edge; direction
     *              and duplicates are normalized away).
-    * @return (id, community) for every node appearing in an edge.
+    * @return (id, community) for every node with a non-null
+    *         neighbour; a null endpoint with a non-null neighbour
+    *         gives one row with a null id.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3): DataFrame = {
@@ -41,22 +47,27 @@ object Communities {
     // one action, and each round's label table has exactly one
     // consumer — eager checkpoints only add materialization jobs.
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct()
+      col(dstCol).cast("long").as("dst"))
     val und = e.select(col("src").as("a"), col("dst").as("b"))
       .union(e.select(col("dst").as("a"), col("src").as("b")))
       .distinct()
       .localCheckpoint(eager = false)
-    var labels = und.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-    for (_ <- 1 to iters) {
+    // round 1: each node takes its smallest neighbour id. As under the
+    // join form, a node whose only neighbour is null drops out and a
+    // null endpoint keeps its group.
+    var labels = und.where(col("b").isNotNull)
+      .groupBy(col("a").as("id"))
+      .agg(min(col("b")).as("lbl"))
+      .localCheckpoint(eager = false)
+    for (_ <- 2 to iters) {
       val c = und.join(labels, und("b") === labels("id"))
         .groupBy(und("a").as("n"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
       // (most frequent, then smallest label) as ONE aggregation:
       // min over struct(-cnt, lbl) is the same total order the
-      // count -> max -> min-at-max chain computes, for 1 shuffle
-      // per round instead of 3 (measured ~1.6x on the order-flow
-      // graph; the oracle keeps the equivalent max/min formulation).
+      // max -> join -> min-at-max chain computes, without its second
+      // aggregate and join (measured ~1.6x on the order-flow graph;
+      // the oracle keeps the equivalent max/min formulation).
       labels = c
         .groupBy(col("n").as("id"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))

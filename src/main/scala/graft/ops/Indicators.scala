@@ -203,29 +203,6 @@ object Indicators {
   private val FourLn2 = 2.7725887222397812
   private val TwoLn2M1 = 0.3862943611198906
 
-  /** Range-based realized-volatility estimators per (key, day) from
-    * intraday OHLC candles: Parkinson (high/low range) and
-    * Garman–Klass (range + open/close drift) — 5–7× more
-    * sample-efficient than close-to-close variance, the standard
-    * daily-vol features over the candle layer.
-    *
-    * Per candle, `u = ln(H/L)` and `c = ln(C/O)` are quantized to
-    * integer MILLI-nats immediately (`ln` is not bit-reproducible
-    * cross-engine — LangModel policy; milli keeps Σu² within long
-    * range at any realistic candle count); the daily sums are then
-    * exact integer arithmetic and the estimators one fixed double
-    * expression:
-    * Parkinson² = Σu² / (4·ln2·n), GK² = (½·Σu² − (2ln2−1)·Σc²)/n
-    * (GK clamped at 0: the unbiased estimator can go negative on
-    * drift-dominated days).
-    *
-    * Scale: one candle aggregation (shuffle keyed by (key, hour),
-    * partial-aggregated map-side) + one (key, day) rollup over candle
-    * rows — both exchanges carry candle/day counts, never trades.
-    * Zero-range candles (L = H possible at low liquidity) contribute
-    * u = 0 exactly; candles with a non-positive low are dropped (ln
-    * undefined) and excluded in the oracle identically.
-    */
   /** Kyle (1985) price-impact lambda per instrument: the OLS slope of
     * price change on signed volume, Δp_t = λ·(b_t·q_t) + ε — the
     * canonical "how many price units does a unit of net order flow
@@ -371,6 +348,29 @@ object Indicators {
     */
   private val HalfPi = 1.5707963267948966
 
+  /** Range-based realized-volatility estimators per (key, day) from
+    * intraday OHLC candles: Parkinson (high/low range) and
+    * Garman–Klass (range + open/close drift) — 5–7× more
+    * sample-efficient than close-to-close variance, the standard
+    * daily-vol features over the candle layer.
+    *
+    * Per candle, `u = ln(H/L)` and `c = ln(C/O)` are quantized to
+    * integer MILLI-nats immediately (`ln` is not bit-reproducible
+    * cross-engine — LangModel policy; milli keeps Σu² within long
+    * range at any realistic candle count); the daily sums are then
+    * exact integer arithmetic and the estimators one fixed double
+    * expression:
+    * Parkinson² = Σu² / (4·ln2·n), GK² = (½·Σu² − (2ln2−1)·Σc²)/n
+    * (GK clamped at 0: the unbiased estimator can go negative on
+    * drift-dominated days).
+    *
+    * Scale: one candle aggregation (shuffle keyed by (key, hour),
+    * partial-aggregated map-side) + one (key, day) rollup over candle
+    * rows — both exchanges carry candle/day counts, never trades.
+    * Zero-range candles (L = H possible at low liquidity) contribute
+    * u = 0 exactly; candles with a non-positive low are dropped (ln
+    * undefined) and excluded in the oracle identically.
+    */
   def rangeVolatility(df: DataFrame, keyCol: String, tsCol: String,
                       priceCol: String, candleDur: String = "1 hour"): DataFrame = {
     val candles = df

@@ -126,17 +126,6 @@ object CurationQueries {
     */
   val TokenBudget = 10000L
 
-  /** End-to-end curation: quality filter → exact-dedup representative
-    * → MinHash near-dup CLUSTER representative → rank by quality →
-    * keep the top of the corpus up to a token budget.
-    *
-    * Every stage is the engine's own operator (TextStats quality,
-    * Dedup exact + clusters, PrefixSum budget cut), composed the way
-    * a real pretraining-data pipeline chains them. The budget cumsum
-    * uses the two-phase distributed PrefixSum — a global
-    * `Window.orderBy` would serialize the whole surviving corpus into
-    * one task at 100 TB.
-    */
   /** The curated slice shared by `curation_pipeline` and
     * `training_shards` (r12): the same gate → exact dedup → LSH
     * representatives → quality-desc PrefixSum budget cut;
@@ -237,6 +226,17 @@ object CurationQueries {
         FROM ranked WHERE cum <= $TokenBudget)"""
   }
 
+  /** End-to-end curation: quality filter → exact-dedup representative
+    * → MinHash near-dup CLUSTER representative → rank by quality →
+    * keep the top of the corpus up to a token budget.
+    *
+    * Every stage is the engine's own operator (TextStats quality,
+    * Dedup exact + clusters, PrefixSum budget cut), composed the way
+    * a real pretraining-data pipeline chains them. The budget cumsum
+    * uses the two-phase distributed PrefixSum — a global
+    * `Window.orderBy` would serialize the whole surviving corpus into
+    * one task at 100 TB.
+    */
   val curationPipeline: Q = Q(
     "curation_pipeline",
     (s, dir) => curatedFrame(s, dir, keepText = false),
@@ -285,10 +285,10 @@ object CurationQueries {
 
   /** The full BPE training loop unrolled in SQL (kmeans_cells
     * precedent): per merge i, pair counts over the spaced-symbol word
-    * table, a 1-row (count DESC, a, b) argmax, and a literal replace
-    * of `" a b "` → `" ab "`.
-    */
-  /** `src` / `pfx` / `withClause` exist for COMPOSITION (r12,
+    * table, a 1-row (count DESC, a, b) argmax, and the merge as the
+    * same left fold over the symbols as Bpe's (`list_reduce`).
+    *
+    * `src` / `pfx` / `withClause` exist for COMPOSITION (r12,
     * training_shards): train the replayed BPE on a prior CTE's slice
     * instead of the raw table, with every CTE name prefixed so the
     * body coexists with the curation chain's names (`m1`, `d`, …)

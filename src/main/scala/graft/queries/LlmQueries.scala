@@ -552,17 +552,6 @@ object LlmQueries {
     """)
   )
 
-  /** The corpus-sized-cells IVF-EXACT arm (cells=64 via
-    * deterministic Lloyd, nprobe=4): ann_ivf_topk/_multiprobe keep the
-    * label cells (10 FIXED cells, occupancy ∝ corpus — the labeled
-    * fixed-cell baseline, 3.9× at sf1), while this arm derives cells
-    * from the corpus per the SCALE_DECADES_r6 occupancy law
-    * (cells = 2^round(log₂(corpus/320))), the same knob the
-    * IVF-PQ family measured (fixed 8 cells: 8-key skew LOSES at 60k;
-    * 64 cells restore parallelism AND shrink candidates). Oracle
-    * replays the full Lloyd training, both assignments, member-mean
-    * probe centroids, the nprobe-4 ranking, and the exact cosine.
-    */
   /** Oracle for BOTH ann_ivf_scaled and ann_index_ivf — the indexed
     * probe is bit-equal to the monolithic composition by construction
     * (AnnIndexSpec), so one SQL text anchors both paths.
@@ -595,6 +584,17 @@ object LlmQueries {
       FROM s QUALIFY rank <= 5
     """
 
+  /** The corpus-sized-cells IVF-EXACT arm (cells=64 via
+    * deterministic Lloyd, nprobe=4): ann_ivf_topk/_multiprobe keep the
+    * label cells (10 FIXED cells, occupancy ∝ corpus — the labeled
+    * fixed-cell baseline, 3.9× at sf1), while this arm derives cells
+    * from the corpus per the SCALE_DECADES_r6 occupancy law
+    * (cells = 2^round(log₂(corpus/320))), the same knob the
+    * IVF-PQ family measured (fixed 8 cells: 8-key skew LOSES at 60k;
+    * 64 cells restore parallelism AND shrink candidates). Oracle
+    * replays the full Lloyd training, both assignments, member-mean
+    * probe centroids, the nprobe-4 ranking, and the exact cosine.
+    */
   val annIvfScaledQ: Q = Q(
     "ann_ivf_scaled",
     (s, dir) => {
@@ -610,15 +610,6 @@ object LlmQueries {
     Some(annIvfScaledSql)
   )
 
-  /** The same IVF search through the PERSISTED index path
-    * (AnnIndex.buildIvf / ivfTopK): Lloyd cells and member-mean
-    * centroids built once as index tables, queries probe them —
-    * bit-equal to ann_ivf_scaled by construction (AnnIndexSpec pins
-    * it, including through a parquet round-trip), so the identical
-    * oracle SQL anchors this path independently. The split matters
-    * MOST here: the monolithic composition repeats the Lloyd
-    * training every query batch (NOTES_r8 / SCALE_DECADES_r8 record the curve).
-    */
   /** SemDeDup over the PERSISTED IVF index (SemDedup
     * .semanticDedupIndexed): Lloyd cells + quantizer read from the
     * index tables instead of retrained per run — the nightly-dedup
@@ -636,6 +627,15 @@ object LlmQueries {
     Some(semanticDedupSql(32))
   )
 
+  /** The same IVF search through the PERSISTED index path
+    * (AnnIndex.buildIvf / ivfTopK): Lloyd cells and member-mean
+    * centroids built once as index tables, queries probe them —
+    * bit-equal to ann_ivf_scaled by construction (AnnIndexSpec pins
+    * it, including through a parquet round-trip), so the identical
+    * oracle SQL anchors this path independently. The split matters
+    * MOST here: the monolithic composition repeats the Lloyd
+    * training every query batch (NOTES_r8 / SCALE_DECADES_r8 record the curve).
+    */
   val annIndexIvfQ: Q = Q(
     "ann_index_ivf",
     (s, dir) => {
@@ -960,12 +960,6 @@ object LlmQueries {
           FROM n CROSS JOIN $cents c) t
         QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) = 1)"""
 
-  /** Deterministic Lloyd k-means (k=8, one update): seeds = 8 smallest
-    * ids, one assignment + order-pinned centroid update (empty cells
-    * keep their seed), final assignment under the updated centroids.
-    * Fully unrolled in the oracle — every distance is the same
-    * sequential fold on both engines.
-    */
   /** The kmeans_cells oracle chain (`k` cells, one Lloyd update),
     * ending at `a2` = final corpus assignment under the updated
     * centroids `c1` — shared with both IVF-PQ arms.
@@ -988,6 +982,12 @@ object LlmQueries {
              FROM c0 p LEFT JOIN m1 m USING (cell)),
       ${kmAssignCte("a2", "c1")}"""
 
+  /** Deterministic Lloyd k-means (k=8, one update): seeds = 8 smallest
+    * ids, one assignment + order-pinned centroid update (empty cells
+    * keep their seed), final assignment under the updated centroids.
+    * Fully unrolled in the oracle — every distance is the same
+    * sequential fold on both engines.
+    */
   val kmeansCellsQ: Q = Q(
     "kmeans_cells",
     (s, dir) => Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id",
@@ -997,13 +997,6 @@ object LlmQueries {
     """)
   )
 
-  /** IVF-PQ composition (FAISS IVF8,PQ4x4 shape): coarse cells gate
-    * candidates via an equi-join on the probed cell ids (nprobe=2 of
-    * 8 — per-query work is corpus·nprobe/cells, and `cells` is the
-    * corpus-sized knob, SCALE_DECADES_r6), PQ asymmetric distance
-    * scores them. The oracle replays all five Lloyd trainings, both
-    * assignments, the probe ranking, and the ADC scan.
-    */
   /** JL-prefilter + exact re-rank (the FAISS/ScaNN closing pattern):
     * shortlist 32 by 16-d projected L2, exact 64-d cosine on the
     * shortlist only — ranking quality degrades only through shortlist
@@ -1092,6 +1085,13 @@ object LlmQueries {
       FROM pair QUALIFY rank <= 5
     """
 
+  /** IVF-PQ composition (FAISS IVF8,PQ4x4 shape): coarse cells gate
+    * candidates via an equi-join on the probed cell ids (nprobe=2 of
+    * 8 — per-query work is corpus·nprobe/cells, and `cells` is the
+    * corpus-sized knob, SCALE_DECADES_r6), PQ asymmetric distance
+    * scores them. The oracle replays all five Lloyd trainings, both
+    * assignments, the probe ranking, and the ADC scan.
+    */
   val annIvfPqQ: Q = Q(
     "ann_ivfpq_topk",
     (s, dir) => Pq.ivfPqTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
@@ -1954,15 +1954,6 @@ object LlmQueries {
     """)
   )
 
-  /** ann_rp_rerank's scale form — the full FAISS-style funnel (LSH
-    * buckets generate candidates, 16-d JL projection picks the
-    * shortlist, exact cosine scores only the shortlist). The labeled
-    * baseline `ann_rp_rerank` keeps the all-pairs prefilter next to
-    * this arm (22.8× at sf1 — candidate space is queries×corpus even
-    * though each candidate is 4× cheaper); here candidate volume is
-    * bucket-bounded, so the whole funnel inherits the LSH occupancy
-    * law. Returned scores remain EXACT in both forms.
-    */
   /** Binary-quantization ANN (Similarity.hammingRerankTopK scaladoc):
     * 2×32 sign bits per vector (8-byte index, 32× smaller than the
     * floats), brute XOR+popcount Hamming prefilter to a shortlist of
@@ -2075,6 +2066,15 @@ object LlmQueries {
     """)
   )
 
+  /** ann_rp_rerank's scale form — the full FAISS-style funnel (LSH
+    * buckets generate candidates, 16-d JL projection picks the
+    * shortlist, exact cosine scores only the shortlist). The labeled
+    * baseline `ann_rp_rerank` keeps the all-pairs prefilter next to
+    * this arm (22.8× at sf1 — candidate space is queries×corpus even
+    * though each candidate is 4× cheaper); here candidate volume is
+    * bucket-bounded, so the whole funnel inherits the LSH occupancy
+    * law. Returned scores remain EXACT in both forms.
+    */
   val annRpRerankScaledQ: Q = Q(
     "ann_rp_rerank_scaled",
     (s, dir) => Similarity.rpRerankBucketedTopK(Tables.embeddings(s, dir),

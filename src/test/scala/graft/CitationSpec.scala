@@ -8,7 +8,8 @@ import ReachSpec.sources
 
 /** A scaladoc or comment in `src/main` that cites a spec, a
   * `graft.…` type or a `[[link]]` must cite one that exists: a deleted
-  * spec, main or member leaves a citation nobody can follow.
+  * spec, main or member leaves a citation nobody can follow. And a
+  * scaladoc must sit on the member it describes.
   */
 class CitationSpec extends AnyFunSuite {
 
@@ -76,5 +77,17 @@ class CitationSpec extends AnyFunSuite {
       }
     }
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("no scaladoc in src/main is stacked on another") {
+    // a `/**` block that closes right above another one attaches to
+    // nothing and never renders
+    val bad = main.flatMap { case (path, text) =>
+      text.linesIterator.sliding(2).zipWithIndex.collect {
+        case (Seq(a, b), i) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+          s"$path:${i + 1}"
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\nscaladoc block closed right above another:\n", "\n", ""))
   }
 }

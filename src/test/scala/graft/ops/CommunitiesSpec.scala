@@ -57,4 +57,32 @@ class CommunitiesSpec extends SparkSpec {
     assert(lbls.subsetOf(ids), "labels must be node ids")
     assert(out.count() === ids.size.toLong, "one row per node")
   }
+
+  test("equals the round-1-by-join reference for 1 to 4 rounds") {
+    import spark.implicits._
+    val o = Tables.orders(spark, sf("sf0.001"))
+      .select(col("o_orderkey"), (col("o_custkey") * 2).as("src"))
+    val l = Tables.lineitem(spark, sf("sf0.001"))
+      .select(col("l_orderkey"), (col("l_suppkey") * 2 + 1).as("dst"))
+    val orderFlow = o.join(l, col("o_orderkey") === col("l_orderkey"))
+      .select(col("src").as("s"), col("dst").as("d"))
+    def g(es: (Option[Long], Option[Long])*) = es.toDF("s", "d")
+    val graphs = Seq(
+      "order flow" -> orderFlow,
+      "two triangles" -> g(Some(1L) -> Some(2L), Some(2L) -> Some(3L), Some(1L) -> Some(3L),
+        Some(4L) -> Some(5L), Some(5L) -> Some(6L), Some(4L) -> Some(6L), Some(3L) -> Some(4L)),
+      "self-loop" -> g(Some(1L) -> Some(1L), Some(1L) -> Some(2L), Some(3L) -> Some(3L)),
+      "duplicate and reversed" -> g(Some(1L) -> Some(2L), Some(2L) -> Some(1L),
+        Some(1L) -> Some(2L), Some(2L) -> Some(3L), Some(3L) -> Some(2L), Some(4L) -> Some(3L)),
+      "null endpoints" -> g(Some(1L) -> None, None -> Some(2L), Some(2L) -> Some(3L),
+        None -> None, Some(4L) -> None, Some(3L) -> Some(1L)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq.sortBy(_.toString)
+    for ((name, edges) <- graphs; iters <- 1 to 4) {
+      val got = rows(Communities.labelPropagation(edges, "s", "d", iters))
+      val want = rows(LabelPropagationReference.labelPropagation(edges, "s", "d", iters))
+      assert(got === want, s"$name, $iters rounds")
+      assert(got.nonEmpty, s"$name, $iters rounds")
+    }
+  }
 }

@@ -42,17 +42,11 @@ class DataQualitySpec extends SparkSpec {
 
   test("adding row-local checks adds aggregate expressions, not Spark jobs") {
     import spark.implicits._
-    val sc = spark.sparkContext
     val df = Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v")
-    def jobsFor(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try { body; sc.statusTracker.getJobIdsForGroup(group).length }
-      finally sc.clearJobGroup()
-    }
-    val one = jobsFor("dq-one") {
+    val one = jobsOf("dq-one") {
       DataQuality.run(df, Seq(Completeness("id")))
     }
-    val more = jobsFor("dq-more") {
+    val more = jobsOf("dq-more") {
       DataQuality.run(df, Seq(Completeness("id"), Completeness("v"),
         InRange("v", 0.0, 10.0), InRange("id", 0.0, 99.0)))
     }
@@ -60,7 +54,7 @@ class DataQualitySpec extends SparkSpec {
       s"row-local checks must fuse into the same single pass ($one vs $more jobs)")
     // uniqueness costs one extra shuffle STAGE (two-phase distinct),
     // but still no second scan — job count grows by at most 1
-    val uniq = jobsFor("dq-uniq") {
+    val uniq = jobsOf("dq-uniq") {
       DataQuality.run(df, Seq(Completeness("id"), Uniqueness(Seq("id"))))
     }
     assert(uniq <= one + 1, s"uniqueness added ${uniq - one} stages")
